@@ -1,82 +1,83 @@
-"""Persisted IVF-PQ ANN index (round 7): train once, encode + append
-forever, search without retraining — the SERVING shape of
+"""Persisted IVF-PQ ANN index: train once, encode + append forever,
+search without retraining — the SERVING shape of
 ``similarity.ivf_pq_topk`` (which retrains its models per call; right
 for one-shot analytics, wrong for an index that outlives the batch that
 built it). Mirrors ``dedup_index.py``: tiny pinned models in a meta
 subdir, encoded rows in partitioned parquet, loud guards on drift and
 redelivery.
 
-Index layout at ``path``:
+Index layout at ``path`` (``layout_version`` 1 — the only layout this
+module reads; ``ann_index_meta`` refuses a meta without the stamp, and
+such an index is rebuilt from source — the ``dedup_index`` "Layout
+contract"):
   * data rows, ``partitionBy("cell")`` parquet:
       (_id, _codes array<int>, _batch string[, payload cols...], cell)
     — the SCAN tier: n_subspaces small ints per vector (8 B at 8×32 vs
     512 B raw — the 64× RAM/IO reduction that lets a billion-vector
-    index fit a cluster's memory). PAYLOAD columns (r15, VERDICT r14
-    #1/#2): caller-named metadata columns (``doc_id``, ``lang``,
-    license …) stored alongside the codes, pinned in meta
-    (``payload_cols``) and carried through append/compact/rebuild —
-    search returns them on every hit (so grouped retrieval needs no
-    per-call doc_map scan) and ``where=`` predicates evaluate against
-    them as PUSHED parquet filters on this slim tier (so a broad
-    attribute filter never needs a caller-materialized corpus-sized
-    allowed-id frame).
-  * ``_graft_vectors/`` raw (id, vec) parquet — the REFINE tier,
-    ``partitionBy("_vbucket")`` where _vbucket = pmod(xxhash64(_id),
-    vec_buckets) and rows are id-sorted within files (r9, VERDICT r8
-    #1). On a big index (cost-based ``prune="auto"``, r10) the
-    shortlist re-rank materializes its bounded candidate set once
-    (``localCheckpoint``) and reads this tier through a PRUNED scan —
-    a ``_vbucket IN (…)`` partition filter always, plus an
-    ``_id IN (…)`` pushed parquet predicate when the candidate count
-    is point-lookup small (≤ ``_MAX_PUSHED_IDS``; id-sorted row
-    groups give min/max skipping) — instead of streaming every raw
-    vector through a broadcast join (the pre-r9 shape: a broadcast
-    hash join probes the FULL tier, ~512 GB scanned per search batch
-    at 10⁹ vectors). Below ``_PRUNE_MIN_ROWS`` the single-job
-    streaming join is simply faster and "auto" keeps it. This is the
-    standard two-tier layout: codes hot, raw vectors cold — and the
-    cold tier is point-readable, not scan-only.
-  * ``_graft_meta/`` — one JSON row: dims/params AND the trained models
-    (IVF centroids n_cells×dim + PQ codebooks
-    n_subspaces×n_centroids×sub ≈ a few thousand doubles — broadcast as
-    literal expressions at search time, like ivf_pq_topk).
-    Appends NEVER retrain: new vectors are encoded with the pinned
-    models, so old codes stay comparable to new ones (retraining would
-    silently invalidate every stored code; the drift guard makes that a
-    rebuild, not an append). Meta is written LAST in the build (VERDICT
-    r7 #5): a crash mid-build leaves data-without-meta, which search
-    rejects loudly ("no index") instead of serving silently-empty
-    results, and a retry build refuses the leftovers instead of
-    append-doubling them.
-  * ``_graft_batches/`` — append markers; duplicate batch_id rejected.
-    Markers record ``n_rows`` (r9) so the auto-sized shortlist can read
-    the corpus size as metadata (sum of markers) instead of counting
-    the codes tier.
-  * ``_graft_tombstones/`` + ``_graft_dead/`` (r12, VERDICT r11 #1) —
-    the retraction sidecars: ``ann_index_delete`` on an r12 index
-    APPENDS its request as (``_id``, ``del_seq``) tombstones instead of
-    rewriting ``cell=/_vbucket=`` directories (the r9-r11 shape paid a
-    dir-proportional rewrite — ~n/4096 vectors per directory at 10⁹
-    scale for a 25-row GDPR request). Every read path anti-joins the
-    tombstones out, seq-scoped against the batch markers exactly like
-    ``dedup_index._apply_tombstones`` (a row is dead iff its batch was
-    marked BEFORE the delete ran — a re-appended id lives while its
-    retracted history stays dead). ``_graft_dead`` holds one tiny JSON
-    tally per delete so live-size accounting (auto shortlist/prune)
-    stays a metadata read; ``ann_index_compact`` folds tombstones into
-    the affected directories (the old localized rewrite, demoted to
-    maintenance) and recomputes marker ``n_rows``.
-  * ``residual=True`` (VERDICT r7 #6) trains the PQ codebooks on
-    per-cell residuals (vec − centroid[cell]) — classic FAISS IVFPQ,
-    finer quantization when cells are tight. The flag is pinned in meta
-    like every other model parameter: appends and searches derive the
-    encode/LUT shape from it, so an index can never mix residual and
-    global codes. MEASURED guidance (probe_residual.py, r9): on a
-    CLUSTERED corpus (50 tight clusters, 20k×64) residual re-rank
-    recall is 0.624 vs 0.466 global (+34% relative) — use it when the
-    corpus has cluster structure; on a near-uniform corpus it is
-    parity-to-slightly-worse (0.780 vs 0.808 at sf0.1; 0.48 vs 0.494 on
-    the synthetic control), which is why the default stays False.
+    index fit a cluster's memory). PAYLOAD columns: caller-named
+    metadata columns (``doc_id``, ``lang``, license …) stored alongside
+    the codes, pinned in meta (``payload_cols``) and carried through
+    append/compact/rebuild — search returns them on every hit (so
+    grouped retrieval needs no per-call doc_map scan) and ``where=``
+    predicates evaluate against them as PUSHED parquet filters on this
+    slim tier (so a broad attribute filter never needs a
+    caller-materialized corpus-sized allowed-id frame).
+  * ``_graft_vectors/`` raw (_id, _v, _batch) parquet — the REFINE
+    tier, ``partitionBy("_vbucket")`` where _vbucket = pmod(xxhash64(_id),
+    vec_buckets) and rows are id-sorted within files. Per-row ``_batch``
+    lineage lets seq-scoped tombstones pair refine rows. On a big index
+    (cost-based ``prune="auto"``) the shortlist re-rank materializes
+    its bounded candidate set once (``localCheckpoint``) and reads this
+    tier through a PRUNED scan — a ``_vbucket IN (…)`` partition filter
+    always, plus an ``_id IN (…)`` pushed parquet predicate when the
+    candidate count is point-lookup small (≤ ``_MAX_PUSHED_IDS``;
+    id-sorted row groups give min/max skipping) — instead of streaming
+    every raw vector through a broadcast join (~512 GB scanned per
+    search batch at 10⁹ vectors). Below ``_PRUNE_MIN_ROWS`` the
+    single-job streaming join is simply faster and "auto" keeps it.
+    This is the standard two-tier layout: codes hot, raw vectors cold —
+    and the cold tier is point-readable, not scan-only.
+  * ``_graft_meta/`` — one JSON row: ``layout_version``, dims/params,
+    ``vec_buckets``, ``payload_cols`` AND the trained models (IVF
+    centroids n_cells×dim + PQ codebooks n_subspaces×n_centroids×sub ≈
+    a few thousand doubles — broadcast as literal expressions at search
+    time, like ivf_pq_topk). Appends NEVER retrain: new vectors are
+    encoded with the pinned models, so old codes stay comparable to new
+    ones (retraining would silently invalidate every stored code; the
+    drift guard makes that a rebuild, not an append). Meta is written
+    LAST in the build: a crash mid-build leaves data-without-meta,
+    which search rejects loudly ("no index") instead of serving
+    silently-empty results, and a retry build refuses the leftovers
+    instead of append-doubling them.
+  * ``_graft_batches/`` — append markers (batch_id, seq, n_rows);
+    duplicate batch_id rejected. ``n_rows`` lets the auto-sized
+    shortlist read the corpus size as metadata (sum of markers) instead
+    of counting the codes tier.
+  * ``_graft_tombstones/`` + ``_graft_dead/`` — the retraction
+    sidecars: ``ann_index_delete`` APPENDS its request as (``_id``,
+    ``del_seq``) tombstones instead of rewriting ``cell=/_vbucket=``
+    directories (a dir-proportional rewrite would pay ~n/4096 vectors
+    per directory at 10⁹ scale for a 25-row GDPR request). Every read
+    path anti-joins the tombstones out, seq-scoped against the batch
+    markers (``dedup_index._tombstone_join``: a row is dead iff its
+    batch was marked BEFORE the delete ran — a re-appended id lives
+    while its retracted history stays dead). ``_graft_dead`` holds one
+    tiny JSON tally per delete so live-size accounting (auto
+    shortlist/prune) stays a metadata read; ``ann_index_compact`` folds
+    tombstones into the affected directories and recomputes marker
+    ``n_rows``.
+  * ``residual=True`` trains the PQ codebooks on per-cell residuals
+    (vec − centroid[cell]) — classic FAISS IVFPQ, finer quantization
+    when cells are tight. The flag is pinned in meta like every other
+    model parameter: appends and searches derive the encode/LUT shape
+    from it, so an index can never mix residual and global codes.
+    MEASURED guidance (the r9 residual probe, ``probe_residual.py`` —
+    no longer in the tree; see git history): on a CLUSTERED corpus (50 tight clusters, 20k×64)
+    residual re-rank recall is 0.624 vs 0.466 global (+34% relative) —
+    use it when the corpus has cluster structure; on a near-uniform
+    corpus it is parity-to-slightly-worse (0.780 vs 0.808 at sf0.1;
+    0.48 vs 0.494 on the synthetic control), which is why the default
+    stays False.
 
 Scale notes: search is one cell equi-join (codes ⋈ exploded query
 probes) + one window + one broadcast refine join — no corpus crossJoin,
@@ -94,6 +95,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    LAYOUT_VERSION,
+    _check_layout,
+    _dir_swap,
+    _marker_rows,
+    _marker_seq_join,
+    _recover_partition_dirs,
+    _require_local_path,
+    _resume_skips_append,
+    _retraction_forms,
+    _tombstone_join,
+)
 from etl_apache_kafka_python_doker_aws_spark.functions.similarity import (
     _BCAST_MAX_CELLS,
     _kmeans_cells,
@@ -122,8 +135,9 @@ _DEAD_FOLD_FILES = 32
 # at dim 64 — directory-sized, not straggler-sized), clamped to
 # [64, 4096] so tiny corpora keep cheap listings and huge ones bound
 # the partition count. buckets-hit ≈ min(n_cand, vec_buckets) keeps
-# directory pruning effective as the corpus grows. Existing indexes
-# migrate via ann_index_rebuild(vec_buckets="auto").
+# directory pruning effective as the corpus grows. An index that
+# outgrew its build-time count re-derives it via
+# ann_index_rebuild(vec_buckets="auto").
 _AUTO_VB_ROWS_PER_BUCKET = 50_000
 _AUTO_VB_MIN = 64
 _AUTO_VB_MAX = 4096
@@ -133,6 +147,15 @@ def _auto_vec_buckets(n_rows: int) -> int:
     return max(
         _AUTO_VB_MIN, min(_AUTO_VB_MAX, int(n_rows) // _AUTO_VB_ROWS_PER_BUCKET)
     )
+
+
+def _check_vec_buckets(vec_buckets, who: str) -> None:
+    if vec_buckets != "auto" and (
+        not isinstance(vec_buckets, int) or vec_buckets < 1
+    ):
+        raise ValueError(
+            f"{who}: vec_buckets {vec_buckets!r} must be 'auto' or an int >= 1"
+        )
 
 # Upper bound on the candidate ids ann_index_search will collect
 # driver-side and push into the refine scan as an ``_id IN (…)``
@@ -179,7 +202,8 @@ _PRUNE_MIN_ROWS = 4_000_000
 
 
 def ann_index_meta(spark: SparkSession, path: str) -> dict | None:
-    """Read params + trained models, or None if no index at ``path``.
+    """Read params + trained models, or None if no index at ``path``;
+    raises on a meta without the current ``layout_version``.
     Driver-side Hadoop-FS read (r15, ``util.sidecar_json_rows``): the
     meta dir is ONE small JSON row, and the old ``spark.read.json +
     first()`` paid two Spark jobs (schema inference + fetch) on every
@@ -193,29 +217,17 @@ def ann_index_meta(spark: SparkSession, path: str) -> dict | None:
     row = rows[0] if rows else None
     if row is None:
         return None
+    _check_layout(row, f"ANN index at {path}")
     return {
         "dim": int(row.dim),
         "n_cells": int(row.n_cells),
         "n_subspaces": int(row.n_subspaces),
         "n_centroids": int(row.n_centroids),
         "seed": int(row.seed),
-        # pre-r8 indexes lack the flag; they were built global-codebook
-        "residual": bool(row.residual) if "residual" in row.__fields__ else False,
-        # pre-r9 indexes wrote the refine tier unpartitioned; None keeps
-        # their search on the (unpruned) broadcast-join fallback
-        "vec_buckets": (
-            int(row.vec_buckets) if "vec_buckets" in row.__fields__ else None
-        ),
-        # r12: refine-tier rows carry per-row ``_batch`` lineage, the
-        # prerequisite for seq-scoped tombstone retraction; pre-r12
-        # indexes lack it and keep the physical dir-rewrite delete
-        # (ann_index_rebuild is the migration path)
-        "vec_batch": (
-            bool(row.vec_batch) if "vec_batch" in row.__fields__ else False
-        ),
-        # r15: caller-named metadata columns stored in the codes tier;
-        # pre-r15 indexes (and payload-less builds) read as [] — every
-        # consumer treats [] as "no payload machinery"
+        "residual": bool(row.residual),
+        "vec_buckets": int(row.vec_buckets),
+        # payload-less builds omit the field — read as [] ("no payload
+        # machinery" to every consumer)
         "payload_cols": (
             list(row.payload_cols)
             if "payload_cols" in row.__fields__ and row.payload_cols
@@ -238,52 +250,23 @@ def _fs_nonempty(spark: SparkSession, path: str) -> bool:
 
 
 def _ann_marker_rows(spark: SparkSession, path: str) -> list:
-    """Raw batch-marker rows in append order (empty for a fresh index).
-    One tiny JSON row per batch — metadata-cheap at any index size.
-    Absence is an explicit existence check; a READ error on an existing
-    marker dir propagates (review r12). Driver-side FS read (r15,
-    ``util.sidecar_json_rows``) — no Spark job per marker read."""
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_rows
-
-    rows = sidecar_json_rows(spark, f"{path}/{_BATCH_DIR}")
-    if rows is None:
-        return []
-    return sorted(rows, key=lambda r: r.seq)
+    """Raw batch-marker rows in append order (empty for a fresh index)
+    — the band tier's ``_marker_rows`` reader on this tier's marker
+    dir (same absent-vs-unreadable rule, no Spark job)."""
+    return _marker_rows(spark, f"{path}/{_BATCH_DIR}")
 
 
 def ann_index_batches(spark: SparkSession, path: str) -> list[str]:
     return [r.batch_id for r in _ann_marker_rows(spark, path)]
 
 
-def _index_size_from_markers(markers: list) -> int | None:
+def _index_size_from_markers(markers: list) -> int:
     """PHYSICAL corpus size as a METADATA read: sum of the per-batch
-    ``n_rows`` marker field (r9). None when any marker predates the
-    field (pre-r9 append) — the caller falls back to counting the codes
-    tier. Tombstoned-but-uncompacted rows are still counted here — this
-    is the SCAN-COST statistic (what a streaming read pays); use
-    ``_ann_live_size`` for the serving (recall-sizing) size."""
-    if not markers or any(
-        "n_rows" not in r.__fields__ or r.n_rows is None for r in markers
-    ):
-        return None
+    ``n_rows`` marker field. Tombstoned-but-uncompacted rows are still
+    counted here — this is the SCAN-COST statistic (what a streaming
+    read pays); use ``_ann_live_size`` for the serving (recall-sizing)
+    size."""
     return sum(int(r.n_rows) for r in markers)
-
-
-def _drop_dead_tally(path: str) -> None:
-    """Remove the dead-tally dir AND its fold-swap twins (review r13,
-    the r11 'drop ALL twins upfront' rule): a fold killed before/mid
-    `_swap_in` leaves a complete `.staging`/`.old` twin holding the
-    PRE-compact tally; dropping only the live dir would let the next
-    write entry point's ``_ann_recover`` rename that stale twin back in,
-    re-counting rows compaction already removed — live size understated
-    forever-until-next-compact (auto shortlist shrinks → recall loss,
-    spurious auto-compacts, false 'would EMPTY' refusals)."""
-    import os
-    import shutil
-
-    base = os.path.join(path, _DEAD_DIR)
-    for d in (base, base + ".staging", base + ".old"):
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _tally_fs(spark: SparkSession, dead_dir: str):
@@ -443,23 +426,19 @@ def _ann_dead_total(spark: SparkSession, path: str) -> int:
 
 
 def _ann_live_size(
-    spark: SparkSession, path: str, meta: dict, markers: list | None = None
-) -> int | None:
+    spark: SparkSession, path: str, markers: list | None = None
+) -> int:
     """Serving-size statistic for the auto SHORTLIST sizing (VERDICT
     r11 #3): physical marker sum minus the tombstoned-dead tally —
     recall targets scale with the LIVE corpus. Not the prune statistic:
     scan cost is physical (tombstones shrink no bytes until compaction),
     so ``prune="auto"`` reads ``_index_size_from_markers`` instead
-    (review r12). None when markers predate ``n_rows``. Pass
-    already-collected ``markers`` to skip a duplicate driver-side read."""
+    (review r12). Pass already-collected ``markers`` to skip a
+    duplicate driver-side read."""
     n = _index_size_from_markers(
         markers if markers is not None else _ann_marker_rows(spark, path)
     )
-    if n is None:
-        return None
-    if meta.get("vec_batch"):
-        n -= _ann_dead_total(spark, path)
-    return max(n, 0)
+    return max(n - _ann_dead_total(spark, path), 0)
 
 
 def _ann_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -474,71 +453,41 @@ def _ann_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     return sidecar_read(spark, f"{path}/{_TOMB_DIR}", "parquet")
 
 
-def _with_seq(df: DataFrame, markers: list, how: str) -> DataFrame:
-    """Attach each row's batch SEQUENCE — the shared
-    ``dedup_index._marker_seq_join`` broadcast join, never a literal
-    ``create_map`` (ADVICE r11 #2 applied from day one on this tier: a
-    year of 15-min crawl snapshots is ~35k markers, and a 70k-element
-    literal map in every serving plan is driver-side bloat).
-    ``how="left"`` keeps unmarked (crashed-append) rows with a NULL seq
-    — no tombstone can name them, so the READ paths serve them until
-    ``ann_index_compact`` sweeps them; ``how="inner"`` restricts to
-    marked rows (the delete-accounting / compaction-keep shape)."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        _marker_seq_join,
-    )
-
-    return _marker_seq_join(df, markers, how)
-
-
 def _ann_apply_tombstones(
     df: DataFrame, tomb: DataFrame | None, markers: list
 ) -> DataFrame:
-    """Filter an index frame (codes or refine tier) to its LIVE rows: a
-    row is dead iff some tombstone names its ``_id`` AND the row's batch
-    was already marked when the delete ran (``seq < del_seq``) — the
-    seq scoping that lets a RE-APPENDED id live while its retracted
-    history stays dead (same rule as ``dedup_index._apply_tombstones``).
-    The anti-join's tombstone side is delete-request-sized; the index
-    itself never shuffles for retraction. Unmarked (crashed-append)
-    rows are KEPT — this is the read-path filter; compaction is where
-    they are swept (``_ann_live_rows``/``_ann_dead_rows``)."""
+    """Filter an index frame (codes or refine tier) to its LIVE rows
+    under the seq-scoped tombstone rule (``_tombstone_join``). The
+    batch→seq translation is the shared broadcast ``_marker_seq_join``,
+    never a literal ``create_map`` (a year of 15-min crawl snapshots is
+    ~35k markers). The anti-join's tombstone side is delete-request-
+    sized; the index itself never shuffles for retraction. Unmarked
+    (crashed-append) rows are KEPT — this is the read-path filter;
+    compaction is where they are swept (``_ann_live_rows``/
+    ``_ann_dead_rows``)."""
     if tomb is None:
         return df
-    t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
-    return (
-        _with_seq(df, markers, "left")
-        .join(
-            t,
-            (F.col("_id") == F.col("_t_id"))
-            & (F.col("_seq") < F.col("del_seq")),
-            "left_anti",
-        )
-        .drop("_seq")
+    return _tombstone_join(
+        _marker_seq_join(df, markers, "left"), tomb, "left_anti"
     )
 
 
 def _ann_live_rows(
     df: DataFrame, tomb: DataFrame | None, markers: list
 ) -> DataFrame:
-    """The COMPACTION/REBUILD keep set: marked AND not seq-scoped-
-    tombstoned. Unlike ``_ann_apply_tombstones`` (the read-path filter,
-    which keeps unmarked rows so a crashed append degrades to serving
-    its orphans rather than losing data mid-recovery), this DROPS
-    unmarked crash-append orphans — compact/rebuild are where they are
-    swept (the table-tier rule, review r12: orphans have no marker seq,
-    so no tombstone can ever name them; without the sweep a GDPR
-    request against them had no supported removal path)."""
-    out = _with_seq(df, markers, "inner")
-    if tomb is not None:
-        t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
-        out = out.join(
-            t,
-            (F.col("_id") == F.col("_t_id"))
-            & (F.col("_seq") < F.col("del_seq")),
-            "left_anti",
-        )
-    return out.drop("_seq")
+    """The COMPACTION/REBUILD keep set (and delete's accounting set):
+    marked AND not seq-scoped-tombstoned. Unlike
+    ``_ann_apply_tombstones`` (the read-path filter, which keeps
+    unmarked rows so a crashed append degrades to serving its orphans
+    rather than losing data mid-recovery), this DROPS unmarked
+    crash-append orphans — compact/rebuild are where they are swept
+    (the table-tier rule, review r12: orphans have no marker seq, so no
+    tombstone can ever name them; without the sweep a GDPR request
+    against them had no supported removal path)."""
+    out = _marker_seq_join(df, markers, "inner")
+    if tomb is None:
+        return out.drop("_seq")
+    return _tombstone_join(out, tomb, "left_anti")
 
 
 def _ann_dead_rows(
@@ -548,51 +497,34 @@ def _ann_dead_rows(
     PLUS unmarked crash-append orphans (disjoint sets — a NULL seq
     never satisfies ``_seq < del_seq``). Feeds compaction's affected-
     directory histograms."""
-    seqd = _with_seq(df, markers, "left")
+    seqd = _marker_seq_join(df, markers, "left")
     unmarked = seqd.filter(F.col("_seq").isNull()).drop("_seq")
     if tomb is None:
         return unmarked
-    t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
-    dead = seqd.join(
-        t,
-        (F.col("_id") == F.col("_t_id")) & (F.col("_seq") < F.col("del_seq")),
-        "left_semi",
-    ).drop("_seq")
-    return dead.unionByName(unmarked)
+    return _tombstone_join(seqd, tomb, "left_semi").unionByName(unmarked)
 
 
 def _ann_recover(path: str) -> None:
     """Heal every crash window the WRITE ops can leave, run by each
     write entry point (append/delete/compact/rebuild): half-swapped
-    partition directories from a compact or legacy delete
-    (``_recover_partition_dirs``), a pre-r9 whole-dir delete swap and
-    compact's marker-dir swap (``plans.merge._recover``). No-op on a
-    remote-scheme path (the swap machinery is local-FS; remote indexes
-    fold tombstones via ``ann_index_rebuild``). Reads stay correct
-    through every window without healing: tombstones pending during a
-    partially-folded compact anti-join rows that are already physically
-    gone (a no-op), and a missing marker dir only degrades the auto
-    size statistic to a codes count."""
+    partition directories from a compact (``_recover_partition_dirs``)
+    and compact's marker-dir swap (``plans.merge._recover``). No-op on
+    a remote-scheme path (the swap machinery is local-FS; remote
+    indexes fold tombstones via ``ann_index_rebuild``). Reads stay
+    correct through every window without healing: tombstones pending
+    during a partially-folded compact anti-join rows that are already
+    physically gone (a no-op), and a missing marker dir only degrades
+    the auto size statistic (it reads as 0 rows, so the auto shortlist
+    falls to its floor) until the next write entry point heals it."""
     from urllib.parse import urlparse
 
     if urlparse(path).scheme not in ("", "file"):
         return
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        _recover_partition_dirs,
-    )
     from etl_apache_kafka_python_doker_aws_spark.plans.merge import _recover
 
-    _recover(path)
     _recover_partition_dirs(path)
     _recover_partition_dirs(f"{path}/{_VEC_DIR}")
     _recover(f"{path}/{_BATCH_DIR}")
-    # LEGACY r13 dead-tally fold swap: the r13 fold was a paired-rename
-    # dir swap, so a pre-r14 crash can leave the tally only in
-    # .staging/.old — restore it. The r14 fold is append-only (one
-    # superseding covers-row + file deletes, `_fold_dead_tally`) and can
-    # never produce this state; this call exists solely to heal
-    # r13-era leftovers and must outlive the redesign.
-    _recover(f"{path}/{_DEAD_DIR}")
 
 
 def _dim_guarded(vec: "F.Column", dim: int, who: str) -> "F.Column":
@@ -681,7 +613,7 @@ def ann_index_build(
     train_fraction: float | None = None,
     batch_id: str = "base",
     residual: bool = False,
-    vec_buckets: int | str | None = "auto",
+    vec_buckets: int | str = "auto",
     payload_cols: list[str] | None = None,
 ) -> None:
     """Train IVF centroids + PQ codebooks on ``corpus`` (seeded KMeans;
@@ -694,8 +626,8 @@ def ann_index_build(
     onto them would append-double the corpus; VERDICT r7 #5).
     ``residual=True`` trains PQ codebooks on (vec − centroid[cell])
     residuals — the flag is pinned in meta with the models.
-    ``vec_buckets`` sizes the refine tier's id-hash partitioning (r9);
-    the default ``"auto"`` (r12, VERDICT r11 #2) scales it with the
+    ``vec_buckets`` (``"auto"`` or an int >= 1) sizes the refine tier's
+    id-hash partitioning; the default ``"auto"`` scales it with the
     corpus — ~50k vectors per bucket, clamped to [64, 4096]
     (``_auto_vec_buckets``) — so directory pruning keeps bite at
     serving shortlists as the corpus grows; pinned in meta because
@@ -716,6 +648,7 @@ def ann_index_build(
     from etl_apache_kafka_python_doker_aws_spark.util import ensure_parallelism
 
     spark = corpus.sparkSession
+    _check_vec_buckets(vec_buckets, "ann_index_build")
     payload_cols = list(payload_cols or [])
     bad = [c for c in payload_cols if c in _RESERVED_COLS]
     if bad:
@@ -761,27 +694,20 @@ def ann_index_build(
         )
     codebooks = _pq_train(train_in, sub, n_subspaces, n_centroids, seed, train_fraction)
     meta = {
+        "layout_version": LAYOUT_VERSION,
         "dim": dim,
         "n_cells": n_cells,
         "n_subspaces": n_subspaces,
         "n_centroids": n_centroids,
         "seed": seed,
         "residual": residual,
-        # r12: per-row batch lineage in the refine tier — the layout
-        # prerequisite for seq-scoped tombstone retraction
-        "vec_batch": True,
+        "vec_buckets": vec_buckets,
         "centroids": centroids,
         "codebooks": codebooks,
     }
-    if vec_buckets:
-        # omitted when falsy (ADVICE r9): a None value would make
-        # createDataFrame fail on an untyped NULL, and ann_index_meta
-        # already reads an ABSENT field as None (the legacy-layout
-        # signal) — vec_buckets=None builds the flat refine tier
-        meta["vec_buckets"] = vec_buckets
     if payload_cols:
-        # omitted when empty (same falsy-omission rule): ann_index_meta
-        # reads an absent field as [] — the payload-less layout
+        # omitted when empty (an empty list infers as an untyped array
+        # on write): ann_index_meta reads an absent field as []
         meta["payload_cols"] = payload_cols
     _write_batch(corpus, id_col, vec_col, path, meta, batch_id, seq=0, wide=True)
     # meta LAST: its presence is the build's commit marker — search and
@@ -883,15 +809,12 @@ def ann_index_rebuild(
     keeps its marker at 0 rows). Params default to the OLD meta —
     override to re-tune (more cells as the corpus grows is the typical
     move); ``dim`` is a property of the stored vectors and cannot
-    change. A pre-r9 index (unpartitioned refine tier) rebuilds into
-    the bucketed layout by default (vec_buckets 64) — rebuild IS the
-    legacy upgrade path, and since r12 ALSO the tombstone-retraction
-    upgrade path: the rebuilt index always carries per-row ``_batch``
-    lineage in its refine tier (``vec_batch``), pending tombstones are
-    folded in (never copied — the rebuilt markers reflect the true
-    post-delete counts), and ``vec_buckets="auto"`` re-derives the
-    corpus-scaled bucket count for an index that outgrew its build-time
-    layout.
+    change. Pending tombstones are folded in (never copied — the
+    rebuilt markers reflect the true post-delete counts), and
+    ``vec_buckets="auto"`` re-derives the corpus-scaled bucket count
+    for an index that outgrew its build-time count. The new meta is
+    stamped with the current ``layout_version``; a source without the
+    stamp is refused (``ann_index_meta``).
 
     Scale shape: two sampled training passes (``train_fraction``), one
     full encode pass and one refine-tier rewrite — all linear scans,
@@ -902,6 +825,8 @@ def ann_index_rebuild(
     old = ann_index_meta(spark, path)
     if old is None:
         raise ValueError(f"ann_index_rebuild: no index at {path}")
+    if vec_buckets is not None:
+        _check_vec_buckets(vec_buckets, "ann_index_rebuild")
     if ann_index_meta(spark, new_path) is not None or _fs_nonempty(
         spark, new_path
     ):
@@ -911,6 +836,7 @@ def ann_index_rebuild(
         )
     _ann_recover(path)
     meta = {
+        "layout_version": LAYOUT_VERSION,
         "dim": old["dim"],
         "n_cells": n_cells if n_cells is not None else old["n_cells"],
         "n_subspaces": (
@@ -921,10 +847,9 @@ def ann_index_rebuild(
         ),
         "seed": seed if seed is not None else old["seed"],
         "residual": residual if residual is not None else old["residual"],
-        "vec_batch": True,  # rebuild always migrates to the r12 layout
         "vec_buckets": (
-            vec_buckets if vec_buckets is not None and vec_buckets != "auto"
-            else (old["vec_buckets"] or 64)
+            vec_buckets if vec_buckets not in (None, "auto")
+            else old["vec_buckets"]
         ),
     }
     pay = list(old.get("payload_cols") or [])
@@ -960,33 +885,27 @@ def ann_index_rebuild(
     # surviving committed rows and carries no tombstone sidecar —
     # rebuild is the remote-index compaction path.
     markers = _ann_marker_rows(spark, path)
-    tomb = _ann_tombstones(spark, path) if old.get("vec_batch") else None
+    tomb = _ann_tombstones(spark, path)
     raw_vecs = spark.read.parquet(f"{path}/{_VEC_DIR}")
-    if old.get("vec_batch"):
-        if "_batch" not in raw_vecs.columns:
-            # ADVICE r12: meta claims the r12 lineage layout but the
-            # refine tier carries no _batch column — on such a layout
-            # the min(_v) fold below could silently carry a RETRACTED
-            # version's embedding forward for a retracted-then-
-            # re-appended id (seq-scoped tombstones can't pair rows
-            # that lack lineage). An inconsistent index is a repair
-            # job, not a degrade: refuse loudly.
-            raise ValueError(
-                f"ann_index_rebuild: meta at {path} claims vec_batch "
-                "but the refine tier has no _batch column — "
-                "inconsistent layout (hand-stripped or torn); restore "
-                "the refine tier or rebuild from the source vectors"
-            )
-        raw_vecs = _ann_live_rows(raw_vecs, tomb, markers)
+    if "_batch" not in raw_vecs.columns:
+        # ADVICE r12: the layout stamp promises per-row lineage but the
+        # refine tier carries no _batch column — the min(_v) fold below
+        # could silently carry a RETRACTED version's embedding forward
+        # for a retracted-then-re-appended id (seq-scoped tombstones
+        # can't pair rows that lack lineage). An inconsistent index is
+        # a repair job, not a degrade: refuse loudly.
+        raise ValueError(
+            f"ann_index_rebuild: the refine tier at {path} has no _batch "
+            "column — inconsistent with its layout_version (hand-stripped "
+            "or torn); restore the refine tier or rebuild from the source "
+            "vectors"
+        )
     vecs = (
-        raw_vecs.select("_id", "_v")
+        _ann_live_rows(raw_vecs, tomb, markers)
+        .select("_id", "_v")
         .groupBy("_id")
         .agg(F.min("_v").alias("_v"))
     )
-    # pre-r12 refine tiers lack per-row lineage (raw_vecs unfiltered
-    # above), but the codes side always carries ``_batch``: restricting
-    # it to marked live rows drops orphan-only ids from the corpus via
-    # this inner join on every layout
     live_codes = _ann_live_rows(spark.read.parquet(path), tomb, markers)
     if pay:
         # payload values travel with the lineage: collapse duplicated
@@ -1031,8 +950,8 @@ def ann_index_rebuild(
         meta["n_cells"],
         wide=True,
     ).write.mode("append").partitionBy("cell").parquet(new_path)
-    # the new refine tier carries _batch lineage (vec_batch layout) —
-    # corpus is vecs ⋈ per-id earliest batch, so both tiers agree
+    # corpus is vecs ⋈ per-id earliest batch, so both tiers' _batch
+    # lineage agrees
     _write_vec_tier(corpus.select("_id", "_v", "_batch"), new_path, meta,
                     wide=True)
     # markers carried over; n_rows recomputed from the surviving corpus
@@ -1089,24 +1008,19 @@ def _write_split(df: DataFrame, group_col: str, n_groups: int, wide: bool):
 
 
 def _write_vec_tier(vecs: DataFrame, path: str, meta: dict, wide: bool = False) -> None:
-    """Append ``(_id, _v)`` rows to the refine tier. With
-    ``vec_buckets`` pinned in meta: id-hash partitioning + id-sorted
-    files (r9) — the search-side re-rank prunes this tier by
-    (``_vbucket IN``, ``_id IN``), and the sort keeps row-group min/max
-    ranges tight so the pushed id predicate skips row groups, not just
-    directories. Without it (pre-r9 index): flat parquet, readable by
-    the unpruned fallback."""
-    if meta.get("vec_buckets"):
-        with_vb = vecs.withColumn(
-            "_vbucket", _vbucket(F.col("_id"), meta["vec_buckets"])
+    """Append ``(_id, _v, _batch)`` rows to the refine tier: id-hash
+    partitioning + id-sorted files — the search-side re-rank prunes
+    this tier by (``_vbucket IN``, ``_id IN``), and the sort keeps
+    row-group min/max ranges tight so the pushed id predicate skips row
+    groups, not just directories."""
+    with_vb = vecs.withColumn(
+        "_vbucket", _vbucket(F.col("_id"), meta["vec_buckets"])
+    )
+    _write_split(with_vb, "_vbucket", meta["vec_buckets"], wide) \
+        .sortWithinPartitions("_vbucket", "_id") \
+        .write.mode("append").partitionBy("_vbucket").parquet(
+            f"{path}/{_VEC_DIR}"
         )
-        _write_split(with_vb, "_vbucket", meta["vec_buckets"], wide) \
-            .sortWithinPartitions("_vbucket", "_id") \
-            .write.mode("append").partitionBy("_vbucket").parquet(
-                f"{path}/{_VEC_DIR}"
-            )
-    else:
-        vecs.write.mode("append").parquet(f"{path}/{_VEC_DIR}")
 
 
 def _write_batch(
@@ -1133,9 +1047,7 @@ def _write_batch(
     vecs = df.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        # r12 layout: refine-tier rows carry batch lineage so seq-scoped
-        # tombstones can pair them (pre-r12 metas keep the slim schema)
-        *([F.lit(batch_id).alias("_batch")] if meta.get("vec_batch") else []),
+        F.lit(batch_id).alias("_batch"),
     )
     _write_vec_tier(vecs, path, meta, wide)
     n_rows = df.count()
@@ -1176,9 +1088,10 @@ def ann_index_search(
     Defaults are corpus-scaled, not fixture-tuned (VERDICT r8 #2 — the
     sf1 sweep measured recall 0.22 with the old fixed n_probe=4 /
     shortlist=50 on a 20k corpus): ``shortlist="auto"`` derives
-    max(200, n/10) from the index size (marker metadata when available,
-    else one codes count), ``n_probe=8``. ``shortlist=None`` keeps the
-    ADC-only form (no exact re-rank); an int pins it explicitly.
+    max(200, n/10) from the live index size (marker metadata minus the
+    dead tally — no counting job), ``n_probe=8``. ``shortlist=None``
+    keeps the ADC-only form (no exact re-rank); an int pins it
+    explicitly.
 
     Refine-tier read (r10, VERDICT r9 #1 — the r9 form collected every
     candidate id through py4j and compiled two 20k-element In
@@ -1227,8 +1140,6 @@ def ann_index_search(
     ``prune=False`` forces the streaming join, which is also the
     fully-LAZY form — no synchronous job at construction time, for
     callers composing the result lazily (e.g. a union of searches).
-    Pre-r9 indexes (no ``vec_buckets`` in meta) always use the
-    streaming join.
 
     ``probe_cells``: optional driver-known cell whitelist; when given,
     the codes scan is FILTERED on the partition column first, so only
@@ -1302,11 +1213,10 @@ def ann_index_search(
     if meta is None:
         raise ValueError(f"ann_index_search: no index at {path}")
     # tombstone sidecar (r12): absent on the common path (compaction
-    # removes it whole) — the check is one driver-side listing, no job.
-    # Pre-r12 indexes (no vec_batch) delete physically; skip even that.
-    tomb = _ann_tombstones(spark, path) if meta.get("vec_batch") else None
+    # removes it whole) — the check is one driver-side listing, no job
+    tomb = _ann_tombstones(spark, path)
     need_stats = shortlist == "auto" or (
-        prune == "auto" and meta["vec_buckets"] and shortlist is not None
+        prune == "auto" and shortlist is not None
     )
     # ONE driver-side marker read serves the tombstone seq scope and
     # both auto statistics (review r12: the r12-draft form re-read the
@@ -1324,10 +1234,7 @@ def ann_index_search(
 
         # recall sizing scales with the LIVE corpus: physical minus the
         # tombstoned-dead tally (VERDICT r11 #3)
-        n = _ann_live_size(spark, path, meta, markers)
-        if n is None:  # pre-r9 markers lack n_rows: one columnar count
-            n = spark.read.parquet(path).count()
-        shortlist = ann_shortlist(n)
+        shortlist = ann_shortlist(_ann_live_size(spark, path, markers))
     if prune == "auto":
         # cost-based, from marker metadata (the CBO-statistic move): the
         # pruned read pays ~2 fixed jobs, so only prune once the cold
@@ -1338,10 +1245,8 @@ def ann_index_search(
         # scan on the streaming path — gating on live size would
         # downgrade exactly the index the measured 10M crossover says
         # to prune. Post-compact the two statistics coincide (compact
-        # rewrites marker n_rows from physical survivors). Unknown size
-        # (pre-r9 markers) → prune: the unknown case is the big-index
-        # case.
-        prune = n_phys is None or n_phys >= _PRUNE_MIN_ROWS
+        # rewrites marker n_rows from physical survivors).
+        prune = n_phys is not None and n_phys >= _PRUNE_MIN_ROWS
     sub = meta["dim"] // meta["n_subspaces"]
     centroids, codebooks = meta["centroids"], meta["codebooks"]
     pay = list(meta.get("payload_cols") or [])
@@ -1474,7 +1379,7 @@ def ann_index_search(
         # push through these joins to the scan.
         vec_scan = _ann_apply_tombstones(vec_scan, tomb, markers)
     n_cand = None  # unknown candidate mass ⇒ no hint, AQE decides
-    if meta["vec_buckets"] and prune:
+    if prune:
         # materialize the (bounded) shortlist ONCE: localCheckpoint
         # executes the codes-tier scoring query here and pins its rows
         # executor-side, so the prune decision, the bucket whitelist
@@ -1641,31 +1546,10 @@ def ann_index_dedup_batch(
             f"ann_index_dedup_batch: no index at {path} — create it with "
             "ann_index_build (pinning the models) first"
         )
-    marked = None
-    if resume:
-        marked = next(
-            (
-                r
-                for r in _ann_marker_rows(spark, path)
-                if r.batch_id == batch_id
-            ),
-            None,
-        )
-    if marked is not None:
-        n_in = new_df.count()
-        n_marked = (
-            int(marked.n_rows)
-            if "n_rows" in marked.__fields__ and marked.n_rows is not None
-            else None
-        )
-        if n_marked != n_in:
-            raise ValueError(
-                f"ann_index_dedup_batch: resume of batch_id {batch_id!r} "
-                f"found a marker with n_rows={n_marked} but the input has "
-                f"{n_in} rows — not the same delivery; use a fresh "
-                "batch_id for new data"
-            )
-    else:
+    if not (resume and _resume_skips_append(
+        _ann_marker_rows(spark, path), batch_id, new_df,
+        "ann_index_dedup_batch",
+    )):
         ann_index_append(new_df, id_col, vec_col, path, batch_id=batch_id)
     hits = ann_index_search(
         new_df, path, id_col, vec_col, k,
@@ -1724,23 +1608,10 @@ def ann_index_delete(
     serialize deletes with appends/compacts. Concurrent SEARCHES are
     fine (the one race — a fold cleanup unlinking a tally file a reader
     just listed — is absorbed by the reader's narrow retry), and a
-    delete racing a fold is carried forward, never dropped. A pre-r12 index (no
-    ``vec_batch`` in meta — its refine tier lacks per-row batch
-    lineage, so seq-scoped tombstones cannot pair its rows) falls back
-    to the r9-r11 localized dir rewrite; migrate with
-    ``ann_index_rebuild``. Returns the number of live vectors
-    retracted."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        _require_local_path,
-        _retraction_forms,
-    )
-
-    meta = ann_index_meta(spark, path)
-    if meta is None:
+    delete racing a fold is carried forward, never dropped. Returns the
+    number of live vectors retracted."""
+    if ann_index_meta(spark, path) is None:
         raise ValueError(f"ann_index_delete: no index at {path}")
-    if not meta.get("vec_batch"):
-        _require_local_path(path, "ann_index_delete")
-        return _ann_delete_rewrite(spark, path, ids, meta)
     _ann_recover(path)
     # normalize ONCE (ADVICE r10): a one-shot iterable consumed twice
     # would write an empty tombstone frame on the second pass
@@ -1755,27 +1626,12 @@ def ann_index_delete(
     # — unreachable by tombstones, so they must not count as removed;
     # compaction's rewrite is where they would be swept), minus rows
     # already dead under existing tombstones. ONE request-filtered scan.
-    live_hit = _with_seq(hit, markers, "inner")
-    if tomb is not None:
-        t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
-        live_hit = live_hit.join(
-            t,
-            (F.col("_id") == F.col("_t_id"))
-            & (F.col("_seq") < F.col("del_seq")),
-            "left_anti",
-        )
-    removed = live_hit.count()
+    removed = _ann_live_rows(hit, tomb, markers).count()
     if removed == 0:
         # ids unknown, already tombstoned, or stranded in unmarked
         # crash-append rows (those are swept physically by compact)
         return 0
     n_total = _index_size_from_markers(markers)
-    if n_total is None:
-        raise ValueError(
-            f"ann_index_delete: markers at {path} lack n_rows but meta "
-            "claims the r12 vec_batch layout — inconsistent metadata; "
-            "rebuild with ann_index_rebuild"
-        )
     dead_prev = _ann_dead_total(spark, path)
     if n_total - dead_prev - removed <= 0:
         raise ValueError(
@@ -1865,7 +1721,6 @@ def _fold_dead_tally(
     # driver-side FS read/write (r15, util.sidecar_json_rows/_append):
     # the fold touches ≤ _DEAD_FOLD_FILES tiny files — reading EXACTLY
     # the caller's listing and appending one row needs no Spark jobs
-    # (the pre-r15 form paid a read.json + a tiny write job here)
     import json as _json
 
     from pyspark.sql import Row
@@ -1896,96 +1751,6 @@ def _fold_dead_tally(
     )
     for n in names:
         fs.delete(jpath_cls(f"{dead_dir}/{n}"), False)
-
-
-def _ann_delete_rewrite(spark: SparkSession, path: str, ids, meta: dict) -> int:
-    """Pre-r12 (no ``vec_batch``) retraction: the r9-r11 LOCALIZED
-    rewrite — one pushed-filter scan of the codes tier finds the
-    AFFECTED cells (and, through the shared id-hash, the affected
-    _vbucket dirs of the refine tier); only those partition directories
-    are rewritten and swapped — every untouched cell/bucket directory
-    keeps its files byte-identical. Per-directory swaps are sequential
-    renames healed by ``_recover_partition_dirs``: a crash mid-delete
-    leaves a readable index with SOME ids already retracted — re-run
-    the same delete to finish (idempotent). Dir-proportional cost is
-    why r12 demoted this to the legacy path (VERDICT r11 #1)."""
-    import os
-    import shutil
-
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        _dir_swap,
-        _retraction_forms,
-    )
-    from etl_apache_kafka_python_doker_aws_spark.plans.merge import _swap_in
-
-    _ann_recover(path)
-    # normalize ONCE (ADVICE r10): the refine-tier branch consumes
-    # `ids` a second time below — a one-shot iterable would be
-    # exhausted by _retraction_forms' pass, deleting codes rows while
-    # the _graft_vectors rows silently survive (and rebuild would
-    # later resurrect the deleted vectors)
-    if not isinstance(ids, DataFrame):
-        ids = list(ids)
-    codes = spark.read.parquet(path)
-    hit, drop, gone = _retraction_forms(codes, ids, "ann_index_delete")
-    per_cell = hit.groupBy("cell").agg(F.count("*").alias("_n")).collect()
-    removed = sum(r._n for r in per_cell)
-    if removed == 0:
-        return 0
-    cells = sorted(int(r.cell) for r in per_cell)
-    live_cells = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("cell=") and os.path.isdir(os.path.join(path, d))
-    }
-    keep_codes = drop(codes.filter(F.col("cell").isin(cells)))
-    if keep_codes.count() == 0 and not (live_cells - set(cells)):
-        raise ValueError(
-            f"ann_index_delete: deleting these ids would EMPTY the index "
-            f"at {path} — remove the path instead (live index untouched)"
-        )
-    # codes tier: rewrite ONLY the affected cell dirs
-    _dir_swap(
-        path,
-        "cell",
-        cells,
-        lambda staging: keep_codes.repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .parquet(staging),
-    )
-    # refine tier: post-r9 layout prunes to the affected _vbucket dirs;
-    # a legacy unpartitioned tier falls back to a full sidecar rewrite
-    vec_dir = f"{path}/{_VEC_DIR}"
-    vecs = spark.read.parquet(vec_dir)
-    if meta.get("vec_buckets") and "_vbucket" in vecs.columns:
-        if gone is not None:
-            id_df = gone
-        else:
-            id_df = tiny_rows_df(
-                spark, [(i,) for i in ids], vecs.select("_id").schema
-            )
-        vb = sorted(
-            r._vb
-            for r in id_df.select(
-                _vbucket(F.col("_id"), meta["vec_buckets"]).alias("_vb")
-            ).distinct().collect()
-        )
-        keep_vecs = drop(vecs.filter(F.col("_vbucket").isin(vb)))
-        _dir_swap(
-            vec_dir,
-            "_vbucket",
-            vb,
-            lambda staging: keep_vecs.repartition(F.col("_vbucket"))
-            .sortWithinPartitions("_vbucket", "_id")
-            .write.partitionBy("_vbucket")
-            .parquet(staging),
-        )
-    else:
-        staging = vec_dir.rstrip("/") + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        drop(vecs).write.parquet(staging)
-        _swap_in(staging, vec_dir)
-    return removed
 
 
 def _rewrite_markers(spark: SparkSession, path: str, markers: list) -> bool:
@@ -2019,12 +1784,7 @@ def _rewrite_markers(spark: SparkSession, path: str, markers: list) -> bool:
         }
         for r in markers
     ]
-    if all(
-        "n_rows" in r.__fields__
-        and r.n_rows is not None
-        and int(r.n_rows) == m["n_rows"]
-        for r, m in zip(markers, marks)
-    ):
+    if all(int(r.n_rows) == m["n_rows"] for r, m in zip(markers, marks)):
         return False
     marker_dir = os.path.join(path, _BATCH_DIR)
     staging = marker_dir + ".staging"
@@ -2035,10 +1795,9 @@ def _rewrite_markers(spark: SparkSession, path: str, markers: list) -> bool:
 
 
 def ann_index_compact(spark: SparkSession, path: str) -> int:
-    """Fold accumulated tombstones into the index physically — the
-    r9-r11 localized delete rewrite, demoted to maintenance (r12,
-    VERDICT r11 #1): rewrite ONLY the ``cell=`` / ``_vbucket=``
-    directories that still hold DEAD rows (``_dir_swap`` — every
+    """Fold accumulated tombstones into the index physically: rewrite
+    ONLY the ``cell=`` / ``_vbucket=`` directories that still hold DEAD
+    rows (``_dir_swap`` — every
     untouched directory keeps its files byte-identical), recompute the
     batch markers' ``n_rows`` from the physical survivors (atomic
     staging swap on the marker dir), then drop the dead tally and the
@@ -2081,19 +1840,16 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
     import os
     import shutil
 
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        _dir_swap,
-        _require_local_path,
-    )
-    from etl_apache_kafka_python_doker_aws_spark.plans.merge import _swap_in
-
     _require_local_path(path, "ann_index_compact")
-    meta = ann_index_meta(spark, path)
-    if meta is None:
+    if ann_index_meta(spark, path) is None:
         raise ValueError(f"ann_index_compact: no index at {path}")
     _ann_recover(path)
-    if not meta.get("vec_batch"):
-        return 0  # pre-r12 layout: deletes are physical, nothing pends
+
+    def drop_sidecars() -> None:
+        # tally before tombstones (see the crash table)
+        for d in (_DEAD_DIR, _TOMB_DIR):
+            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+
     tomb = _ann_tombstones(spark, path)
     markers = _ann_marker_rows(spark, path)
     codes = spark.read.parquet(path)
@@ -2106,15 +1862,13 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
     n_dead = sum(r._n for r in cell_hist)
     vec_dir = f"{path}/{_VEC_DIR}"
     vecs = spark.read.parquet(vec_dir)
-    dead_vecs = _ann_dead_rows(vecs, tomb, markers)
-    bucketed_vecs = bool(meta.get("vec_buckets")) and "_vbucket" in vecs.columns
-    if bucketed_vecs:
-        vb_hist = (
-            dead_vecs.groupBy("_vbucket").agg(F.count("*").alias("_n")).collect()
-        )
-        n_dead_vecs = sum(r._n for r in vb_hist)
-    else:
-        n_dead_vecs = dead_vecs.count()
+    vb_hist = (
+        _ann_dead_rows(vecs, tomb, markers)
+        .groupBy("_vbucket")
+        .agg(F.count("*").alias("_n"))
+        .collect()
+    )
+    n_dead_vecs = sum(r._n for r in vb_hist)
     if n_dead == 0 and n_dead_vecs == 0:
         # already folded (a re-run after a kill between the dir swaps
         # and the sidecar drops) — re-verify the markers against the
@@ -2124,8 +1878,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
         # then finish the drops
         if tomb is not None or os.path.isdir(os.path.join(path, _DEAD_DIR)):
             _rewrite_markers(spark, path, markers)
-        _drop_dead_tally(path)
-        shutil.rmtree(os.path.join(path, _TOMB_DIR), ignore_errors=True)
+        drop_sidecars()
         return 0
     if n_dead and codes.count() - n_dead <= 0:
         raise ValueError(
@@ -2146,7 +1899,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
             .write.partitionBy("cell")
             .parquet(staging),
         )
-    if n_dead_vecs and bucketed_vecs:
+    if n_dead_vecs:
         vb = sorted(int(r._vbucket) for r in vb_hist)
         keep_vecs = _ann_live_rows(
             vecs.filter(F.col("_vbucket").isin(vb)), tomb, markers
@@ -2160,14 +1913,6 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
             .write.partitionBy("_vbucket")
             .parquet(staging),
         )
-    elif n_dead_vecs:
-        # flat refine tier (vec_buckets=None build): full sidecar rewrite
-        staging = vec_dir.rstrip("/") + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        _ann_live_rows(vecs, tomb, markers).write.parquet(staging)
-        _swap_in(staging, vec_dir)
     _rewrite_markers(spark, path, markers)
-    # sidecars LAST — tally before tombstones (see the crash table)
-    _drop_dead_tally(path)
-    shutil.rmtree(os.path.join(path, _TOMB_DIR), ignore_errors=True)
+    drop_sidecars()  # LAST (see the crash table)
     return n_dead

@@ -7,25 +7,20 @@ this module persists the banded signatures it already computes
 parquet index, then answers "which docs in this batch near-duplicate
 anything already indexed (or each other)?" with one equi-join.
 
-Index layout at ``path``:
+Index layout at ``path`` (``layout_version`` 1 — the only layout this
+module reads; see "Layout contract" below):
   * data rows, ``partitionBy("band_idx", "_bgroup")`` parquet:
       (_id, _sig array<long>[, payload cols...], band_hash long,
       _batch string, band_idx, _bgroup)
     where ``payload cols`` are optional creation-pinned per-doc
-    attribute columns (r15 — served by ``pairs_vs_batch(where=...)``
-    as pushed scan predicates) and ``_bgroup = pmod(band_hash,
-    bgroups)`` (r10,
-    VERDICT r9 #2). The second partition level exists for DELETE
-    locality: every doc lands in ALL band_idx partitions 0..bands-1,
-    so band_idx alone localizes nothing — a retraction under the flat
-    layout rewrote the whole index (~1.1 TB per weekly GDPR batch at
-    10⁹ docs). With ``bgroups`` hash sub-partitions per band, a delete
-    rewrites only the ``band_idx=*/_bgroup=*`` directories its ids
-    hash into (≤ bands × |distinct groups hit|). Pairs queries ignore
-    the column (the band equi-join keys are unchanged). Pre-r10
-    indexes (no ``bgroups`` in meta) keep the flat layout — appends
-    follow the index's pinned layout, deletes fall back to the full
-    rewrite, and the migration is a rebuild into a fresh path.
+    attribute columns (served by ``pairs_vs_batch(where=...)`` as
+    pushed scan predicates) and ``_bgroup = pmod(band_hash, bgroups)``.
+    The second partition level exists for DELETE locality: every doc
+    lands in ALL band_idx partitions 0..bands-1, so band_idx alone
+    localizes nothing. With ``bgroups`` hash sub-partitions per band, a
+    delete rewrites only the ``band_idx=*/_bgroup=*`` directories its
+    ids hash into (≤ bands × |distinct groups hit|). Pairs queries
+    ignore the column (the band equi-join keys are unchanged).
     The full 32-long signature is stored per band row ON PURPOSE — the
     verify stage needs both sides' signatures, and re-attaching them
     after an ids-only join was measured 5.7x slower at 1M docs
@@ -33,24 +28,24 @@ Index layout at ``path``:
     num_hashes×8B sig + 8B hash) per doc ≈ 1.1 KB/doc at 4×32 — ~1.1 TB
     per billion docs, a flat parquet table any executor count can scan.
   * ``_graft_meta/`` — one JSON row pinning (num_hashes, bands,
-    shingle_n, seed) + ``bgroups`` (r10, layout — pinned at creation
-    like the table tier's bucket count) + ``payload_cols`` (r15, the
-    attribute schema — every append must carry it). Appends with
-    different LSH
-    params are REJECTED loudly: signatures hashed under different
-    seeds never collide, so a silent mismatch wouldn't fail — it would
-    just find nothing.
-  * ``_graft_batches/`` — one JSON row per appended batch_id. A
-    duplicate batch_id is REJECTED (the keyed-merge redelivery lesson:
-    anti-join-style "it'll dedup out" reasoning silently doubles every
-    bucket; re-delivery must be explicit).
+    shingle_n, seed), ``bgroups`` (a layout property, pinned at
+    creation like the table tier's bucket count), ``payload_cols`` (the
+    attribute schema — every append must carry it) and
+    ``layout_version``. Appends with different LSH params are REJECTED
+    loudly: signatures hashed under different seeds never collide, so
+    a silent mismatch wouldn't fail — it would just find nothing.
+  * ``_graft_batches/`` — one JSON row per appended batch_id
+    (batch_id, seq, n_rows), written LAST by each append: the commit
+    marker. A duplicate batch_id is REJECTED (the keyed-merge
+    redelivery lesson: anti-join-style "it'll dedup out" reasoning
+    silently doubles every bucket; re-delivery must be explicit).
   * ``_graft_counts/`` — per-batch (band_idx, band_hash, _batch, cnt)
-    parquet, appended with each batch: the PERSISTED skew-guard state
-    (VERDICT r7 #1 / ADVICE r7). Bucket totals come from summing this
-    sidecar (~16 B per distinct bucket) instead of re-running a count
-    window over the full index per query — the guard scan shrinks ~70×
-    (counts bytes vs 1.1 KB/doc index bytes) and never shuffles index
-    rows.
+    parquet, written by each append BEFORE its marker: the PERSISTED
+    skew-guard state. Bucket totals come from summing this sidecar
+    (~16 B per distinct bucket) over the marked batches instead of
+    re-running a count window over the full index per query — the
+    guard scan shrinks ~70× (counts bytes vs 1.1 KB/doc index bytes)
+    and never shuffles index rows.
   All subdirs start with ``_`` so Spark's parquet listing of ``path``
   ignores them.
 
@@ -78,11 +73,18 @@ Scale notes (SCALING.md "incremental dedup"):
   * Maintenance: appends create one file-set per batch — run
     ``sources/layout.compact_small_files`` on ``path`` periodically
     (it discovers the nested ``band_idx=*/_bgroup=*`` layout);
-    ``minhash_index_delete`` retracts documents — LOCALIZED on the
-    r10 layout (only the directories the ids hash into are rewritten;
-    guard counts updated sidecar-proportionally, batch markers
-    preserved so redelivery stays rejected), full rewrite + atomic
-    swap on a pre-r10 flat index.
+    ``minhash_index_delete`` retracts documents LOCALIZED (only the
+    directories the ids hash into are rewritten; guard counts updated
+    sidecar-proportionally, batch markers preserved so redelivery stays
+    rejected); ``minhash_index_relayout`` changes ``bgroups``.
+
+Layout contract: every meta writer (the first ``minhash_index_append``,
+``minhash_index_relayout``, the first ``minhash_table_append``) stamps
+``layout_version`` = ``LAYOUT_VERSION``, and every meta reader raises
+one ValueError naming the path or table when the stamp is missing or
+different — an index in any other layout is rebuilt from source, never
+read through a compatibility branch. The ANN and exact tiers follow the
+same contract (``_check_layout``).
 """
 
 from __future__ import annotations
@@ -101,6 +103,26 @@ _META_DIR = "_graft_meta"
 _BATCH_DIR = "_graft_batches"
 _COUNTS_DIR = "_graft_counts"
 _PARAMS = ("num_hashes", "bands", "shingle_n", "seed")
+
+#: The on-disk layout every index tier (band path/table, ANN, exact)
+#: writes and the only one it reads — stamped into each meta row.
+LAYOUT_VERSION = 1
+
+
+def _check_layout(row, where: str) -> None:
+    """Refuse a meta row without the current ``layout_version`` stamp —
+    an index written in any other layout is rebuilt, never read."""
+    got = row["layout_version"] if "layout_version" in row.__fields__ else None
+    if got != LAYOUT_VERSION:
+        raise ValueError(
+            f"{where} has layout_version {got!r}, but only layout_version "
+            f"{LAYOUT_VERSION} is readable — rebuild the index from source"
+        )
+
+
+def _check_bgroups(bgroups, who: str) -> None:
+    if not isinstance(bgroups, int) or bgroups < 1:
+        raise ValueError(f"{who}: bgroups {bgroups!r} must be an int >= 1")
 
 #: Column names the band-index machinery owns — a payload column
 #: shadowing one would silently corrupt the layout or the guard
@@ -228,11 +250,9 @@ def _retraction_forms(full: DataFrame, ids, who: str):
 
 
 def minhash_index_meta(spark: SparkSession, path: str) -> dict | None:
-    """Read the index's pinned LSH parameters, or None if no index
-    exists at ``path`` yet. ``bgroups`` (r10, the delete-locality
-    sub-partition count) is None for a pre-r10 flat-layout index —
-    appends follow the pinned layout and deletes fall back to the
-    full rewrite on those."""
+    """Read the index's pinned LSH parameters, ``bgroups`` and payload
+    schema, or None if no index exists at ``path`` yet; raises on a
+    meta without the current ``layout_version``."""
     from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_rows
 
     # driver-side FS read (r15, util.sidecar_json_rows): one tiny JSON
@@ -244,14 +264,11 @@ def minhash_index_meta(spark: SparkSession, path: str) -> dict | None:
     row = rows[0] if rows else None
     if row is None:
         return None
+    _check_layout(row, f"band index at {path}")
     meta = {k: int(row[k]) for k in _PARAMS}
-    meta["bgroups"] = (
-        int(row.bgroups)
-        if "bgroups" in row.__fields__ and row.bgroups is not None
-        else None
-    )
-    # pre-r15 indexes (and payload-less creates) read as [] — every
-    # consumer treats [] as "no payload machinery"
+    meta["bgroups"] = int(row.bgroups)
+    # payload-less creates omit the field — read as [] ("no payload
+    # machinery" to every consumer)
     meta["payload_cols"] = (
         list(row.payload_cols)
         if "payload_cols" in row.__fields__ and row.payload_cols
@@ -321,9 +338,8 @@ def _marker_rows(spark: SparkSession, source) -> list:
     """Raw batch-marker rows in append order (empty for a fresh index).
     ``source`` is a marker-dir path or a pre-read DataFrame. One tiny
     JSON/table row per batch — metadata-cheap at any index size. Marker
-    fields: batch_id, seq, and (r9) ``counted`` — written True AFTER
-    the counts sidecar, so a marked batch with counted=True provably
-    has its guard counts on disk (markers are written LAST).
+    fields: batch_id, seq, n_rows. Markers are written LAST, so a
+    marked batch provably has its data rows and guard counts on disk.
 
     Absence (fresh index) is an explicit existence check; a READ error
     on an existing marker dir propagates (review r12 — swallowing it
@@ -341,16 +357,6 @@ def _marker_rows(spark: SparkSession, source) -> list:
             return []
         rows = fs_rows
     return sorted(rows, key=lambda r: r.seq)
-
-
-def _counts_complete(rows: list) -> bool:
-    """True when every marked batch carries the r9 ``counted=True``
-    flag — the guard sidecar is then provably complete as a TRUE
-    metadata read (no distinct-scan of the sidecar needed). Pre-r9
-    markers lack the field → the caller falls back to the scan check."""
-    return bool(rows) and all(
-        "counted" in r.__fields__ and bool(r.counted) for r in rows
-    )
 
 
 def minhash_index_batches(spark: SparkSession, path: str) -> list[str]:
@@ -371,7 +377,7 @@ def minhash_index_append(
     bands: int = 4,
     shingle_n: int = 3,
     seed: int = 42,
-    bgroups: int | None = 16,
+    bgroups: int = 16,
     payload_cols: list[str] | None = None,
 ) -> None:
     """Sign ``df`` and APPEND its band rows to the index at ``path``
@@ -391,17 +397,18 @@ def minhash_index_append(
     scan-time filtering), and survive delete/compact/relayout
     unchanged (whole-row rewrites).
 
-    ``bgroups`` (r10) pins the delete-locality sub-partition count at
-    CREATION — like the table tier's bucket count, it is a LAYOUT
-    property: appends into an existing index follow its pinned value
-    (the argument is ignored then; mixing layouts in one index would
-    break partition discovery). ``bgroups=None`` creates the flat
-    pre-r10 layout (deletes then rewrite the whole index). At 10⁹
-    docs size it so each ``band_idx=*/_bgroup=*`` directory holds a
-    few GB — a delete rewrites ≤ bands × groups-hit directories.
+    ``bgroups`` (an int >= 1) pins the delete-locality sub-partition
+    count at CREATION — like the table tier's bucket count, it is a
+    LAYOUT property: appends into an existing index follow its pinned
+    value (the argument is ignored then; mixing layouts in one index
+    would break partition discovery; ``minhash_index_relayout``
+    changes it). At 10⁹ docs size it so each ``band_idx=*/_bgroup=*``
+    directory holds a few GB — a delete rewrites ≤ bands × groups-hit
+    directories.
 
-    Sink helper — runs write jobs (four: data, guard counts, meta +
-    batch markers). The batch's banded rows are persisted (memory+disk,
+    Sink helper — runs write jobs (data, guard counts; the meta row on
+    creation and the batch marker are driver-side sidecar writes). The
+    batch's banded rows are persisted (memory+disk,
     batch-sized) across the data and counts writes so signatures are
     computed once. Raises ValueError on param drift or batch_id
     redelivery; callers that legitimately retry a failed append must
@@ -415,6 +422,7 @@ def minhash_index_append(
     guess).
     """
     spark = df.sparkSession
+    _check_bgroups(bgroups, "minhash_index_append")
     meta = minhash_index_meta(spark, path)
     params = {
         "num_hashes": num_hashes,
@@ -439,9 +447,7 @@ def minhash_index_append(
     g = meta["bgroups"] if meta is not None else bgroups
     pay = _pinned_payloads(df, meta, payload_cols, "minhash_index_append")
     if meta is None:
-        row = dict(params)
-        if g:
-            row["bgroups"] = g
+        row = {**params, "bgroups": g, "layout_version": LAYOUT_VERSION}
         if pay:
             # key written only when non-empty — minhash_index_meta reads
             # an absent field as [] (the payload-less layout)
@@ -455,31 +461,26 @@ def minhash_index_append(
     banded = banded_minhash_signatures(
         df, id_col, text_col, num_hashes, bands, shingle_n, seed,
         carry_cols=tuple(pay),
-    ).withColumn("_batch", F.lit(batch_id))
-    part_cols = ["band_idx"]
-    if g:
-        banded = banded.withColumn(
-            "_bgroup", F.pmod(F.col("band_hash"), F.lit(int(g))).cast("int")
-        )
-        part_cols.append("_bgroup")
-        # repartition ON the partition columns so each directory is
-        # written by exactly one task → ONE file per dir per append
-        # (r10): a naive partitionBy write opens tasks × bands × bgroups
-        # writers — measured 6,185 files after three appends at the
-        # 1M-doc probe, and the per-batch pairs query paid it in listing
-        # + footer reads (12.7 s vs 2.0 s on the flat layout). Hash
-        # distribution keeps parallelism = min(shuffle.partitions,
-        # bands × bgroups), which also holds on a cluster (size bgroups
-        # so bands × bgroups ≳ shuffle parallelism there).
-        banded = banded.repartition(F.col("band_idx"), F.col("_bgroup"))
+    ).withColumn("_batch", F.lit(batch_id)).withColumn(
+        "_bgroup", F.pmod(F.col("band_hash"), F.lit(int(g))).cast("int")
+    )
+    # repartition ON the partition columns so each directory is written
+    # by exactly one task → ONE file per dir per append (r10): a naive
+    # partitionBy write opens tasks × bands × bgroups writers — measured
+    # 6,185 files after three appends at the 1M-doc probe, and the
+    # per-batch pairs query paid it in listing + footer reads. Hash
+    # distribution keeps parallelism = min(shuffle.partitions, bands ×
+    # bgroups), which also holds on a cluster (size bgroups so bands ×
+    # bgroups ≳ shuffle parallelism there).
+    banded = banded.repartition(F.col("band_idx"), F.col("_bgroup"))
     banded.persist()
     try:
-        banded.write.mode("append").partitionBy(*part_cols).parquet(path)
+        banded.write.mode("append").partitionBy("band_idx", "_bgroup").parquet(
+            path
+        )
         # every batch writes at least the zero-count sentinel row
-        # (band_idx -1, matches no real bucket — ADVICE r8): a batch
-        # with zero shingle-eligible docs would otherwise leave no
-        # counts rows at all and permanently fail the completeness
-        # check, forcing the full-index guard recompute forever
+        # (band_idx -1, matches no real bucket — ADVICE r8), so even a
+        # batch with zero shingle-eligible docs leaves a counts file
         banded.groupBy("band_idx", "band_hash").agg(
             F.count("*").alias("cnt")
         ).withColumn("_batch", F.lit(batch_id)).unionByName(
@@ -491,17 +492,16 @@ def minhash_index_append(
         ).write.mode("append").parquet(f"{path}/{_COUNTS_DIR}")
     finally:
         banded.unpersist()
-    # counted=True is only ever written AFTER the counts write above —
-    # a marked batch with the flag provably has its guard counts.
-    # Driver-side one-row FS append (r15, util.sidecar_json_append):
-    # the Spark write job per marker was fixed scheduling tax
+    # the marker is written AFTER the counts — a marked batch provably
+    # has its guard counts. Driver-side one-row FS append (r15,
+    # util.sidecar_json_append): a Spark write job per marker was fixed
+    # scheduling tax
     from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_append
 
     sidecar_json_append(
         spark,
         f"{path}/{_BATCH_DIR}",
-        {"batch_id": batch_id, "seq": len(existing), "counted": True,
-         "n_rows": n_in},
+        {"batch_id": batch_id, "seq": len(existing), "n_rows": n_in},
         name_hint="marker",
     )
 
@@ -546,9 +546,7 @@ def minhash_index_pairs_vs_batch(
     emission collapses in ``estimate_jaccard_pairs``'s dedup. Candidate
     mass is confined to buckets the batch touches — batch-proportional,
     not corpus-proportional. The skew guard reads the summed
-    ``_graft_counts`` sidecar (no full-index count window); an index
-    predating the sidecar falls back to one groupBy-count scan of the
-    index (migration path, logged in the plan as an extra aggregate).
+    ``_graft_counts`` sidecar (no full-index count window).
     Oversized buckets are excluded on the BATCH side only — an index
     row in a dropped bucket can only pair with batch rows of that same
     bucket, so the emitted pair set is identical to guarding both
@@ -573,29 +571,11 @@ def minhash_index_pairs_vs_batch(
     # candidates — filter the index scan to marked batches (tiny pushed
     # In predicate) so leftovers are invisible until cleanup
     full = spark.read.parquet(path).filter(F.col("_batch").isin(marked))
-    per_batch = None
-    if _counts_complete(markers):
-        # r9 markers: counted=True per batch ⇒ sidecar provably complete
-        # — a TRUE metadata read (no distinct-scan of the sidecar)
-        per_batch = spark.read.parquet(f"{path}/{_COUNTS_DIR}")
-    else:
-        try:
-            counts = spark.read.parquet(f"{path}/{_COUNTS_DIR}")
-            # pre-r9 markers lack the counted flag: one distinct-scan of
-            # the (small) sidecar — missing counts for any MARKED batch
-            # would silently UNDER-count bucket totals and re-open the
-            # m² blowup; fall back to the one-scan recompute instead
-            counted = {
-                r._batch for r in counts.select("_batch").distinct().collect()
-            }
-            if set(marked) <= counted:
-                per_batch = counts
-        except Exception:
-            per_batch = None
-    if per_batch is not None:
-        # counts rows from a crashed append (counts written, marker not)
-        # would INFLATE bucket totals and spuriously drop buckets
-        per_batch = per_batch.filter(F.col("_batch").isin(marked))
+    # counts rows from a crashed append (counts written, marker not)
+    # would INFLATE bucket totals and spuriously drop buckets
+    per_batch = spark.read.parquet(f"{path}/{_COUNTS_DIR}").filter(
+        F.col("_batch").isin(marked)
+    )
     return _pairs_for_batch(
         full, per_batch, batch_id, meta["num_hashes"], threshold,
         max_bucket_size, allowed, where,
@@ -604,7 +584,7 @@ def minhash_index_pairs_vs_batch(
 
 def _pairs_for_batch(
     full: DataFrame,
-    per_batch: DataFrame | None,
+    per_batch: DataFrame,
     batch_id: str,
     num_hashes: int,
     threshold: float,
@@ -614,9 +594,9 @@ def _pairs_for_batch(
 ) -> DataFrame:
     """The shared batch-vs-index pair plan (path-backed and
     table-bucketed forms must never drift): guard whitelist from the
-    summed counts (or the one-scan recompute when ``per_batch`` is
-    None), batch-side filter, one band equi-join, (least, greatest)
-    normalization, signature verify.
+    summed counts of the marked batches (``per_batch``), batch-side
+    filter, one band equi-join, (least, greatest) normalization,
+    signature verify.
 
     ``allowed`` (r14, VERDICT r13 #3 — the filtered-ANN rule on the
     band tier): a DataFrame whose FIRST column holds the ids the pair
@@ -640,15 +620,6 @@ def _pairs_for_batch(
     columns it PUSHES into the parquet reader (plan-pinned) — zero
     extra frames, joins, or shuffles at any selectivity. The skew
     guard stays on the UNFILTERED counts, same as ``allowed``."""
-    if per_batch is None:
-        # recompute from the UNFILTERED frame (below, before the allowed
-        # semi-join narrows `full`): the guard statistic must not drift
-        # between the sidecar path and this fallback (review r14 — a
-        # filtered recompute would whitelist buckets the sidecar path
-        # drops, flipping pair sets on sidecar presence)
-        per_batch = full.groupBy("band_idx", "band_hash").agg(
-            F.count("*").alias("cnt")
-        )
     if where is not None:
         full = full.filter(where)
     if allowed is not None:
@@ -684,21 +655,17 @@ def _pairs_for_batch(
 
 def _resume_skips_append(markers, batch_id: str, new_df: DataFrame,
                          who: str) -> bool:
-    """Shared resume contract (r15 — the ann_index_dedup_batch rule on
-    the band tier): True = the batch marker proves THIS delivery already
-    appended (skip the append, re-run only the pairs side); False = no
-    marker, append normally. A marker whose recorded ``n_rows`` differs
-    from the input (or predates the field) raises — same batch_id with
+    """Shared resume contract of every ``*_dedup_batch`` (band path,
+    band table, ANN): True = the batch marker proves THIS delivery
+    already appended (skip the append, re-run only the search side);
+    False = no marker, append normally. A marker whose recorded
+    ``n_rows`` differs from the input raises — same batch_id with
     different payload is a redelivery bug, not a retry."""
     marked = next((r for r in markers if r.batch_id == batch_id), None)
     if marked is None:
         return False
     n_in = new_df.count()
-    n_marked = (
-        int(marked.n_rows)
-        if "n_rows" in marked.__fields__ and marked.n_rows is not None
-        else None
-    )
+    n_marked = int(marked.n_rows)
     if n_marked != n_in:
         raise ValueError(
             f"{who}: resume of batch_id {batch_id!r} found a marker with "
@@ -736,8 +703,8 @@ def minhash_index_dedup_batch(
     delivery skips the append when the batch marker's recorded
     ``n_rows`` matches this input and re-runs only the pairs query —
     identical pair set, since the index state is byte-identical to the
-    first run's post-append state. A count mismatch (or a pre-r15
-    marker without the field) raises; no marker at all means the crash
+    first run's post-append state. A count mismatch raises; no marker
+    at all means the crash
     hit MID-append — clean up the unmarked files first (the append
     contract above), then re-run.
     """
@@ -785,14 +752,16 @@ def _table_exists(spark: SparkSession, table: str) -> bool:
 
 def minhash_table_meta(spark: SparkSession, table: str) -> dict | None:
     """Pinned LSH params (+ bucket count) of a bucketed band index, or
-    None if the index table doesn't exist yet."""
+    None if the index table doesn't exist yet; raises on a meta without
+    the current ``layout_version``."""
     if not _table_exists(spark, f"{table}_meta"):
         return None
     row = spark.table(f"{table}_meta").first()
     if row is None:
         return None
+    _check_layout(row, f"band index table {table}")
     meta = {k: int(row[k]) for k in _PARAMS + ("buckets",)}
-    # pre-r15 meta tables lack the column — read as [] (see the path
+    # payload-less creates omit the column — read as [] (see the path
     # tier's minhash_index_meta)
     meta["payload_cols"] = (
         list(row.payload_cols)
@@ -864,7 +833,7 @@ def minhash_table_append(
         )
     pay = _pinned_payloads(df, meta, payload_cols, "minhash_table_append")
     if meta is None:
-        row = dict(params)
+        row = {**params, "layout_version": LAYOUT_VERSION}
         if pay:
             row["payload_cols"] = pay
         tiny_rows_df(spark, [row]).coalesce(1).write.mode(
@@ -898,18 +867,9 @@ def minhash_table_append(
         ).format("parquet").saveAsTable(f"{table}_counts")
     finally:
         banded.unpersist()
-    marker = {"batch_id": batch_id, "seq": len(existing), "counted": True,
-              "n_rows": n_in}
-    if _table_exists(spark, f"{table}_batches") and "n_rows" not in spark.table(
-        f"{table}_batches"
-    ).columns:
-        # pre-r15 marker table: appending an extra column would fail the
-        # saveAsTable schema match — keep the legacy shape (resume=True
-        # then reports n_rows=None, the "not provable" path)
-        marker.pop("n_rows")
-    tiny_rows_df(spark, [marker]).write.mode("append").saveAsTable(
-        f"{table}_batches"
-    )
+    tiny_rows_df(
+        spark, [{"batch_id": batch_id, "seq": len(existing), "n_rows": n_in}]
+    ).write.mode("append").saveAsTable(f"{table}_batches")
 
 
 def minhash_table_pairs_vs_batch(
@@ -965,16 +925,9 @@ def minhash_table_pairs_vs_batch(
         _tombstones(spark, table),
         markers,
     )
-    per_batch = None
-    if _counts_complete(markers):
-        per_batch = spark.table(f"{table}_counts")
-    elif _table_exists(spark, f"{table}_counts"):
-        counts = spark.table(f"{table}_counts")
-        counted = {r._batch for r in counts.select("_batch").distinct().collect()}
-        if set(marked) <= counted:
-            per_batch = counts
-    if per_batch is not None:
-        per_batch = per_batch.filter(F.col("_batch").isin(marked))
+    per_batch = spark.table(f"{table}_counts").filter(
+        F.col("_batch").isin(marked)
+    )
     return _pairs_for_batch(
         full, per_batch, batch_id, meta["num_hashes"], threshold,
         max_bucket_size, allowed, where,
@@ -1157,9 +1110,9 @@ _MARKER_MAP_MAX = 1_000
 def _marker_seq_join(df: DataFrame, markers, how: str) -> DataFrame:
     """Attach each row's batch SEQUENCE by joining the metadata-sized
     marker frame (one tiny row per batch) — the ONE batch→seq
-    translation both index tiers share (review r12: the band tier's
-    >``_MARKER_MAP_MAX`` branch and the ANN tier's ``_with_seq`` were
-    verbatim copies that could drift). ``how="left"`` keeps unmarked
+    translation every tier shares (the band tier's
+    >``_MARKER_MAP_MAX`` branch, the ANN tier, the exact tier's keeper
+    order). ``how="left"`` keeps unmarked
     (crashed-append) rows with a NULL seq; ``how="inner"`` restricts to
     marked rows. The broadcast hint is structural: the build side is
     one row per batch marker, metadata-bounded at any corpus size."""
@@ -1169,6 +1122,22 @@ def _marker_seq_join(df: DataFrame, markers, how: str) -> DataFrame:
         "_mb string, _seq int",
     )
     return df.join(F.broadcast(mdf), df["_batch"] == mdf["_mb"], how).drop("_mb")
+
+
+def _tombstone_join(seqd: DataFrame, tomb: DataFrame, how: str) -> DataFrame:
+    """The ONE seq-scoped tombstone predicate every tier shares: a row is
+    dead iff some tombstone names its ``_id`` AND the row's batch was
+    already marked when the delete ran (``_seq < del_seq``). ``seqd``
+    carries ``_seq`` (``_marker_seq_join``); ``how="left_anti"`` keeps
+    the live rows, ``"left_semi"`` the dead ones. A NULL ``_seq``
+    (unmarked crash-append row) never satisfies the predicate. Drops
+    ``_seq``."""
+    t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
+    return seqd.join(
+        t,
+        (F.col("_id") == F.col("_t_id")) & (F.col("_seq") < F.col("del_seq")),
+        how,
+    ).drop("_seq")
 
 
 def _apply_tombstones(full: DataFrame, tomb: DataFrame | None, markers) -> DataFrame:
@@ -1186,7 +1155,6 @@ def _apply_tombstones(full: DataFrame, tomb: DataFrame | None, markers) -> DataF
     shuffles for retraction."""
     if tomb is None:
         return full
-    t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
     if len(markers) > _MARKER_MAP_MAX:
         with_seq = _marker_seq_join(full, markers, "left")
     else:
@@ -1199,14 +1167,7 @@ def _apply_tombstones(full: DataFrame, tomb: DataFrame | None, markers) -> DataF
             else F.lit(None).cast("int")
         )
         with_seq = full.withColumn("_seq", seq)
-    return (
-        with_seq.join(
-            t,
-            (F.col("_id") == F.col("_t_id")) & (F.col("_seq") < F.col("del_seq")),
-            "left_anti",
-        )
-        .drop("_seq")
-    )
+    return _tombstone_join(with_seq, tomb, "left_anti")
 
 
 def _tombstone_delete(
@@ -1330,19 +1291,16 @@ def minhash_table_delete(
 
     def n_total_fn():
         # dead-mass fraction from the METADATA-sized counts sidecar
-        # when complete (tombstones never change the physical row
-        # count); incomplete counts fall back to one real count
-        if _counts_complete(markers):
-            return (
-                spark.table(f"{table}_counts")
-                .filter(F.col("band_idx") >= 0)
-                .filter(F.col("_batch").isin([r.batch_id for r in markers]))
-                .agg(F.sum("cnt").alias("s"))
-                .first()
-                .s
-                or 0
-            )
-        return full.count()
+        # (tombstones never change the physical row count)
+        return (
+            spark.table(f"{table}_counts")
+            .filter(F.col("band_idx") >= 0)
+            .filter(F.col("_batch").isin([r.batch_id for r in markers]))
+            .agg(F.sum("cnt").alias("s"))
+            .first()
+            .s
+            or 0
+        )
 
     return _tombstone_delete(
         spark,
@@ -1475,6 +1433,29 @@ def minhash_table_compact(spark: SparkSession, table: str) -> int:
     return before - after
 
 
+def _has_visible_file(spark: SparkSession, root: str) -> bool:
+    """True iff some file under ``root`` is visible to a Spark read of
+    it. Visibility follows Spark's listing rule (shouldFilterOutPathName)
+    on EVERY path component under ``root``: ``.x`` is hidden, ``_x`` is
+    hidden unless it is a ``name=value`` partition dir — so a part file
+    inside committer litter (``_temporary/0/part-x``) is invisible,
+    while ``_bgroup=3/part-x`` is visible."""
+    sc = spark.sparkContext
+    jroot = sc._jvm.org.apache.hadoop.fs.Path(root)
+    fs = jroot.getFileSystem(sc._jsc.hadoopConfiguration())
+    prefix = fs.makeQualified(jroot).toString().rstrip("/")
+    it = fs.listFiles(jroot, True)  # recursive
+    while it.hasNext():
+        rel = it.next().getPath().toString()[len(prefix):]
+        if not any(
+            c.startswith(".") or (c.startswith("_") and "=" not in c)
+            for c in rel.split("/")
+            if c
+        ):
+            return True
+    return False
+
+
 def minhash_index_delete(
     spark: SparkSession,
     path: str,
@@ -1486,10 +1467,9 @@ def minhash_index_delete(
     needs. ``ids`` is a Python list (the GDPR shape: small, explicit)
     or a DataFrame whose FIRST column holds the ids (bulk retractions).
 
-    LOCALIZED rewrite on an r10 layout (VERDICT r9 #2 — the flat
-    layout rewrote the whole ~1.1 TB-per-10⁹-docs index on every
-    weekly GDPR batch, because every doc lands in ALL band_idx
-    partitions): one pushed-filter scan finds the affected
+    LOCALIZED rewrite (every doc lands in ALL band_idx partitions, so
+    the ``_bgroup`` sub-partition is what localizes a delete): one
+    pushed-filter scan finds the affected
     ``band_idx=*/_bgroup=*`` directories (≤ bands × distinct
     band-hash groups the ids hash into); only those are rewritten and
     swapped — every untouched directory keeps its files byte-identical
@@ -1503,27 +1483,13 @@ def minhash_index_delete(
     idempotent); a crash after the data swaps but before the counts
     rewrite leaves the affected buckets OVER-counted, which can only
     make the skew guard drop them (the bounded-resource outcome the
-    cap already allows), never re-open the m² blowup.
+    cap already allows), never re-open the m² blowup; a crash mid
+    counts swap is healed by ``plans.merge._recover`` on the counts
+    dir.
 
-    A pre-r10 index (no ``bgroups`` in meta) falls back to the full
-    staging rewrite + atomic swap of the whole index — migrate with
-    ``minhash_index_relayout`` (a pure re-layout: signatures are
-    stored, nothing retrains). Returns the
-    number of band rows removed. Batch deletes together: cost scales
-    with affected directories, and one call per id still pays a scan
-    each."""
-    _require_local_path(path, "minhash_index_delete")
-    meta = minhash_index_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"minhash_index_delete: no index at {path}")
-    if meta["bgroups"]:
-        return _minhash_delete_localized(spark, path, ids, meta)
-    return _minhash_delete_full_rewrite(spark, path, ids)
-
-
-def _minhash_delete_localized(
-    spark: SparkSession, path: str, ids, meta: dict
-) -> int:
+    Returns the number of band rows removed. Batch deletes together:
+    cost scales with affected directories, and one call per id still
+    pays a scan each."""
     import os
 
     from etl_apache_kafka_python_doker_aws_spark.plans.merge import (
@@ -1531,8 +1497,11 @@ def _minhash_delete_localized(
         _swap_in,
     )
 
+    _require_local_path(path, "minhash_index_delete")
+    meta = minhash_index_meta(spark, path)
+    if meta is None:
+        raise ValueError(f"minhash_index_delete: no index at {path}")
     g = int(meta["bgroups"])
-    _recover(path)  # heal a pre-r10 whole-dir delete killed mid-swap
     _recover_partition_dirs(path)
     full = spark.read.parquet(path)
     hit, drop, _ = _retraction_forms(full, ids, "minhash_index_delete")
@@ -1597,16 +1566,7 @@ def _minhash_delete_localized(
             # only _SUCCESS, so "no visible file anywhere under
             # staging" ⇔ zero survivors — and real read errors have no
             # swallow site left.
-            sc = spark.sparkContext
-            jstaging = sc._jvm.org.apache.hadoop.fs.Path(staging)
-            fs = jstaging.getFileSystem(sc._jsc.hadoopConfiguration())
-            it = fs.listFiles(jstaging, True)  # recursive
-            n_kept = 0
-            while it.hasNext():
-                if not it.next().getPath().getName().startswith(("_", ".")):
-                    n_kept = 1
-                    break
-            if n_kept == 0:
+            if not _has_visible_file(spark, staging):
                 import shutil
 
                 # drop the staging dir ourselves — _dir_swap only cleans
@@ -1660,20 +1620,20 @@ def minhash_index_relayout(
     *,
     bgroups: int = 16,
 ) -> None:
-    """Re-layout a band index into the r10 ``band_idx/_bgroup``
-    partitioning at ``new_path`` — the MIGRATION path for pre-r10 flat
-    indexes (whose deletes fall back to a full-index rewrite). Unlike
-    ``ann_index_rebuild`` this never retrains anything: the index
-    STORES the signatures, and ``_bgroup = pmod(band_hash, bgroups)``
-    is derived from stored columns, so the move is one partitioned
+    """Re-layout a band index to a different ``bgroups`` count at
+    ``new_path`` — the re-bgrouping path for an index whose group count
+    no longer fits its scale. Unlike ``ann_index_rebuild`` this never
+    retrains anything: the index STORES the signatures, and ``_bgroup =
+    pmod(band_hash, bgroups)`` is derived from stored columns, so the
+    move is one partitioned
     rewrite of the data rows plus verbatim copies of the counts
     sidecar (layout-independent: keyed on (band_idx, band_hash,
     _batch)) and the batch markers (redelivery stays rejected after
-    the repoint). Meta is written LAST with the new ``bgroups`` — the
-    blue/green rule: a half-finished relayout reads as "no index",
-    the live index keeps serving until the caller repoints. Also the
-    re-bgrouping path for an index whose group count no longer fits
-    its scale."""
+    the repoint). Meta is written LAST with the new ``bgroups`` and the
+    ``layout_version`` stamp — the blue/green rule: a half-finished
+    relayout reads as "no index", the live index keeps serving until
+    the caller repoints. A source without the current stamp is refused
+    (``minhash_index_meta``)."""
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
         _fs_nonempty,
     )
@@ -1697,8 +1657,7 @@ def minhash_index_relayout(
             "without index meta — a crashed relayout; remove the path "
             "and re-run (live index untouched)"
         )
-    if not bgroups or int(bgroups) < 1:
-        raise ValueError(f"minhash_index_relayout: bgroups {bgroups!r} must be >= 1")
+    _check_bgroups(bgroups, "minhash_index_relayout")
     # heal SOURCE swap leftovers before reading (ADVICE r10): a
     # localized delete killed between _dir_swap's paired renames leaves
     # a `_bgroup=N.old` dir whose name contains '=' — Spark does NOT
@@ -1707,7 +1666,6 @@ def minhash_index_relayout(
     # Same healing every delete entry point runs.
     from etl_apache_kafka_python_doker_aws_spark.plans.merge import _recover
 
-    _recover(path)
     _recover_partition_dirs(path)
     _recover(f"{path}/{_COUNTS_DIR}")
     g = int(bgroups)
@@ -1724,7 +1682,7 @@ def minhash_index_relayout(
         "append"
     ).json(f"{new_path}/{_BATCH_DIR}")
     row = {k: meta[k] for k in _PARAMS}
-    row["bgroups"] = g
+    row.update(bgroups=g, layout_version=LAYOUT_VERSION)
     if meta.get("payload_cols"):
         # payload schema is part of the index contract (r15) — the data
         # rows above carried the values verbatim, meta must keep the pin
@@ -1732,52 +1690,3 @@ def minhash_index_relayout(
     tiny_rows_df(spark, [row]).coalesce(1).write.mode("overwrite").json(
         f"{new_path}/{_META_DIR}"
     )
-
-
-def _minhash_delete_full_rewrite(spark: SparkSession, path: str, ids) -> int:
-    """Pre-r10 flat layout: full rewrite via staging + atomic swap
-    (plans/merge machinery — a crash mid-delete leaves the original
-    index readable): remaining band rows re-partitioned by band_idx,
-    guard counts RECOMPUTED from the surviving rows per (band_idx,
-    band_hash, _batch), meta/batch markers copied through, zero-count
-    sentinels re-seeded per marked batch."""
-    import shutil
-
-    from etl_apache_kafka_python_doker_aws_spark.plans.merge import (
-        _recover,
-        _swap_in,
-    )
-
-    _recover(path)
-    full = spark.read.parquet(path)
-    _, drop, _ = _retraction_forms(full, ids, "minhash_index_delete")
-    remaining = drop(full)
-    before = full.count()
-    staging = path.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    remaining.write.partitionBy("band_idx").parquet(staging)
-    import glob
-    import os
-
-    if not glob.glob(os.path.join(staging, "**", "*.parquet"), recursive=True):
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ValueError(
-            f"minhash_index_delete: deleting these ids would EMPTY the "
-            f"index at {path} — an empty parquet dir cannot be read back; "
-            "remove the index path instead (live index left untouched)"
-        )
-    survivors = spark.read.parquet(staging)
-    counts = survivors.groupBy("band_idx", "band_hash", "_batch").agg(
-        F.count("*").alias("cnt")
-    ).select("band_idx", "band_hash", "cnt", "_batch")
-    sentinels = tiny_rows_df(
-        spark,
-        [(-1, 0, 0, b) for b in minhash_index_batches(spark, path)],
-        "band_idx int, band_hash long, cnt long, _batch string",
-    )
-    counts.unionByName(sentinels).write.parquet(f"{staging}/{_COUNTS_DIR}")
-    for side in (_META_DIR, _BATCH_DIR):
-        shutil.copytree(f"{path}/{side}", f"{staging}/{side}")
-    after = survivors.count()
-    _swap_in(staging, path)
-    return before - after

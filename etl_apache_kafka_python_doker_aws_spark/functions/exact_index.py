@@ -20,7 +20,10 @@ lives):
                         so nothing corpus-sized shuffles per batch at
                         any index size.
 * ``<t>_meta``        — pinned bucket count (appends into a different
-                        bucketing would silently break co-location).
+                        bucketing would silently break co-location),
+                        payload schema and ``layout_version`` — the
+                        meta reader refuses any other layout (see
+                        ``dedup_index`` "Layout contract").
 * ``<t>_batches``     — (batch_id, seq) markers, written LAST per
                         append (the commit marker; redelivery of a
                         marked batch_id is rejected loudly).
@@ -41,7 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    LAYOUT_VERSION,
     _apply_tombstones,
+    _check_layout,
     _drop_table_and_location,
     _marker_seq_join,
     _pinned_payloads,
@@ -58,12 +63,14 @@ from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
 
 def sha_table_meta(spark: SparkSession, table: str) -> dict | None:
     """Pinned bucket count (+ r15 payload schema), or None if the
-    index doesn't exist yet."""
+    index doesn't exist yet; raises on a meta without the current
+    ``layout_version``."""
     if not _table_exists(spark, f"{table}_meta"):
         return None
     row = spark.table(f"{table}_meta").first()
     if row is None:
         return None
+    _check_layout(row, f"exact index table {table}")
     meta = {"buckets": int(row.buckets)}
     meta["payload_cols"] = (
         list(row.payload_cols)
@@ -155,7 +162,7 @@ def sha_table_append(
     pay = _pinned_payloads(df, meta, payload_cols, "sha_table_append",
                            _RESERVED_SHA_COLS)
     if meta is None:
-        mrow = {"buckets": buckets}
+        mrow = {"buckets": buckets, "layout_version": LAYOUT_VERSION}
         if pay:
             mrow["payload_cols"] = pay
         tiny_rows_df(spark, [mrow]).coalesce(1).write.mode(

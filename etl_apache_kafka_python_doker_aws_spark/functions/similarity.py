@@ -446,12 +446,18 @@ def _model_key(values) -> str:
     return h.hexdigest()
 
 
+_LITERAL_FALLBACK_WARNED = False
+
+
 def _literal_col(values: list) -> Column | None:
     """Build the single-``Literal`` Column for a non-empty depth-1 or
     depth-2 float table via the classic py4j surface; None when the
     shape or the session doesn't support it (caller falls back to the
     SQL-text form). The ByteBuffer hop moves each row in ONE py4j
-    transfer instead of one call per scalar."""
+    transfer instead of one call per scalar. A py4j failure on a live
+    session also falls back, with a RuntimeWarning once per process —
+    the SQL-text form is correct but re-analyzes ~n_elements literal
+    nodes per composition step, so the slowdown must not be silent."""
     import struct as _struct
 
     from pyspark.sql import SparkSession
@@ -489,7 +495,18 @@ def _literal_col(values: list) -> Column | None:
             return None
         lit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(data, dt)
         return Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(lit))
-    except Exception:
+    except Exception as e:
+        global _LITERAL_FALLBACK_WARNED
+        if not _LITERAL_FALLBACK_WARNED:
+            import warnings
+
+            _LITERAL_FALLBACK_WARNED = True
+            warnings.warn(
+                f"_literal_col: single-Literal model path unavailable ({e!r}); "
+                "falling back to the slower SQL-text model literal",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return None
 
 

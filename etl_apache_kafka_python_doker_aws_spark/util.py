@@ -77,10 +77,12 @@ def sidecar_json_rows(spark, path: str, with_file: bool = False) -> list | None:
     r12): absent dir (or only write-temporary litter) → None; any error
     reading an EXISTING file propagates. Rows come back as
     ``pyspark.sql.Row`` objects (attribute access + ``__fields__``,
-    matching what ``spark.read.json(...).collect()`` returned) — a
-    field missing from one file's rows is simply absent from those
-    rows' ``__fields__`` (callers already guard with ``in
-    r.__fields__``, the pre-r9/pre-r15 marker-evolution contract).
+    matching what ``spark.read.json(...).collect()`` returned), one per
+    JSON line, carrying exactly the fields that line holds. Each index
+    tier has one sidecar layout, stamped with ``layout_version`` in its
+    meta row; the tier's meta reader checks the stamp
+    (``dedup_index._check_layout``), so marker and tally readers can
+    rely on the current fields being present.
     ``with_file=True`` adds a ``_f`` field holding the source file URI
     (the ``input_file_name()`` replacement the dead-tally resolver
     keys on). Only for BOUNDED sidecars — data-sized frames keep the

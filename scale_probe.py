@@ -254,13 +254,13 @@ def main() -> None:
     batch1pct_query_sec = round(time.time() - t0, 1)
 
     # ANN serving probe (round 9, VERDICT r8 #1): the persisted-index
-    # point lookup at probe scale, both refine-tier shapes — PRUNED
-    # (r9 _vbucket layout: shortlist ids collected and pushed as a
-    # partition-pruned scan) vs the r8 JOIN shape (flat tier streamed
-    # through a broadcast join; still the fallback for legacy indexes
-    # and beyond-_MAX_PUSHED_IDS candidate sets). The gap here is the
-    # per-search refine-tier read cost; at 10⁹ vectors the join shape
-    # reads the full 512 B/vec cold tier per search batch.
+    # point lookup at probe scale, both refine-tier read shapes — PRUNED
+    # (shortlist ids collected and pushed as a partition-pruned scan)
+    # vs the streaming JOIN (the whole tier streamed through a
+    # broadcast join; what prune="auto" picks below _PRUNE_MIN_ROWS).
+    # The gap here is the per-search refine-tier read cost; at 10⁹
+    # vectors the join shape reads the full 512 B/vec cold tier per
+    # search batch.
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
         ann_index_build,
         ann_index_search,
@@ -278,14 +278,14 @@ def main() -> None:
     ).localCheckpoint(eager=True)
     ann_q = emb.filter(F.col("vec_id") < 10)
     ann_times: dict[str, float] = {}
-    for tag, vb in (("pruned", 64), ("join", None)):
+    for tag in ("pruned", "join"):
         apath = os.path.join(probe_dir, f"ann_probe_{tag}")
         shutil.rmtree(apath, ignore_errors=True)
         t0 = time.time()
         ann_index_build(
             emb, "vec_id", "embedding", apath, dim=64, n_cells=64,
             n_subspaces=8, n_centroids=32, train_fraction=0.05,
-            vec_buckets=vb,
+            vec_buckets=64,
         )
         ann_times[f"{tag}_build_sec"] = round(time.time() - t0, 1)
         # prune forced per leg (r10): prune="auto" would pick the join

@@ -14,6 +14,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from etl_apache_kafka_python_doker_aws_spark import get_spark  # noqa: E402
 from etl_apache_kafka_python_doker_aws_spark.catalog import TABLES  # noqa: E402
 
+
+def _half_host_memory() -> str:
+    """Half the host's RAM as the test JVM's heap cap. ``get_spark``
+    defaults to a 48g driver; on a smaller host G1 grows the heap toward
+    that -Xmx instead of collecting, until the kernel OOM killer ends
+    the JVM and every later test fails on a dead py4j socket."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(2, min(48, ram // 2**31))}g"
+
+
+os.environ.setdefault("SPARK_DRIVER_MEMORY", _half_host_memory())
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 

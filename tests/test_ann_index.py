@@ -391,50 +391,6 @@ def test_rebuild_retrains_preserves_lineage(spark, tmp_path):
         ann_index_rebuild(spark, path, new)
 
 
-def test_rebuild_upgrades_legacy_refine_tier(spark, tmp_path):
-    """A pre-r9 index (no vec_buckets in meta → flat refine tier, search
-    falls back to the unpruned broadcast join) rebuilds into the
-    bucketed layout by default — rebuild IS the upgrade path."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
-        ann_index_rebuild,
-    )
-
-    corpus, rows = _corpus(spark)
-    path = str(tmp_path / "ann_legacy")
-    ann_index_build(corpus, "vec_id", "embedding", path, dim=16,
-                    n_cells=4, n_subspaces=4, n_centroids=8)
-    # simulate the pre-r9 layout: strip vec_buckets from meta (rewrite
-    # through Spark — an in-place file edit breaks the .crc sidecar)
-    # and flatten the refine tier
-    import shutil
-
-    vecs = spark.read.parquet(f"{path}/_graft_vectors").select("_id", "_v")
-    vecs.write.mode("overwrite").parquet(str(tmp_path / "flat_vecs"))
-    shutil.rmtree(f"{path}/_graft_vectors")
-    spark.read.parquet(str(tmp_path / "flat_vecs")).write.parquet(
-        f"{path}/_graft_vectors")
-    m = ann_index_meta(spark, path)
-    m.pop("vec_buckets")
-    m.pop("vec_batch")  # a true pre-r9 index predates BOTH fields
-    # meta() surfaces payload_cols as [] for pre-r15 indexes — pop it
-    # before the createDataFrame round-trip (an empty list infers as
-    # array<null> and fails; a true legacy meta predates the field)
-    m.pop("payload_cols")
-    spark.createDataFrame([m]).coalesce(1).write.mode("overwrite").json(
-        f"{path}/_graft_meta")
-    assert ann_index_meta(spark, path)["vec_buckets"] is None
-    assert ann_index_meta(spark, path)["vec_batch"] is False
-
-    new = str(tmp_path / "ann_upgraded")
-    ann_index_rebuild(spark, path, new)
-    assert ann_index_meta(spark, new)["vec_buckets"] == 64
-    import os
-    assert any(d.startswith("_vbucket=")
-               for d in os.listdir(f"{new}/_graft_vectors"))
-    q = corpus.filter("vec_id = 0")
-    assert ann_index_search(q, new, k=3, n_probe=4, shortlist=20).count() == 3
-
-
 def test_pushed_ids_gate_switches_to_bucket_whitelist(spark, tmp_path,
                                                       monkeypatch):
     """The full id push is gated on the MATERIALIZED candidate count ≤

@@ -1,10 +1,9 @@
 """ANN-index tombstone retraction (r12, VERDICT r11 #1): seq-scoped
 sidecar deletes mirroring the band tier's r11 pattern — re-append
 semantics, live-size accounting, the auto-prune flip (VERDICT r11 #3),
-corpus-scaled vec_buckets (VERDICT r11 #2), the legacy fallback, and
-the enumerated crash-window states."""
+corpus-scaled vec_buckets (VERDICT r11 #2), and the enumerated
+crash-window states."""
 
-import json
 import os
 import shutil
 
@@ -88,14 +87,13 @@ def test_delete_accounting_and_idempotence(spark, tmp_path):
     0-row no-op; the live-size statistic (markers − dead tally) tracks
     the truth without any corpus scan (VERDICT r11 #3)."""
     corpus, rows, path = _build(spark, tmp_path)
-    meta = ann_index_meta(spark, path)
-    assert _ann_live_size(spark, path, meta) == 60
+    assert _ann_live_size(spark, path) == 60
     assert ann_index_delete(spark, path, [3, 4, 5]) == 3
     assert _ann_dead_total(spark, path) == 3
-    assert _ann_live_size(spark, path, meta) == 57
+    assert _ann_live_size(spark, path) == 57
     # already-tombstoned + unknown ids: nothing live matches
     assert ann_index_delete(spark, path, [3, 4, 999]) == 0
-    assert _ann_live_size(spark, path, meta) == 57
+    assert _ann_live_size(spark, path) == 57
     # NULL ids rejected loudly in both request forms (shared
     # _retraction_forms contract)
     with pytest.raises(ValueError, match="None"):
@@ -106,11 +104,11 @@ def test_delete_accounting_and_idempotence(spark, tmp_path):
     # DataFrame request form works and casts to the index id type
     ids_df2 = spark.createDataFrame([(6,), (7,)], "vec_id int")
     assert ann_index_delete(spark, path, ids_df2) == 2
-    assert _ann_live_size(spark, path, meta) == 55
+    assert _ann_live_size(spark, path) == 55
     # compact folds everything and resets the accounting to markers-only
     assert ann_index_compact(spark, path) == 5
     assert _ann_dead_total(spark, path) == 0
-    assert _ann_live_size(spark, path, meta) == 55
+    assert _ann_live_size(spark, path) == 55
     assert spark.read.parquet(path).count() == 55
 
 
@@ -183,14 +181,13 @@ def test_crash_windows_heal(spark, tmp_path):
     (c) tombstones naming already-folded rows → compact's early exit
     drops the sidecars without rewriting anything."""
     corpus, rows, path = _build(spark, tmp_path)
-    meta = ann_index_meta(spark, path)
 
     # (a) dead tally stranded after a kill between compact's two drops
     spark.createDataFrame([{"del_seq": 1, "n_dead": 7}]).coalesce(1) \
         .write.mode("append").json(f"{path}/_graft_dead")
-    assert _ann_live_size(spark, path, meta) == 53  # understated (window)
+    assert _ann_live_size(spark, path) == 53  # understated (window)
     assert ann_index_compact(spark, path) == 0
-    assert _ann_live_size(spark, path, meta) == 60  # healed
+    assert _ann_live_size(spark, path) == 60  # healed
 
     # (b) compact killed between the marker-dir renames: only .old left
     marker_dir = os.path.join(path, "_graft_batches")
@@ -254,14 +251,13 @@ def test_compact_rerun_heals_stale_markers(spark, tmp_path):
     shutil.copytree(tombs, f"{path}/_graft_tombstones")
     shutil.copytree(dead, f"{path}/_graft_dead")
     assert _index_size_from_markers(_ann_marker_rows(spark, path)) == 60
-    meta = ann_index_meta(spark, path)
-    assert _ann_live_size(spark, path, meta) == 57  # tally still subtracts
+    assert _ann_live_size(spark, path) == 57  # tally still subtracts
     assert ann_index_compact(spark, path) == 0  # the zero-dead early exit
     assert not os.path.exists(f"{path}/_graft_tombstones")
     assert not os.path.exists(f"{path}/_graft_dead")
     assert _index_size_from_markers(_ann_marker_rows(spark, path)) == 57, \
         "early exit must heal the stale markers before dropping the tally"
-    assert _ann_live_size(spark, path, meta) == 57
+    assert _ann_live_size(spark, path) == 57
 
 
 def test_compact_sweeps_unmarked_crash_append_orphans(spark, tmp_path):
@@ -355,48 +351,12 @@ def test_auto_vec_buckets_scaling(spark, tmp_path):
     path = str(tmp_path / "ann_auto")
     ann_index_build(corpus, "vec_id", "embedding", path, dim=16,
                     n_cells=4, n_subspaces=4, n_centroids=8)  # default auto
-    meta = ann_index_meta(spark, path)
-    assert meta["vec_buckets"] == 64 and meta["vec_batch"] is True
+    assert ann_index_meta(spark, path)["vec_buckets"] == 64
     # rebuild with auto re-derives from the live corpus (still 64 here,
     # but the path exercises the derivation)
     new = str(tmp_path / "ann_auto2")
     ann_index_rebuild(spark, path, new, vec_buckets="auto")
     assert ann_index_meta(spark, new)["vec_buckets"] == 64
-
-
-def test_legacy_index_falls_back_to_physical_delete(spark, tmp_path):
-    """A pre-r12 index (no vec_batch in meta — its refine tier lacks
-    per-row lineage) keeps the r9-r11 localized dir rewrite: rows are
-    physically gone after the delete and no tombstone sidecar appears."""
-    corpus, rows, path = _build(spark, tmp_path, name="ann_legacy")
-    # simulate a pre-r12 index: strip the flag from meta and the _batch
-    # column from the refine tier (exactly what an r11 build wrote)
-    meta_dir = os.path.join(path, "_graft_meta")
-    fn = [f for f in os.listdir(meta_dir) if f.endswith(".json")][0]
-    with open(os.path.join(meta_dir, fn)) as fh:
-        m = json.loads(fh.read())
-    m.pop("vec_batch", None)
-    with open(os.path.join(meta_dir, fn), "w") as fh:
-        fh.write(json.dumps(m))
-    for f in os.listdir(meta_dir):  # stale checksums would fail the read
-        if f.endswith(".crc"):
-            os.remove(os.path.join(meta_dir, f))
-    vec_dir = f"{path}/_graft_vectors"
-    slim = spark.read.parquet(vec_dir).select("_id", "_v", "_vbucket")
-    tmp_vec = str(tmp_path / "vecslim")
-    slim.repartition(F.col("_vbucket")).sortWithinPartitions("_vbucket", "_id") \
-        .write.partitionBy("_vbucket").parquet(tmp_vec)
-    shutil.rmtree(vec_dir)
-    os.rename(tmp_vec, vec_dir)
-
-    assert ann_index_meta(spark, path)["vec_batch"] is False
-    assert ann_index_delete(spark, path, [5]) == 1
-    assert not os.path.exists(os.path.join(path, "_graft_tombstones"))
-    assert spark.read.parquet(path).filter(F.col("_id") == 5).count() == 0
-    assert spark.read.parquet(vec_dir).filter(F.col("_id") == 5).count() == 0
-    got = ann_index_search(corpus.filter("vec_id = 6"), path, k=10,
-                           n_probe=4, shortlist=30).collect()
-    assert got and all(r.neighbor_id != 5 for r in got)
 
 
 def test_dead_tally_folds_after_many_small_deletes(spark, tmp_path, monkeypatch):
@@ -426,7 +386,7 @@ def test_dead_tally_folds_after_many_small_deletes(spark, tmp_path, monkeypatch)
     hits = ann_index_search(q, path, k=3, n_probe=4, shortlist=20).collect()
     assert all(not (r.neighbor_id == 2 and r.dist == 0.0) for r in hits)
     # live-size statistic reads the folded tally
-    assert _ann_live_size(spark, path, ann_index_meta(spark, path)) == 60 - 8
+    assert _ann_live_size(spark, path) == 60 - 8
 
 
 def test_delete_list_form_plans_pushed_id_filter(spark, tmp_path):
@@ -434,10 +394,10 @@ def test_delete_list_form_plans_pushed_id_filter(spark, tmp_path):
     the `_id IN (…)` predicate to the parquet reader (row-group skip);
     the DataFrame form legitimately plans a LeftSemi join instead. Pins
     the exact composition ann_index_delete builds (_retraction_forms →
-    _with_seq)."""
+    _ann_live_rows)."""
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
+        _ann_live_rows,
         _ann_marker_rows,
-        _with_seq,
     )
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
         _retraction_forms,
@@ -448,7 +408,7 @@ def test_delete_list_form_plans_pushed_id_filter(spark, tmp_path):
     markers = _ann_marker_rows(spark, path)
     hit, _, gone = _retraction_forms(codes, [1, 2, 3], "test")
     assert gone is None, "list form must keep the pushed-In shape"
-    live_hit = _with_seq(hit, markers, "inner")
+    live_hit = _ann_live_rows(hit, None, markers)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -457,9 +417,10 @@ def test_delete_list_form_plans_pushed_id_filter(spark, tmp_path):
 
 
 def test_rebuild_refuses_stripped_refine_lineage(spark, tmp_path):
-    """ADVICE r12: meta claims vec_batch but the refine tier lacks
-    _batch — rebuild's min(_v) fold could silently carry a RETRACTED
-    embedding forward; the inconsistent layout must raise, not degrade."""
+    """ADVICE r12: the layout stamp promises per-row lineage but the
+    refine tier lacks _batch — rebuild's min(_v) fold could silently
+    carry a RETRACTED embedding forward; the inconsistent layout must
+    raise, not degrade."""
     import shutil as _sh
 
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
@@ -526,38 +487,6 @@ def test_filtered_search_null_and_empty_allowed(spark, tmp_path):
     assert out.count() == 0
 
 
-def test_compact_drops_stale_fold_twins(spark, tmp_path):
-    """review r13 (the r11 'drop ALL twins upfront' rule on the dead
-    tally): a fold killed before its swap leaves a complete
-    _graft_dead.staging twin holding the PRE-compact tally; compact
-    must drop the twins too, or the next write entry point's
-    _ann_recover resurrects the stale tally — live size understated,
-    spurious auto-compacts, false 'would EMPTY' refusals."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
-        _ann_recover,
-    )
-
-    corpus, rows, path = _build(spark, tmp_path)
-    assert ann_index_delete(spark, path, [0, 1, 2], compact_threshold=2.0) == 3
-    dead_dir = os.path.join(path, "_graft_dead")
-    # simulate a fold crash: a COMPLETE staging twin with a stale total
-    from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
-
-    tiny_rows_df(spark, [{"del_seq": 0, "n_dead": 999}]).coalesce(1).write.mode(
-        "overwrite"
-    ).json(dead_dir + ".staging")
-    assert ann_index_compact(spark, path) == 3
-    for suffix in ("", ".staging", ".old"):
-        assert not os.path.exists(dead_dir + suffix), suffix
-    # the next write entry point's recover must find nothing to restore
-    _ann_recover(path)
-    assert not os.path.exists(dead_dir)
-    assert _ann_dead_total(spark, path) == 0
-    # accounting stays truthful afterwards
-    assert ann_index_delete(spark, path, [3], compact_threshold=2.0) == 1
-    assert _ann_dead_total(spark, path) == 1
-
-
 def test_dead_tally_fold_on_nonfile_scheme(spark, tmp_path, monkeypatch):
     """VERDICT r13 #2: the r13 fold was gated to local paths, so an
     object-store index re-accrued one tally file per delete — on exactly
@@ -593,7 +522,7 @@ def test_dead_tally_fold_on_nonfile_scheme(spark, tmp_path, monkeypatch):
     q = corpus.filter("vec_id = 2")
     hits = ann_index_search(q, path, k=3, n_probe=4, shortlist=20).collect()
     assert all(not (r.neighbor_id == 2 and r.dist == 0.0) for r in hits)
-    assert _ann_live_size(spark, path, ann_index_meta(spark, path)) == 60 - 6
+    assert _ann_live_size(spark, path) == 60 - 6
 
 
 def test_fold_carries_forward_concurrent_increment(spark, tmp_path):

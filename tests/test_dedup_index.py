@@ -33,32 +33,6 @@ def _frames(spark):
     return df.filter("doc_id < 100"), df.filter("doc_id >= 100"), df
 
 
-def _strip_counted_flags(path):
-    """Rewrite batch markers WITHOUT the r9 ``counted`` field — what a
-    genuine pre-r9 index looks like (the flag is the metadata-read
-    proof that a batch's guard counts are on disk; tests simulating
-    older indexes must not leave it behind)."""
-    import glob
-    import json
-    import os
-
-    for f in glob.glob(f"{path}/_graft_batches/*.json"):
-        lines = []
-        with open(f) as fh:
-            for line in fh:
-                if line.strip():
-                    row = json.loads(line)
-                    row.pop("counted", None)
-                    lines.append(json.dumps(row))
-        with open(f, "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-        # the local Hadoop FS keeps .crc sidecars — a rewritten file
-        # with a stale checksum fails the read with ChecksumException
-        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-
-
 def test_incremental_pairs_tile_the_whole_corpus(spark, tmp_path):
     """batch-vs-index + within-batch pairs, unioned across batches,
     equal the from-scratch whole-corpus run (the losslessness
@@ -132,34 +106,6 @@ def test_index_meta_params_flow_into_dedup_batch(spark, tmp_path):
     p1 = minhash_index_dedup_batch(new, "doc_id", "text", path, batch_id="b1")
     got = {(r.id_a, r.id_b) for r in p1.collect()}
     assert (1, 101) in got and (102, 103) in got
-
-
-def test_incomplete_counts_sidecar_falls_back(spark, tmp_path):
-    """Migration/crash guard (r8 review): a _graft_counts sidecar that
-    is missing counts for any MARKED batch (pre-r8 index appended with
-    current code) must NOT be trusted — summing it would under-count
-    bucket totals and re-open the m² blowup the skew cap exists to
-    bound. The query falls back to the one-scan recompute."""
-    import shutil
-
-    txt = "bright vixens jump dozy fowl quack together loudly"
-    b0 = spark.createDataFrame([(i, txt) for i in range(3)],
-                               "doc_id long, text string")
-    b1 = spark.createDataFrame([(10, txt)], "doc_id long, text string")
-    path = str(tmp_path / "idx")
-    minhash_index_append(b0, "doc_id", "text", path, batch_id="b0")
-    shutil.rmtree(f"{path}/_graft_counts")  # simulate a pre-r8 append:
-    _strip_counted_flags(path)  # ...whose markers predate the r9 flag
-    minhash_index_append(b1, "doc_id", "text", path, batch_id="b1")
-    # bucket holds 4 identical docs > cap 3: with trusted-but-incomplete
-    # counts (b1 alone sums to 1) pairs would leak; the fallback sees 4
-    assert minhash_index_pairs_vs_batch(
-        spark, path, "b1", max_bucket_size=3
-    ).count() == 0
-    # and with the cap not binding the pairs are still produced
-    assert minhash_index_pairs_vs_batch(
-        spark, path, "b1", max_bucket_size=10
-    ).count() == 3
 
 
 def test_bucketed_table_form_matches_path_form(spark, tmp_path):
@@ -447,45 +393,55 @@ def test_delete_is_localized_untouched_dirs_byte_identical(spark, tmp_path):
     assert (102, 103) in got and all(104 not in p for p in got)
 
 
-def test_legacy_flat_index_delete_falls_back_to_full_rewrite(spark, tmp_path):
-    """A pre-r10 index (bgroups=None → flat band_idx layout) still
-    deletes correctly through the full staging rewrite, and its meta
-    keeps reading bgroups=None (appends never secretly migrate the
-    layout)."""
+def test_would_empty_probe_ignores_committer_litter(spark, tmp_path,
+                                                    monkeypatch):
+    """ADVICE r16: the would-EMPTY probe applies Spark's listing rule to
+    every path component under staging — a part file inside
+    ``_temporary/0/`` is invisible to a read, so an all-ids delete whose
+    staging holds only that litter is still refused, and the live index
+    stays byte-identical."""
     import os
 
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        minhash_index_delete,
-    )
+    from etl_apache_kafka_python_doker_aws_spark.functions import dedup_index
 
-    base, new, _ = _frames(spark)
+    base, _, _ = _frames(spark)
     path = str(tmp_path / "idx")
-    minhash_index_append(base, "doc_id", "text", path, batch_id="b0",
-                         bgroups=None)
-    assert minhash_index_meta(spark, path)["bgroups"] is None
-    # flat layout on disk: band_idx dirs with files directly inside
-    band_dirs = [d for d in os.listdir(path) if d.startswith("band_idx=")]
-    assert band_dirs
-    assert not any(
-        sub.startswith("_bgroup=")
-        for d in band_dirs
-        for sub in os.listdir(os.path.join(path, d))
-    )
-    # appends follow the pinned flat layout
-    minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
-    assert minhash_index_meta(spark, path)["bgroups"] is None
-    assert minhash_index_delete(spark, path, [104]) > 0
-    got = {(r.id_a, r.id_b) for r in
-           minhash_index_pairs_vs_batch(spark, path, "b1").collect()}
-    assert (1, 101) in got and all(104 not in p for p in got)
+    minhash_index_append(base, "doc_id", "text", path, batch_id="b0")
+    # the probe's verdicts on each listing-rule case
+    probe = str(tmp_path / "probe")
+    for rel, visible in (
+        ("_temporary/0/part-x.parquet", False),
+        (".hidden=1/part-x.parquet", False),
+        ("band_idx=0/_bgroup=3/part-x.parquet", True),
+    ):
+        os.makedirs(os.path.dirname(os.path.join(probe, rel)), exist_ok=True)
+        with open(os.path.join(probe, rel), "wb") as fh:
+            fh.write(b"PAR1")
+        assert dedup_index._has_visible_file(spark, probe) is visible, rel
+
+    real = dedup_index._has_visible_file
+
+    def planted(spark_, staging):
+        litter = os.path.join(staging, "_temporary", "0")
+        os.makedirs(litter, exist_ok=True)
+        with open(os.path.join(litter, "part-x.parquet"), "wb") as fh:
+            fh.write(b"PAR1")
+        return real(spark_, staging)
+
+    monkeypatch.setattr(dedup_index, "_has_visible_file", planted)
+    pre = _dir_snapshot(path)
+    with pytest.raises(ValueError, match="EMPTY"):
+        dedup_index.minhash_index_delete(
+            spark, path, [r.doc_id for r in base.collect()]
+        )
+    assert _dir_snapshot(path) == pre
 
 
 def test_relayout_migrates_flat_index_to_localized_deletes(spark, tmp_path):
-    """minhash_index_relayout (r10): the pre-r10 migration path — a flat
-    index re-partitions into band_idx/_bgroup at a fresh path with NO
-    retraining (stored signatures move verbatim), markers + counts
-    carried (redelivery rejected, guard still metadata-complete), pair
-    results identical, and the migrated index deletes LOCALIZED."""
+    """minhash_index_relayout: a bgroups 8 index re-partitions into
+    bgroups 16 at a fresh path with NO retraining (stored signatures
+    move verbatim), markers + counts carried (redelivery rejected),
+    pair results identical, and the relayout index deletes LOCALIZED."""
     import os
 
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
@@ -494,21 +450,32 @@ def test_relayout_migrates_flat_index_to_localized_deletes(spark, tmp_path):
     )
 
     base, new, _ = _frames(spark)
-    path = str(tmp_path / "flat")
+    path = str(tmp_path / "g8")
     minhash_index_append(base, "doc_id", "text", path, batch_id="b0",
-                         bgroups=None)
+                         bgroups=8)
     minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
     before = {(r.id_a, r.id_b) for r in
               minhash_index_pairs_vs_batch(spark, path, "b1").collect()}
 
-    migrated = str(tmp_path / "grouped")
-    minhash_index_relayout(spark, path, migrated, bgroups=8)
-    assert minhash_index_meta(spark, migrated)["bgroups"] == 8
-    assert any(
-        sub.startswith("_bgroup=")
+    migrated = str(tmp_path / "g16")
+    minhash_index_relayout(spark, path, migrated, bgroups=16)
+    assert minhash_index_meta(spark, migrated)["bgroups"] == 16
+    groups = {
+        int(sub.split("=", 1)[1])
         for d in os.listdir(migrated) if d.startswith("band_idx=")
         for sub in os.listdir(os.path.join(migrated, d))
-    )
+        if sub.startswith("_bgroup=")
+    }
+    assert groups and max(groups) < 16 and any(g >= 8 for g in groups)
+    # counts carried over verbatim (the guard sidecar is keyed on
+    # (band_idx, band_hash, _batch), independent of bgroups)
+    def counts(p):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(f"{p}/_graft_counts")
+            .select("band_idx", "band_hash", "cnt", "_batch").collect()
+        )
+
+    assert counts(migrated) == counts(path)
     after = {(r.id_a, r.id_b) for r in
              minhash_index_pairs_vs_batch(spark, migrated, "b1").collect()}
     assert after == before and (1, 101) in after
@@ -1135,13 +1102,10 @@ def test_filtered_pairs_both_tiers(spark, tmp_path):
 
 
 def test_filtered_pairs_skew_guard_uses_unfiltered_counts(spark, tmp_path):
-    """review r14: the skew-guard statistic must not drift between the
-    counts-sidecar path and the per_batch=None recompute fallback when
-    `allowed=` narrows the corpus — a bucket over the cap UNFILTERED
-    must stay dropped even if the filtered bucket would fit, on BOTH
-    paths (identical query, identical pair set)."""
-    import shutil as _sh
-
+    """review r14: the skew guard reads the UNFILTERED counts sidecar
+    when `allowed=` narrows the corpus — a bucket over the cap
+    UNFILTERED must stay dropped even if the filtered bucket would
+    fit."""
     # three verbatim copies share EVERY band bucket (count 3); cap 2
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"),
@@ -1157,14 +1121,6 @@ def test_filtered_pairs_skew_guard_uses_unfiltered_counts(spark, tmp_path):
         spark, path, "b0", max_bucket_size=2, allowed=allowed
     ).collect()
     assert got == [], got
-    # pre-r9 fallback (no counted flags, no counts sidecar): the
-    # recompute must count the UNFILTERED corpus too
-    _strip_counted_flags(path)
-    _sh.rmtree(f"{path}/_graft_counts")
-    got2 = minhash_index_pairs_vs_batch(
-        spark, path, "b0", max_bucket_size=2, allowed=allowed
-    ).collect()
-    assert got2 == [], got2
     # sanity: without the filter and a non-binding cap the pairs exist
     ref = minhash_index_pairs_vs_batch(
         spark, path, "b0", max_bucket_size=10
@@ -1395,38 +1351,3 @@ def test_dedup_batch_resume_both_tiers(spark, tmp_path):
             b1.limit(1), "doc_id", "text", tbl, batch_id="b1", resume=True
         )
     drop_minhash_table(spark, tbl)
-
-
-def test_resume_rejects_pre_r15_marker(spark, tmp_path):
-    """A pre-r15 marker (no n_rows field) cannot prove "same delivery"
-    — resume must raise rather than silently skip the append on
-    unprovable evidence."""
-    import glob
-    import json
-
-    b0, b1, full = _frames(spark)
-    path = str(tmp_path / "mh_resume_legacy")
-    minhash_index_append(b0, "doc_id", "text", path, batch_id="b0")
-    minhash_index_append(b1, "doc_id", "text", path, batch_id="b1")
-    # strip n_rows from the markers — the genuine pre-r15 shape (with
-    # the .crc sidecar removal the in-place edit requires)
-    import os
-
-    for f in glob.glob(f"{path}/_graft_batches/*.json"):
-        rows = []
-        with open(f) as fh:
-            for line in fh:
-                if line.strip():
-                    row = json.loads(line)
-                    row.pop("n_rows", None)
-                    rows.append(row)
-        with open(f, "w") as fh:
-            for row in rows:
-                fh.write(json.dumps(row) + "\n")
-        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-    with pytest.raises(ValueError, match="n_rows=None"):
-        minhash_index_dedup_batch(
-            b1, "doc_id", "text", path, batch_id="b1", resume=True
-        )
