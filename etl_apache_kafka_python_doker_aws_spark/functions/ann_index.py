@@ -116,7 +116,7 @@ from etl_apache_kafka_python_doker_aws_spark.functions.similarity import (
     _residual,
     _subspace_dists,
 )
-from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
+from etl_apache_kafka_python_doker_aws_spark.util import spark_hidden, tiny_rows_df
 
 _META_DIR = "_graft_meta"
 _BATCH_DIR = "_graft_batches"
@@ -292,7 +292,7 @@ def _dead_tally_files(spark: SparkSession, dead_dir: str) -> list[str]:
     return sorted(
         n
         for n in (st.getPath().getName() for st in fs.listStatus(jpath))
-        if not n.startswith(("_", "."))
+        if not spark_hidden(n)
     )
 
 

@@ -92,7 +92,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
+from etl_apache_kafka_python_doker_aws_spark.util import spark_hidden, tiny_rows_df
 
 from etl_apache_kafka_python_doker_aws_spark.functions.dedup import (
     banded_minhash_signatures,
@@ -1435,11 +1435,10 @@ def minhash_table_compact(spark: SparkSession, table: str) -> int:
 
 def _has_visible_file(spark: SparkSession, root: str) -> bool:
     """True iff some file under ``root`` is visible to a Spark read of
-    it. Visibility follows Spark's listing rule (shouldFilterOutPathName)
-    on EVERY path component under ``root``: ``.x`` is hidden, ``_x`` is
-    hidden unless it is a ``name=value`` partition dir — so a part file
-    inside committer litter (``_temporary/0/part-x``) is invisible,
-    while ``_bgroup=3/part-x`` is visible."""
+    it. Visibility follows Spark's listing rule (``util.spark_hidden``)
+    on EVERY path component under ``root`` — so a part file inside
+    committer litter (``_temporary/0/part-x``) is invisible, while
+    ``_bgroup=3/part-x`` is visible."""
     sc = spark.sparkContext
     jroot = sc._jvm.org.apache.hadoop.fs.Path(root)
     fs = jroot.getFileSystem(sc._jsc.hadoopConfiguration())
@@ -1447,11 +1446,7 @@ def _has_visible_file(spark: SparkSession, root: str) -> bool:
     it = fs.listFiles(jroot, True)  # recursive
     while it.hasNext():
         rel = it.next().getPath().toString()[len(prefix):]
-        if not any(
-            c.startswith(".") or (c.startswith("_") and "=" not in c)
-            for c in rel.split("/")
-            if c
-        ):
+        if not any(spark_hidden(c) for c in rel.split("/") if c):
             return True
     return False
 

@@ -147,8 +147,9 @@ def run_reference_pipeline(
     )
     deduped.write.mode("overwrite").parquet(processed_path)
 
-    # --- upload (S1 rescan→S5 export)
-    processed = spark.read.parquet(processed_path)
+    # --- upload (S1 rescan→S5 export). The schema is the one just
+    # written, so the re-read skips the footer-inference job.
+    processed = spark.read.schema(deduped.schema).parquet(processed_path)
     write_json_export(processed, export_path, single_file=False)
 
     exported = spark.read.schema(CUSTOMERS_WIRE_SCHEMA).json(export_path)

@@ -37,6 +37,20 @@ def day_bucket(c: Column | str) -> Column:
     return col.cast("date").cast("timestamp_ntz")
 
 
+def spark_hidden(name: str) -> bool:
+    """True iff Spark's file listing skips a path component called
+    ``name`` — ``HadoopFSUtils.shouldFilterOutPathName``, rule for rule:
+    ``.x`` and ``*._COPYING_`` are hidden; ``_x`` is hidden unless it is
+    a ``name=value`` partition dir or starts with ``_metadata`` /
+    ``_common_metadata`` (parquet summary files)."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return hidden and not name.startswith(("_common_metadata", "_metadata"))
+
+
 def sidecar_read(spark, path: str, fmt: str) -> DataFrame | None:
     """Read a CORRECTNESS sidecar (tombstones, batch markers),
     distinguishing ABSENT from UNREADABLE (review r12): the previous
@@ -56,7 +70,7 @@ def sidecar_read(spark, path: str, fmt: str) -> DataFrame | None:
     if not fs.exists(hpath):
         return None
     names = [st.getPath().getName() for st in fs.listStatus(hpath)]
-    if not any(not n.startswith(("_", ".")) for n in names):
+    if all(spark_hidden(n) for n in names):
         return None
     return spark.read.format(fmt).load(path)
 
@@ -99,8 +113,7 @@ def sidecar_json_rows(spark, path: str, with_file: bool = False) -> list | None:
     files = [
         st.getPath()
         for st in fs.listStatus(hpath)
-        if not st.isDirectory()
-        and not st.getPath().getName().startswith(("_", "."))
+        if not st.isDirectory() and not spark_hidden(st.getPath().getName())
     ]
     if not files:
         return None
@@ -160,6 +173,12 @@ def sidecar_json_append(spark, path: str, row: dict, name_hint: str = "row") -> 
     tmp = jpath_cls(f"{path}/.{fname}.tmp")
     final = jpath_cls(f"{path}/{fname}")
     success = jpath_cls(f"{path}/_SUCCESS")
+    out = fs.create(tmp, True)  # creates parent dirs like the committer
+    try:
+        data = (_json.dumps(row) + "\n").encode("utf-8")
+        out.write(bytearray(data))
+    finally:
+        out.close()
     # ADVICE r15: a kill between create and rename strands the dot-tmp
     # (plus its local .crc twin) FOREVER — marker dirs live for the
     # index lifetime and nothing else sweeps dot litter. Drop stale tmp
@@ -167,26 +186,20 @@ def sidecar_json_append(spark, path: str, row: dict, name_hint: str = "row") -> 
     # age gate keeps a CONCURRENT writer's in-flight tmp safe (uuid
     # names never collide, but its rename would fail if we deleted the
     # file under it); one hour is ~6 orders of magnitude past a tiny
-    # file's create→rename window. fs.delete on a ChecksumFileSystem
-    # removes the .crc twin with the file.
-    if fs.exists(dirp):
-        import time as _time
-
-        cutoff = (_time.time() - 3600) * 1000  # Hadoop mtimes are ms
-        for st in fs.listStatus(dirp):
-            n = st.getPath().getName()
-            if (
-                n.startswith(".")
-                and n.endswith(".tmp")
-                and st.getModificationTime() < cutoff
-            ):
-                fs.delete(st.getPath(), False)
-    out = fs.create(tmp, True)  # creates parent dirs like the committer
-    try:
-        data = (_json.dumps(row) + "\n").encode("utf-8")
-        out.write(bytearray(data))
-    finally:
-        out.close()
+    # file's create→rename window. "Now" is this append's own tmp mtime,
+    # so the age is measured on the FS clock that stamped the stale
+    # files, not the driver's (a remote store's clock can be skewed).
+    # fs.delete on a ChecksumFileSystem removes the .crc twin with the
+    # file.
+    cutoff = fs.getFileStatus(tmp).getModificationTime() - 3600 * 1000  # ms
+    for st in fs.listStatus(dirp):
+        n = st.getPath().getName()
+        if (
+            n.startswith(".")
+            and n.endswith(".tmp")
+            and st.getModificationTime() < cutoff
+        ):
+            fs.delete(st.getPath(), False)
     if not fs.exists(success):
         fs.create(success, True).close()
     if not fs.rename(tmp, final):

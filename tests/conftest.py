@@ -37,6 +37,21 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def jobs_during(spark):
+    """``jobs_during(fn)`` → ``(fn(), n)``, where ``n`` counts the Spark
+    jobs (outside any job group) that started while ``fn`` ran — e.g.
+    the eager jobs a DataFrame construction fires."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def _run(fn):
+        before = set(tracker.getJobIdsForGroup(None))
+        out = fn()
+        return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    return _run
+
+
+@pytest.fixture(scope="session")
 def build_query(spark):
     """Session-memoized query builder: ``build_query(name)`` returns the
     DataFrame ``QUERIES[name](spark, SF_SMOKE)``, built at most once per

@@ -426,7 +426,7 @@ def test_pushed_ids_gate_switches_to_bucket_whitelist(spark, tmp_path,
     assert key(df.collect()) == key(pruned)
 
 
-def test_prune_false_is_lazy_streaming_join(spark, tmp_path):
+def test_prune_false_is_lazy_streaming_join(spark, tmp_path, jobs_during):
     """``prune=False`` (r10): the composition-friendly escape hatch —
     no synchronous job at construction time (the pruned path
     localCheckpoints the shortlist eagerly), same results through the
@@ -439,12 +439,6 @@ def test_prune_false_is_lazy_streaming_join(spark, tmp_path):
                     n_cells=4, n_subspaces=4, n_centroids=8, vec_buckets=8)
     q = corpus.filter("vec_id < 3")
     pruned = ann_index_search(q, path, k=3, n_probe=4, shortlist=10).collect()
-
-    def jobs_during(fn):
-        tracker = spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup(None))
-        out = fn()
-        return out, len(set(tracker.getJobIdsForGroup(None)) - before)
 
     # both constructions pay the meta read; only prune=True additionally
     # materializes the shortlist (checkpoint + count [+ collect]) —
