@@ -8,8 +8,9 @@ redelivery.
 
 Index layout at ``path`` (``layout_version`` 1 — the only layout this
 module reads; ``ann_index_meta`` refuses a meta without the stamp, and
-such an index is rebuilt from source — the ``dedup_index`` "Layout
-contract"):
+such an index is rebuilt from source). Meta-last commit, batch markers,
+seq-scoped tombstones and the payload pin are the shared storage
+protocol in ``index_store``:
   * data rows, ``partitionBy("cell")`` parquet:
       (_id, _codes array<int>, _batch string[, payload cols...], cell)
     — the SCAN tier: n_subspaces small ints per vector (8 B at 8×32 vs
@@ -59,7 +60,7 @@ contract"):
     directories (a dir-proportional rewrite would pay ~n/4096 vectors
     per directory at 10⁹ scale for a 25-row GDPR request). Every read
     path anti-joins the tombstones out, seq-scoped against the batch
-    markers (``dedup_index._tombstone_join``: a row is dead iff its
+    markers (``index_store._tombstone_join``: a row is dead iff its
     batch was marked BEFORE the delete ran — a re-appended id lives
     while its retracted history stays dead). ``_graft_dead`` holds one
     tiny JSON tally per delete so live-size accounting (auto
@@ -95,17 +96,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-    LAYOUT_VERSION,
-    _check_layout,
+from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+    _BATCH_DIR,
+    _TOMB_DIR,
+    _append_marker,
+    _append_tombstones,
+    _dead_rows,
     _dir_swap,
+    _fs_nonempty,
+    _live_rows,
     _marker_rows,
-    _marker_seq_join,
+    _new_batch_seq,
+    _pinned_payloads,
+    _read_meta,
     _recover_partition_dirs,
     _require_local_path,
     _resume_skips_append,
     _retraction_forms,
-    _tombstone_join,
+    _tombstones,
+    _write_meta,
 )
 from etl_apache_kafka_python_doker_aws_spark.functions.similarity import (
     _BCAST_MAX_CELLS,
@@ -118,10 +127,7 @@ from etl_apache_kafka_python_doker_aws_spark.functions.similarity import (
 )
 from etl_apache_kafka_python_doker_aws_spark.util import spark_hidden, tiny_rows_df
 
-_META_DIR = "_graft_meta"
-_BATCH_DIR = "_graft_batches"
 _VEC_DIR = "_graft_vectors"
-_TOMB_DIR = "_graft_tombstones"
 _DEAD_DIR = "_graft_dead"
 # fold the per-delete tally files into one row once this many pile up
 # (VERDICT r12 #6: auto-shortlist searches list this dir per call)
@@ -203,61 +209,30 @@ _PRUNE_MIN_ROWS = 4_000_000
 
 def ann_index_meta(spark: SparkSession, path: str) -> dict | None:
     """Read params + trained models, or None if no index at ``path``;
-    raises on a meta without the current ``layout_version``.
-    Driver-side Hadoop-FS read (r15, ``util.sidecar_json_rows``): the
-    meta dir is ONE small JSON row, and the old ``spark.read.json +
-    first()`` paid two Spark jobs (schema inference + fetch) on every
-    search/append/delete call — a fixed scheduling tax, not data work."""
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_rows
-
-    try:
-        rows = sidecar_json_rows(spark, f"{path}/{_META_DIR}")
-    except Exception:
-        return None
-    row = rows[0] if rows else None
+    raises on an unreadable meta or one without the current
+    ``layout_version`` (``index_store._read_meta`` — a driver-side FS
+    read of ONE small JSON row, no Spark job)."""
+    row = _read_meta(spark, path)
     if row is None:
         return None
-    _check_layout(row, f"ANN index at {path}")
-    return {
-        "dim": int(row.dim),
-        "n_cells": int(row.n_cells),
-        "n_subspaces": int(row.n_subspaces),
-        "n_centroids": int(row.n_centroids),
-        "seed": int(row.seed),
-        "residual": bool(row.residual),
-        "vec_buckets": int(row.vec_buckets),
-        # payload-less builds omit the field — read as [] ("no payload
-        # machinery" to every consumer)
-        "payload_cols": (
-            list(row.payload_cols)
-            if "payload_cols" in row.__fields__ and row.payload_cols
-            else []
-        ),
-        "centroids": [list(map(float, c)) for c in row.centroids],
-        "codebooks": [
-            [list(map(float, c)) for c in book] for book in row.codebooks
-        ],
+    meta = {
+        k: int(row[k])
+        for k in ("dim", "n_cells", "n_subspaces", "n_centroids", "seed",
+                  "vec_buckets")
     }
-
-
-def _fs_nonempty(spark: SparkSession, path: str) -> bool:
-    """True if ``path`` exists and holds anything — Hadoop FS API, so it
-    works on whatever filesystem the index targets."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    return fs.exists(hpath) and len(fs.listStatus(hpath)) > 0
-
-
-def _ann_marker_rows(spark: SparkSession, path: str) -> list:
-    """Raw batch-marker rows in append order (empty for a fresh index)
-    — the band tier's ``_marker_rows`` reader on this tier's marker
-    dir (same absent-vs-unreadable rule, no Spark job)."""
-    return _marker_rows(spark, f"{path}/{_BATCH_DIR}")
+    meta.update(
+        residual=bool(row["residual"]),
+        payload_cols=row["payload_cols"],
+        centroids=[list(map(float, c)) for c in row["centroids"]],
+        codebooks=[
+            [list(map(float, c)) for c in book] for book in row["codebooks"]
+        ],
+    )
+    return meta
 
 
 def ann_index_batches(spark: SparkSession, path: str) -> list[str]:
-    return [r.batch_id for r in _ann_marker_rows(spark, path)]
+    return [r.batch_id for r in _marker_rows(spark, path)]
 
 
 def _index_size_from_markers(markers: list) -> int:
@@ -436,72 +411,9 @@ def _ann_live_size(
     (review r12). Pass already-collected ``markers`` to skip a
     duplicate driver-side read."""
     n = _index_size_from_markers(
-        markers if markers is not None else _ann_marker_rows(spark, path)
+        markers if markers is not None else _marker_rows(spark, path)
     )
     return max(n - _ann_dead_total(spark, path), 0)
-
-
-def _ann_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The pending delete requests (``_id``, ``del_seq``), or None when
-    none are pending — compaction removes the sidecar whole, so its
-    absence is the common fast path (zero extra plan nodes). Absence is
-    an explicit existence check; a READ error on an existing sidecar
-    propagates (review r12 — swallowing it would silently serve
-    GDPR-retracted rows)."""
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_read
-
-    return sidecar_read(spark, f"{path}/{_TOMB_DIR}", "parquet")
-
-
-def _ann_apply_tombstones(
-    df: DataFrame, tomb: DataFrame | None, markers: list
-) -> DataFrame:
-    """Filter an index frame (codes or refine tier) to its LIVE rows
-    under the seq-scoped tombstone rule (``_tombstone_join``). The
-    batch→seq translation is the shared broadcast ``_marker_seq_join``,
-    never a literal ``create_map`` (a year of 15-min crawl snapshots is
-    ~35k markers). The anti-join's tombstone side is delete-request-
-    sized; the index itself never shuffles for retraction. Unmarked
-    (crashed-append) rows are KEPT — this is the read-path filter;
-    compaction is where they are swept (``_ann_live_rows``/
-    ``_ann_dead_rows``)."""
-    if tomb is None:
-        return df
-    return _tombstone_join(
-        _marker_seq_join(df, markers, "left"), tomb, "left_anti"
-    )
-
-
-def _ann_live_rows(
-    df: DataFrame, tomb: DataFrame | None, markers: list
-) -> DataFrame:
-    """The COMPACTION/REBUILD keep set (and delete's accounting set):
-    marked AND not seq-scoped-tombstoned. Unlike
-    ``_ann_apply_tombstones`` (the read-path filter, which keeps
-    unmarked rows so a crashed append degrades to serving its orphans
-    rather than losing data mid-recovery), this DROPS unmarked
-    crash-append orphans — compact/rebuild are where they are swept
-    (the table-tier rule, review r12: orphans have no marker seq, so no
-    tombstone can ever name them; without the sweep a GDPR request
-    against them had no supported removal path)."""
-    out = _marker_seq_join(df, markers, "inner")
-    if tomb is None:
-        return out.drop("_seq")
-    return _tombstone_join(out, tomb, "left_anti")
-
-
-def _ann_dead_rows(
-    df: DataFrame, tomb: DataFrame | None, markers: list
-) -> DataFrame:
-    """Complement of ``_ann_live_rows``: seq-scoped tombstoned rows
-    PLUS unmarked crash-append orphans (disjoint sets — a NULL seq
-    never satisfies ``_seq < del_seq``). Feeds compaction's affected-
-    directory histograms."""
-    seqd = _marker_seq_join(df, markers, "left")
-    unmarked = seqd.filter(F.col("_seq").isNull()).drop("_seq")
-    if tomb is None:
-        return unmarked
-    return _tombstone_join(seqd, tomb, "left_semi").unionByName(unmarked)
 
 
 def _ann_recover(path: str) -> None:
@@ -649,23 +561,8 @@ def ann_index_build(
 
     spark = corpus.sparkSession
     _check_vec_buckets(vec_buckets, "ann_index_build")
-    payload_cols = list(payload_cols or [])
-    bad = [c for c in payload_cols if c in _RESERVED_COLS]
-    if bad:
-        raise ValueError(
-            f"ann_index_build: payload column(s) {bad} shadow index-owned "
-            f"names — rename them (reserved: {sorted(_RESERVED_COLS)})"
-        )
-    if len(set(payload_cols)) != len(payload_cols):
-        raise ValueError(
-            f"ann_index_build: duplicate payload column names {payload_cols}"
-        )
-    missing = [c for c in payload_cols if c not in corpus.columns]
-    if missing:
-        raise ValueError(
-            f"ann_index_build: payload column(s) {missing} not in corpus "
-            f"columns {corpus.columns}"
-        )
+    payload_cols = _pinned_payloads(corpus, None, payload_cols,
+                                    "ann_index_build", _RESERVED_COLS)
     if ann_index_meta(spark, path) is not None:
         raise ValueError(
             f"ann_index_build: index already exists at {path} — appends "
@@ -694,7 +591,6 @@ def ann_index_build(
         )
     codebooks = _pq_train(train_in, sub, n_subspaces, n_centroids, seed, train_fraction)
     meta = {
-        "layout_version": LAYOUT_VERSION,
         "dim": dim,
         "n_cells": n_cells,
         "n_subspaces": n_subspaces,
@@ -702,19 +598,14 @@ def ann_index_build(
         "seed": seed,
         "residual": residual,
         "vec_buckets": vec_buckets,
+        "payload_cols": payload_cols,
         "centroids": centroids,
         "codebooks": codebooks,
     }
-    if payload_cols:
-        # omitted when empty (an empty list infers as an untyped array
-        # on write): ann_index_meta reads an absent field as []
-        meta["payload_cols"] = payload_cols
     _write_batch(corpus, id_col, vec_col, path, meta, batch_id, seq=0, wide=True)
     # meta LAST: its presence is the build's commit marker — search and
     # retry-build treat meta-less leftovers as a failed build, loudly
-    tiny_rows_df(spark, [meta]).coalesce(1).write.mode("overwrite").json(
-        f"{path}/{_META_DIR}"
-    )
+    _write_meta(spark, meta, path)
 
 
 def ann_index_append(
@@ -749,29 +640,17 @@ def ann_index_append(
     meta = ann_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"ann_index_append: no index at {path} — build first")
-    missing = [
-        c for c in (meta.get("payload_cols") or []) if c not in new_df.columns
-    ]
-    if missing:
-        # wrong-schema appends fail LOUDLY (r15): a silent NULL payload
-        # would make every hit from this batch invisible to where=
-        # predicates and doc-less grouped retrieval
-        raise ValueError(
-            f"ann_index_append: index at {path} pins payload column(s) "
-            f"{meta['payload_cols']} but the batch lacks {missing} — "
-            "every append must carry the build-time payload schema"
-        )
+    # wrong-schema appends fail LOUDLY (r15): a silent NULL payload
+    # would make every hit from this batch invisible to where=
+    # predicates and doc-less grouped retrieval
+    _pinned_payloads(new_df, meta, None, "ann_index_append", _RESERVED_COLS)
     # heal a compact killed mid-marker-swap BEFORE reading the batch
     # list: a missing marker dir would read as "no batches" and accept
     # a duplicate batch_id (r12 crash-window table)
     _ann_recover(path)
-    existing = ann_index_batches(spark, path)
-    if batch_id in existing:
-        raise ValueError(
-            f"ann_index_append: batch_id {batch_id!r} already appended to "
-            f"{path} — use a fresh batch_id per delivery"
-        )
-    _write_batch(new_df, id_col, vec_col, path, meta, batch_id, seq=len(existing))
+    seq = _new_batch_seq(_marker_rows(spark, path), batch_id,
+                         "ann_index_append", path)
+    _write_batch(new_df, id_col, vec_col, path, meta, batch_id, seq=seq)
 
 
 def ann_index_rebuild(
@@ -836,7 +715,6 @@ def ann_index_rebuild(
         )
     _ann_recover(path)
     meta = {
-        "layout_version": LAYOUT_VERSION,
         "dim": old["dim"],
         "n_cells": n_cells if n_cells is not None else old["n_cells"],
         "n_subspaces": (
@@ -851,13 +729,12 @@ def ann_index_rebuild(
             vec_buckets if vec_buckets not in (None, "auto")
             else old["vec_buckets"]
         ),
-    }
-    pay = list(old.get("payload_cols") or [])
-    if pay:
         # payload schema is part of the index contract — carried through
         # rebuild like the markers (r15); values are re-read from the
         # codes tier below
-        meta["payload_cols"] = pay
+        "payload_cols": old["payload_cols"],
+    }
+    pay = meta["payload_cols"]
     if meta["dim"] % meta["n_subspaces"] != 0:
         raise ValueError(
             f"dim {meta['dim']} not divisible by n_subspaces "
@@ -878,14 +755,14 @@ def ann_index_rebuild(
     # vectors for the same id in the two tiers) — and the EARLIEST
     # batch's lineage (min _batch, same determinism argument).
     # Pending tombstones are FOLDED IN here (r12): both tiers are
-    # filtered to their MARKED LIVE rows (``_ann_live_rows`` — the
+    # filtered to their MARKED LIVE rows (``_live_rows`` — the
     # seq-scoped tombstone rule plus the unmarked-orphan sweep, review
     # r12: copying crashed-append orphans forward would re-plant rows
     # no tombstone can ever name), so the rebuilt index holds only
     # surviving committed rows and carries no tombstone sidecar —
     # rebuild is the remote-index compaction path.
-    markers = _ann_marker_rows(spark, path)
-    tomb = _ann_tombstones(spark, path)
+    markers = _marker_rows(spark, path)
+    tomb = _tombstones(spark, path)
     raw_vecs = spark.read.parquet(f"{path}/{_VEC_DIR}")
     if "_batch" not in raw_vecs.columns:
         # ADVICE r12: the layout stamp promises per-row lineage but the
@@ -901,12 +778,12 @@ def ann_index_rebuild(
             "vectors"
         )
     vecs = (
-        _ann_live_rows(raw_vecs, tomb, markers)
+        _live_rows(raw_vecs, tomb, markers)
         .select("_id", "_v")
         .groupBy("_id")
         .agg(F.min("_v").alias("_v"))
     )
-    live_codes = _ann_live_rows(spark.read.parquet(path), tomb, markers)
+    live_codes = _live_rows(spark.read.parquet(path), tomb, markers)
     if pay:
         # payload values travel with the lineage: collapse duplicated
         # ids to ONE struct (the asof_join r5 rule — independent
@@ -971,9 +848,7 @@ def ann_index_rebuild(
         f"{new_path}/{_BATCH_DIR}"
     )
     # meta LAST — the rebuild's commit marker, same rule as the build
-    tiny_rows_df(spark, [meta]).coalesce(1).write.mode("overwrite").json(
-        f"{new_path}/{_META_DIR}"
-    )
+    _write_meta(spark, meta, new_path)
 
 
 def _vbucket(id_col: "F.Column", vec_buckets: int) -> "F.Column":
@@ -1050,16 +925,8 @@ def _write_batch(
         F.lit(batch_id).alias("_batch"),
     )
     _write_vec_tier(vecs, path, meta, wide)
-    n_rows = df.count()
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_append
-
-    # marker = one tiny JSON row; driver-side FS append (r15) — the
-    # Spark write job per batch append was fixed scheduling tax
-    sidecar_json_append(
-        spark,
-        f"{path}/{_BATCH_DIR}",
-        {"batch_id": batch_id, "seq": seq, "n_rows": n_rows},
-        name_hint="marker",
+    _append_marker(
+        spark, {"batch_id": batch_id, "seq": seq, "n_rows": df.count()}, path
     )
 
 
@@ -1214,7 +1081,7 @@ def ann_index_search(
         raise ValueError(f"ann_index_search: no index at {path}")
     # tombstone sidecar (r12): absent on the common path (compaction
     # removes it whole) — the check is one driver-side listing, no job
-    tomb = _ann_tombstones(spark, path)
+    tomb = _tombstones(spark, path)
     need_stats = shortlist == "auto" or (
         prune == "auto" and shortlist is not None
     )
@@ -1222,7 +1089,7 @@ def ann_index_search(
     # both auto statistics (review r12: the r12-draft form re-read the
     # marker JSON per statistic — duplicate driver jobs per search)
     markers = (
-        _ann_marker_rows(spark, path)
+        _marker_rows(spark, path)
         if (tomb is not None or need_stats)
         else None
     )
@@ -1261,7 +1128,7 @@ def ann_index_search(
     # retraction filter BEFORE the slim projection: seq-scoped anti-join
     # against the (request-sized) tombstones — dead rows never become
     # candidates, so the refine tier can't resurrect them either
-    coded = _ann_apply_tombstones(base, tomb, markers).select(
+    coded = _live_rows(base, tomb, markers, keep_unmarked=True).select(
         F.col("_id").alias("neighbor_id"), "_codes", *pay, "cell"
     )
     if probe_cells is not None:
@@ -1377,7 +1244,7 @@ def ann_index_search(
         # live one (the dead row would otherwise re-rank under its
         # retracted embedding). The _vbucket/_id prune filters below
         # push through these joins to the scan.
-        vec_scan = _ann_apply_tombstones(vec_scan, tomb, markers)
+        vec_scan = _live_rows(vec_scan, tomb, markers, keep_unmarked=True)
     n_cand = None  # unknown candidate mass ⇒ no hint, AQE decides
     if prune:
         # materialize the (bounded) shortlist ONCE: localCheckpoint
@@ -1547,7 +1414,7 @@ def ann_index_dedup_batch(
             "ann_index_build (pinning the models) first"
         )
     if not (resume and _resume_skips_append(
-        _ann_marker_rows(spark, path), batch_id, new_df,
+        _marker_rows(spark, path), batch_id, new_df,
         "ann_index_dedup_batch",
     )):
         ann_index_append(new_df, id_col, vec_col, path, batch_id=batch_id)
@@ -1575,7 +1442,7 @@ def ann_index_delete(
     APPENDS its request to ``_graft_tombstones/`` (``_id`` + the marker
     sequence at delete time) plus one tiny ``_graft_dead/`` accounting
     row, and every read path anti-joins the tombstones out
-    (``_ann_apply_tombstones`` — request-sized build side, seq-scoped
+    (``index_store._live_rows`` — request-sized build side, seq-scoped
     so a RE-APPENDED id lives while its retracted history stays dead).
     The WRITE side is request-proportional: both data tiers stay
     byte-untouched (mtime-pinned in tests). The accounting is ONE scan
@@ -1617,16 +1484,16 @@ def ann_index_delete(
     # would write an empty tombstone frame on the second pass
     if not isinstance(ids, DataFrame):
         ids = list(ids)
-    markers = _ann_marker_rows(spark, path)
+    markers = _marker_rows(spark, path)
     codes = spark.read.parquet(path)
-    tomb = _ann_tombstones(spark, path)
+    tomb = _tombstones(spark, path)
     hit, _, gone = _retraction_forms(codes, ids, "ann_index_delete")
     # rows the new tombstone will kill: requested ids (pushed filter /
     # semi join), marked batches only (unmarked crash rows have no seq
     # — unreachable by tombstones, so they must not count as removed;
     # compaction's rewrite is where they would be swept), minus rows
     # already dead under existing tombstones. ONE request-filtered scan.
-    removed = _ann_live_rows(hit, tomb, markers).count()
+    removed = _live_rows(hit, tomb, markers).count()
     if removed == 0:
         # ids unknown, already tombstoned, or stranded in unmarked
         # crash-append rows (those are swept physically by compact)
@@ -1638,25 +1505,11 @@ def ann_index_delete(
             f"ann_index_delete: deleting these ids would EMPTY the index "
             f"at {path} — remove the path instead (live index untouched)"
         )
-    del_seq = 1 + max((int(r.seq) for r in markers), default=-1)
-    # pin the sidecar's _id to the INDEX's id type (the r11 table-tier
-    # lesson): the first delete's request form must not fix a schema a
-    # later, differently-typed request fails to append under
-    id_type = codes.schema["_id"].dataType
-    if gone is not None:
-        tomb_rows = gone.select(F.col("_id").cast(id_type).alias("_id"))
-    else:
-        tomb_rows = tiny_rows_df(
-            spark, [(i,) for i in dict.fromkeys(ids)], codes.select("_id").schema
-        )
-    # one file per delete (request-sized frames; the GDPR shape) —
     # tombstones first, tally second: a kill between the two appends
     # leaves the retraction APPLIED but the live-size statistic
     # overstated until compact recomputes it (conservative: auto-prune
     # flips early, never late; a re-run of the same delete returns 0)
-    tomb_rows.withColumn("del_seq", F.lit(del_seq)).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{path}/{_TOMB_DIR}")
+    del_seq = _append_tombstones(spark, ids, gone, codes, markers, path)
     from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_append
 
     # driver-side one-row append (r15): the tally increment is ~60
@@ -1850,11 +1703,11 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
         for d in (_DEAD_DIR, _TOMB_DIR):
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
-    tomb = _ann_tombstones(spark, path)
-    markers = _ann_marker_rows(spark, path)
+    tomb = _tombstones(spark, path)
+    markers = _marker_rows(spark, path)
     codes = spark.read.parquet(path)
     cell_hist = (
-        _ann_dead_rows(codes, tomb, markers)
+        _dead_rows(codes, tomb, markers)
         .groupBy("cell")
         .agg(F.count("*").alias("_n"))
         .collect()
@@ -1863,7 +1716,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
     vec_dir = f"{path}/{_VEC_DIR}"
     vecs = spark.read.parquet(vec_dir)
     vb_hist = (
-        _ann_dead_rows(vecs, tomb, markers)
+        _dead_rows(vecs, tomb, markers)
         .groupBy("_vbucket")
         .agg(F.count("*").alias("_n"))
         .collect()
@@ -1888,7 +1741,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
         )
     if n_dead:
         cells = sorted(int(r.cell) for r in cell_hist)
-        keep_codes = _ann_live_rows(
+        keep_codes = _live_rows(
             codes.filter(F.col("cell").isin(cells)), tomb, markers
         )
         _dir_swap(
@@ -1901,7 +1754,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
         )
     if n_dead_vecs:
         vb = sorted(int(r._vbucket) for r in vb_hist)
-        keep_vecs = _ann_live_rows(
+        keep_vecs = _live_rows(
             vecs.filter(F.col("_vbucket").isin(vb)), tomb, markers
         )
         _dir_swap(

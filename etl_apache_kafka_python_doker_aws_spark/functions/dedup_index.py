@@ -80,11 +80,11 @@ Scale notes (SCALING.md "incremental dedup"):
 
 Layout contract: every meta writer (the first ``minhash_index_append``,
 ``minhash_index_relayout``, the first ``minhash_table_append``) stamps
-``layout_version`` = ``LAYOUT_VERSION``, and every meta reader raises
-one ValueError naming the path or table when the stamp is missing or
-different — an index in any other layout is rebuilt from source, never
-read through a compatibility branch. The ANN and exact tiers follow the
-same contract (``_check_layout``).
+``layout_version``, every meta reader refuses any other stamp, and the
+commit-marker, tombstone and swap/recover rules are the shared storage
+protocol — all of it lives in ``index_store`` (its docstring holds the
+protocol and the recover state table), shared with the ANN and exact
+tiers.
 """
 
 from __future__ import annotations
@@ -92,33 +92,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_apache_kafka_python_doker_aws_spark.util import spark_hidden, tiny_rows_df
+from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
 
 from etl_apache_kafka_python_doker_aws_spark.functions.dedup import (
     banded_minhash_signatures,
     estimate_jaccard_pairs,
 )
+from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+    _BATCH_DIR,
+    _append_marker,
+    _compact_tables,
+    _dir_swap,
+    _drop_tables,
+    _fs_nonempty,
+    _has_visible_file,
+    _live_rows,
+    _marker_rows,
+    _new_batch_seq,
+    _pinned_payloads,
+    _read_meta,
+    _recover_partition_dirs,
+    _recover_tables,
+    _require_local_path,
+    _require_marked,
+    _resume_skips_append,
+    _retraction_forms,
+    _tombstone_delete,
+    _tombstones,
+    _write_meta,
+)
 
-_META_DIR = "_graft_meta"
-_BATCH_DIR = "_graft_batches"
 _COUNTS_DIR = "_graft_counts"
 _PARAMS = ("num_hashes", "bands", "shingle_n", "seed")
-
-#: The on-disk layout every index tier (band path/table, ANN, exact)
-#: writes and the only one it reads — stamped into each meta row.
-LAYOUT_VERSION = 1
-
-
-def _check_layout(row, where: str) -> None:
-    """Refuse a meta row without the current ``layout_version`` stamp —
-    an index written in any other layout is rebuilt, never read."""
-    got = row["layout_version"] if "layout_version" in row.__fields__ else None
-    if got != LAYOUT_VERSION:
-        raise ValueError(
-            f"{where} has layout_version {got!r}, but only layout_version "
-            f"{LAYOUT_VERSION} is readable — rebuild the index from source"
-        )
-
 
 def _check_bgroups(bgroups, who: str) -> None:
     if not isinstance(bgroups, int) or bgroups < 1:
@@ -133,237 +138,43 @@ _RESERVED_BAND_COLS = frozenset(
 )
 
 
-def _check_payload_request(df: DataFrame, payload_cols: list, who: str,
-                           reserved: frozenset = _RESERVED_BAND_COLS) -> None:
-    """Creation-time payload schema validation (r15): reserved-name
-    shadowing, duplicates, and absence from the batch frame are all
-    caller bugs — reject loudly before anything is written.
-    ``reserved`` lets other tiers (exact_index) pass their own
-    index-owned column set."""
-    bad = [c for c in payload_cols if c in reserved]
-    if bad:
-        raise ValueError(
-            f"{who}: payload column(s) {bad} shadow index-owned columns; "
-            f"reserved names: {sorted(reserved)}"
-        )
-    if len(set(payload_cols)) != len(payload_cols):
-        raise ValueError(f"{who}: duplicate payload column names {payload_cols}")
-    missing = [c for c in payload_cols if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"{who}: payload column(s) {missing} not in the input frame "
-            f"(columns: {df.columns})"
-        )
-
-
-def _pinned_payloads(
-    df: DataFrame, meta: dict | None, payload_cols, who: str,
-    reserved: frozenset = _RESERVED_BAND_COLS,
-) -> list[str]:
-    """Resolve the effective payload column list for an append (r15):
-    the index's pinned schema wins once it exists — a conflicting
-    explicit request is a caller bug, and every later batch must carry
-    the pinned columns (a silent NULL payload would corrupt ``where=``
-    filtering downstream, the ann_index_append rule)."""
-    if meta is None:
-        req = list(payload_cols or [])
-        _check_payload_request(df, req, who, reserved)
-        return req
-    pinned = list(meta.get("payload_cols") or [])
-    if payload_cols is not None and list(payload_cols) != pinned:
-        raise ValueError(
-            f"{who}: index pins payload_cols={pinned}, append requested "
-            f"{list(payload_cols)} — the payload schema is a creation-time "
-            "layout property; rebuild to change it"
-        )
-    missing = [c for c in pinned if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"{who}: index pins payload column(s) {pinned} but the batch "
-            f"lacks {missing} — every append must carry the creation-time "
-            "payload schema"
-        )
-    return pinned
-
-
-def _require_local_path(path: str, who: str) -> None:
-    """Index DELETES stage + swap through os.rename/shutil (local-FS
-    semantics); on an hdfs://... or s3a://... index the Spark staging
-    write would succeed REMOTELY while the local empty-check finds
-    nothing and falsely raises 'would EMPTY the index', stranding
-    remote staging garbage (ADVICE r8). Fail fast with the real reason
-    instead. Reads/appends/searches work on any Hadoop filesystem."""
-    from urllib.parse import urlparse
-
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"{who}: delete is local-filesystem-only (the staging swap "
-            f"uses os.rename); got scheme {scheme!r} for {path} — run the "
-            "delete where the index is locally mounted, or rebuild the "
-            "index minus the retracted ids"
-        )
-
-
-def _retraction_forms(full: DataFrame, ids, who: str):
-    """Normalize a delete request (Python list or DataFrame whose FIRST
-    column holds the ids) into ``(hit, drop, gone)`` with ONE NULL
-    semantics across every delete path (review r10 — the four
-    copy-pasted blocks had drifted: the list form's ``~isin`` silently
-    erased NULL-id index rows it was never asked to delete, while the
-    DataFrame form kept them):
-
-    * a NULL in the REQUEST is rejected loudly — anti-joins and In
-      predicates never match NULL, so the request would silently no-op
-      (the r5 keyed-merge lesson);
-    * a NULL-``_id`` INDEX row is never deleted — it matches no
-      requested id under either input form.
-
-    ``hit`` = the full frame filtered to requested rows; ``drop`` maps
-    any frame to its survivors; ``gone`` is the distinct-id DataFrame
-    (None for the list form — list callers keep the pushed-In shape)."""
-    spark = full.sparkSession
-    if isinstance(ids, DataFrame):
-        key = ids.columns[0]
-        gone = ids.select(F.col(key).alias("_id")).distinct()
-        if gone.filter(F.col("_id").isNull()).count():
-            raise ValueError(
-                f"{who}: delete ids contain NULL — an anti-join never "
-                "matches NULL, so the request would silently delete "
-                "nothing for it; drop the NULL from the request"
+def _guard_counts(rows: DataFrame, batch_ids: list) -> DataFrame:
+    """The skew guard's persisted state for ``rows``: per-(band_idx,
+    band_hash, _batch) row counts, plus one zero-count sentinel row per
+    batch (band_idx -1 matches no real bucket — ADVICE r8), so even a
+    batch with zero shingle-eligible docs leaves a counts row."""
+    return (
+        rows.groupBy("band_idx", "band_hash", "_batch")
+        .agg(F.count("*").alias("cnt"))
+        .select("band_idx", "band_hash", "cnt", "_batch")
+        .unionByName(
+            tiny_rows_df(
+                rows.sparkSession,
+                [(-1, 0, 0, b) for b in batch_ids],
+                "band_idx int, band_hash long, cnt long, _batch string",
             )
-        hit = full.join(gone, "_id", "left_semi")
-        drop = lambda df: df.join(gone, "_id", "left_anti")  # noqa: E731
-        return hit, drop, gone
-    ids = list(ids)
-    if any(i is None for i in ids):
-        raise ValueError(
-            f"{who}: delete ids contain None — an In predicate never "
-            "matches NULL, so the request would silently delete nothing "
-            "for it; drop the None from the request"
         )
-    hit = full.filter(F.col("_id").isin(ids))
-    drop = lambda df: df.filter(  # noqa: E731
-        ~F.col("_id").isin(ids) | F.col("_id").isNull()
     )
-    return hit, drop, None
 
 
 def minhash_index_meta(spark: SparkSession, path: str) -> dict | None:
     """Read the index's pinned LSH parameters, ``bgroups`` and payload
-    schema, or None if no index exists at ``path`` yet; raises on a
-    meta without the current ``layout_version``."""
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_rows
-
-    # driver-side FS read (r15, util.sidecar_json_rows): one tiny JSON
-    # row — the spark.read.json form paid two Spark jobs per call
-    try:
-        rows = sidecar_json_rows(spark, f"{path}/{_META_DIR}")
-    except Exception:
-        return None
-    row = rows[0] if rows else None
+    schema, or None if no index exists at ``path`` yet; raises on an
+    unreadable meta or one without the current ``layout_version``
+    (``index_store._read_meta``)."""
+    row = _read_meta(spark, path)
     if row is None:
         return None
-    _check_layout(row, f"band index at {path}")
-    meta = {k: int(row[k]) for k in _PARAMS}
-    meta["bgroups"] = int(row.bgroups)
-    # payload-less creates omit the field — read as [] ("no payload
-    # machinery" to every consumer)
-    meta["payload_cols"] = (
-        list(row.payload_cols)
-        if "payload_cols" in row.__fields__ and row.payload_cols
-        else []
-    )
+    meta = {k: int(row[k]) for k in _PARAMS + ("bgroups",)}
+    meta["payload_cols"] = row["payload_cols"]
     return meta
-
-
-def _recover_partition_dirs(root: str) -> None:
-    """Heal a localized delete killed mid-swap (r9): ``_dir_swap``
-    renames live partition dir → ``<dir>.old`` then staged → live; a
-    kill between the renames leaves only the .old copy — restore it
-    (the delete is then simply incomplete and re-runnable). A leftover
-    .old NEXT TO a live dir means the swap completed but cleanup
-    didn't — drop it."""
-    import glob
-    import os
-    import shutil
-
-    if not os.path.isdir(root):
-        return
-    for old in glob.glob(os.path.join(root, "**", "*=*.old"), recursive=True):
-        live = old[: -len(".old")]
-        if os.path.exists(live):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, live)
-
-
-def _dir_swap(root: str, part_col: str, values: list, write_staging) -> None:
-    """Localized partition-directory rewrite (r9, VERDICT r8 #7): write
-    the survivors of the AFFECTED partitions to a staging dir (hive
-    layout), then swap each affected ``<part_col>=<v>`` directory in
-    with paired renames — untouched partition directories are never
-    read or written (their files stay byte-identical; mtime-pinned in
-    tests). A partition whose survivors are empty simply has its live
-    dir removed (partition discovery skips missing dirs). Staging lives
-    NEXT TO root (``.delstage``), distinct from the whole-dir
-    ``.staging`` machinery so plans/merge._recover never mistakes it
-    for a complete table copy. ``values`` may include nested partition
-    paths (e.g. ``band_idx=0/_bgroup=3``) — pass them as rendered
-    RELATIVE dir strings; plain scalars are rendered ``col=value``."""
-    import os
-    import shutil
-
-    staging = root.rstrip("/") + ".delstage"
-    shutil.rmtree(staging, ignore_errors=True)
-    write_staging(staging)
-    try:
-        for v in values:
-            rel = v if isinstance(v, str) and "=" in str(v) else f"{part_col}={v}"
-            live = os.path.join(root, rel)
-            new = os.path.join(staging, rel)
-            old = live + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(live):
-                os.rename(live, old)
-            if os.path.exists(new):
-                os.makedirs(os.path.dirname(live), exist_ok=True)
-                os.rename(new, live)
-            shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-
-def _marker_rows(spark: SparkSession, source) -> list:
-    """Raw batch-marker rows in append order (empty for a fresh index).
-    ``source`` is a marker-dir path or a pre-read DataFrame. One tiny
-    JSON/table row per batch — metadata-cheap at any index size. Marker
-    fields: batch_id, seq, n_rows. Markers are written LAST, so a
-    marked batch provably has its data rows and guard counts on disk.
-
-    Absence (fresh index) is an explicit existence check; a READ error
-    on an existing marker dir propagates (review r12 — swallowing it
-    as "no batches" would strip every row's seq, so tombstone
-    retraction anti-joins nothing and pairs queries see zero marked
-    batches: correctness, not availability)."""
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_rows
-
-    if isinstance(source, DataFrame):
-        rows = source.collect()
-    else:
-        # driver-side FS read (r15): no Spark job per marker read
-        fs_rows = sidecar_json_rows(spark, source)
-        if fs_rows is None:
-            return []
-        rows = fs_rows
-    return sorted(rows, key=lambda r: r.seq)
 
 
 def minhash_index_batches(spark: SparkSession, path: str) -> list[str]:
     """Batch ids already appended, in append order (empty for a fresh
     path). One tiny JSON row per batch — listing this is metadata-cheap
     regardless of index size."""
-    return [r.batch_id for r in _marker_rows(spark, f"{path}/{_BATCH_DIR}")]
+    return [r.batch_id for r in _marker_rows(spark, path)]
 
 
 def minhash_index_append(
@@ -436,25 +247,14 @@ def minhash_index_append(
             f"append requested {params} — signatures hashed under different "
             "params never collide; rebuild the index or match its params"
         )
-    existing = minhash_index_batches(spark, path)
-    if batch_id in existing:
-        raise ValueError(
-            f"minhash_index_append: batch_id {batch_id!r} already appended "
-            f"to {path} — duplicate appends double every bucket silently; "
-            "use a fresh batch_id per delivery"
-        )
+    seq = _new_batch_seq(_marker_rows(spark, path), batch_id,
+                         "minhash_index_append", path)
     # layout is creation-pinned: an existing index's bgroups wins
     g = meta["bgroups"] if meta is not None else bgroups
-    pay = _pinned_payloads(df, meta, payload_cols, "minhash_index_append")
+    pay = _pinned_payloads(df, meta, payload_cols, "minhash_index_append",
+                           _RESERVED_BAND_COLS)
     if meta is None:
-        row = {**params, "bgroups": g, "layout_version": LAYOUT_VERSION}
-        if pay:
-            # key written only when non-empty — minhash_index_meta reads
-            # an absent field as [] (the payload-less layout)
-            row["payload_cols"] = pay
-        tiny_rows_df(spark, [row]).coalesce(1).write.mode("overwrite").json(
-            f"{path}/{_META_DIR}"
-        )
+        _write_meta(spark, {**params, "bgroups": g, "payload_cols": pay}, path)
     # n_rows on the marker (r15): the resume contract's "same delivery"
     # evidence — one count job over the batch lineage, batch-sized
     n_in = df.count()
@@ -478,31 +278,15 @@ def minhash_index_append(
         banded.write.mode("append").partitionBy("band_idx", "_bgroup").parquet(
             path
         )
-        # every batch writes at least the zero-count sentinel row
-        # (band_idx -1, matches no real bucket — ADVICE r8), so even a
-        # batch with zero shingle-eligible docs leaves a counts file
-        banded.groupBy("band_idx", "band_hash").agg(
-            F.count("*").alias("cnt")
-        ).withColumn("_batch", F.lit(batch_id)).unionByName(
-            tiny_rows_df(
-                spark,
-                [(-1, 0, 0, batch_id)],
-                "band_idx int, band_hash long, cnt long, _batch string",
-            )
-        ).write.mode("append").parquet(f"{path}/{_COUNTS_DIR}")
+        _guard_counts(banded, [batch_id]).write.mode("append").parquet(
+            f"{path}/{_COUNTS_DIR}"
+        )
     finally:
         banded.unpersist()
     # the marker is written AFTER the counts — a marked batch provably
-    # has its guard counts. Driver-side one-row FS append (r15,
-    # util.sidecar_json_append): a Spark write job per marker was fixed
-    # scheduling tax
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_append
-
-    sidecar_json_append(
-        spark,
-        f"{path}/{_BATCH_DIR}",
-        {"batch_id": batch_id, "seq": len(existing), "n_rows": n_in},
-        name_hint="marker",
+    # has its guard counts
+    _append_marker(
+        spark, {"batch_id": batch_id, "seq": seq, "n_rows": n_in}, path
     )
 
 
@@ -555,17 +339,8 @@ def minhash_index_pairs_vs_batch(
     meta = minhash_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"minhash_index_pairs_vs_batch: no index at {path}")
-    markers = _marker_rows(spark, f"{path}/{_BATCH_DIR}")
-    marked = [r.batch_id for r in markers]
-    if batch_id not in marked:
-        # an unmarked batch_id is either a typo or a crashed append
-        # (data written, marker absent) — returning empty would read as
-        # "no duplicates", silent data corruption downstream
-        raise ValueError(
-            f"minhash_index_pairs_vs_batch: batch_id {batch_id!r} is not a "
-            f"MARKED batch of {path} (marked: {marked}) — a crashed append "
-            "must be cleaned up and re-appended under a new batch_id"
-        )
+    marked = _require_marked(_marker_rows(spark, path), batch_id,
+                             "minhash_index_pairs_vs_batch", path)
     # crash-window containment (VERDICT r8 #4): a crashed append leaves
     # band rows without counts/marker, which would join as UNDER-GUARDED
     # candidates — filter the index scan to marked batches (tiny pushed
@@ -653,27 +428,6 @@ def _pairs_for_batch(
 
 
 
-def _resume_skips_append(markers, batch_id: str, new_df: DataFrame,
-                         who: str) -> bool:
-    """Shared resume contract of every ``*_dedup_batch`` (band path,
-    band table, ANN): True = the batch marker proves THIS delivery
-    already appended (skip the append, re-run only the search side);
-    False = no marker, append normally. A marker whose recorded
-    ``n_rows`` differs from the input raises — same batch_id with
-    different payload is a redelivery bug, not a retry."""
-    marked = next((r for r in markers if r.batch_id == batch_id), None)
-    if marked is None:
-        return False
-    n_in = new_df.count()
-    n_marked = int(marked.n_rows)
-    if n_marked != n_in:
-        raise ValueError(
-            f"{who}: resume of batch_id {batch_id!r} found a marker with "
-            f"n_rows={n_marked} but the input has {n_in} rows — not the "
-            "same delivery; use a fresh batch_id for new data"
-        )
-    return True
-
 
 def minhash_index_dedup_batch(
     new_df: DataFrame,
@@ -716,7 +470,7 @@ def minhash_index_dedup_batch(
             "with minhash_index_append (pinning the LSH params) first"
         )
     if not (resume and _resume_skips_append(
-        _marker_rows(spark, f"{path}/{_BATCH_DIR}"), batch_id, new_df,
+        _marker_rows(spark, path), batch_id, new_df,
         "minhash_index_dedup_batch",
     )):
         minhash_index_append(
@@ -746,39 +500,25 @@ def minhash_index_dedup_batch(
 # index lives in the catalog.
 
 
-def _table_exists(spark: SparkSession, table: str) -> bool:
-    return spark.catalog.tableExists(table)
+def _targets(table: str) -> list[str]:
+    """The table tier's ordered swap targets: data, then guard counts."""
+    return [table, f"{table}_counts"]
 
 
 def minhash_table_meta(spark: SparkSession, table: str) -> dict | None:
     """Pinned LSH params (+ bucket count) of a bucketed band index, or
-    None if the index table doesn't exist yet; raises on a meta without
-    the current ``layout_version``."""
-    if not _table_exists(spark, f"{table}_meta"):
-        return None
-    row = spark.table(f"{table}_meta").first()
+    None if the index table doesn't exist yet; raises on an unreadable
+    meta or one without the current ``layout_version``."""
+    row = _read_meta(spark, table=table)
     if row is None:
         return None
-    _check_layout(row, f"band index table {table}")
     meta = {k: int(row[k]) for k in _PARAMS + ("buckets",)}
-    # payload-less creates omit the column — read as [] (see the path
-    # tier's minhash_index_meta)
-    meta["payload_cols"] = (
-        list(row.payload_cols)
-        if "payload_cols" in row.__fields__ and row.payload_cols
-        else []
-    )
+    meta["payload_cols"] = row["payload_cols"]
     return meta
 
 
-def _table_marker_rows(spark: SparkSession, table: str) -> list:
-    if not _table_exists(spark, f"{table}_batches"):
-        return []
-    return _marker_rows(spark, spark.table(f"{table}_batches"))
-
-
 def minhash_table_batches(spark: SparkSession, table: str) -> list[str]:
-    return [r.batch_id for r in _table_marker_rows(spark, table)]
+    return [r.batch_id for r in _marker_rows(spark, table=table)]
 
 
 def minhash_table_append(
@@ -809,7 +549,7 @@ def minhash_table_append(
     that keeps this tier's zero-Exchange property (unlike a broad
     ``allowed`` set, which shuffles on ``_id``)."""
     spark = df.sparkSession
-    _table_swap_recover(spark, table)
+    _recover_tables(spark, _targets(table))
     meta = minhash_table_meta(spark, table)
     params = {
         "num_hashes": num_hashes,
@@ -825,20 +565,12 @@ def minhash_table_append(
             f"minhash_table_append: index {table} was built with {meta}, "
             f"append requested {params} — rebuild or match its params"
         )
-    existing = minhash_table_batches(spark, table)
-    if batch_id in existing:
-        raise ValueError(
-            f"minhash_table_append: batch_id {batch_id!r} already appended "
-            f"to {table} — use a fresh batch_id per delivery"
-        )
-    pay = _pinned_payloads(df, meta, payload_cols, "minhash_table_append")
+    seq = _new_batch_seq(_marker_rows(spark, table=table), batch_id,
+                         "minhash_table_append", table)
+    pay = _pinned_payloads(df, meta, payload_cols, "minhash_table_append",
+                           _RESERVED_BAND_COLS)
     if meta is None:
-        row = {**params, "layout_version": LAYOUT_VERSION}
-        if pay:
-            row["payload_cols"] = pay
-        tiny_rows_df(spark, [row]).coalesce(1).write.mode(
-            "overwrite"
-        ).saveAsTable(f"{table}_meta")
+        _write_meta(spark, {**params, "payload_cols": pay}, table=table)
     n_in = df.count()
     banded = banded_minhash_signatures(
         df, id_col, text_col, num_hashes, bands, shingle_n, seed,
@@ -853,23 +585,14 @@ def minhash_table_append(
         # and its semi-join against the (equally bucketed) batch side
         # then also plan shuffle-free — the only Exchange left in the
         # whole pairs query is the tiny pair-dedup
-        banded.groupBy("band_idx", "band_hash").agg(
-            F.count("*").alias("cnt")
-        ).withColumn("_batch", F.lit(batch_id)).unionByName(
-            # zero-count sentinel (ADVICE r8) — see minhash_index_append
-            tiny_rows_df(
-                spark,
-                [(-1, 0, 0, batch_id)],
-                "band_idx int, band_hash long, cnt long, _batch string",
-            )
-        ).write.mode("append").bucketBy(
+        _guard_counts(banded, [batch_id]).write.mode("append").bucketBy(
             buckets, "band_idx", "band_hash"
         ).format("parquet").saveAsTable(f"{table}_counts")
     finally:
         banded.unpersist()
-    tiny_rows_df(
-        spark, [{"batch_id": batch_id, "seq": len(existing), "n_rows": n_in}]
-    ).write.mode("append").saveAsTable(f"{table}_batches")
+    _append_marker(
+        spark, {"batch_id": batch_id, "seq": seq, "n_rows": n_in}, table=table,
+    )
 
 
 def minhash_table_pairs_vs_batch(
@@ -905,25 +628,21 @@ def minhash_table_pairs_vs_batch(
     property is the CLUSTER trade (shuffling ~1.1 TB of index per
     snapshot at 10⁹ docs is the cost that matters); registered
     scale_form="bounded" accordingly — locally, prefer the path form."""
-    _table_swap_recover(spark, table)
+    _recover_tables(spark, _targets(table))
     meta = minhash_table_meta(spark, table)
     if meta is None:
         raise ValueError(f"minhash_table_pairs_vs_batch: no index table {table}")
-    markers = _table_marker_rows(spark, table)
-    marked = [r.batch_id for r in markers]
-    if batch_id not in marked:
-        raise ValueError(
-            f"minhash_table_pairs_vs_batch: batch_id {batch_id!r} is not a "
-            f"MARKED batch of {table} (marked: {marked}) — a crashed append "
-            "must be cleaned up and re-appended under a new batch_id"
-        )
+    markers = _marker_rows(spark, table=table)
+    marked = _require_marked(markers, batch_id, "minhash_table_pairs_vs_batch",
+                             table)
     # same crash-window containment as the path form (VERDICT r8 #4);
     # pending tombstones (r11 retraction sidecar) are anti-joined out —
     # request-sized build side, the index itself never shuffles for it
-    full = _apply_tombstones(
+    full = _live_rows(
         spark.table(table).filter(F.col("_batch").isin(marked)),
-        _tombstones(spark, table),
+        _tombstones(spark, table=table),
         markers,
+        keep_unmarked=True,
     )
     per_batch = spark.table(f"{table}_counts").filter(
         F.col("_batch").isin(marked)
@@ -955,41 +674,8 @@ def drop_minhash_table(spark: SparkSession, table: str) -> None:
             "its location lives under <db>.db/; pass the bare table name "
             "in the default database"
         )
-    # the `_deleting` staging twins MUST go too (review r11): a twin
-    # left by a compact killed mid-swap would otherwise be renamed back
-    # into place by _table_swap_recover when a NEW index is later built
-    # under the same name — resurrecting GDPR-purged rows
-    # `_compacting` twins (ADVICE r11 #3): compact_bucketed_table's CTAS
-    # staging — purge them too, or a crashed hygiene compaction strands
-    # a twin the next build under a reused name trips over
-    for t in (
-        table,
-        f"{table}_meta",
-        f"{table}_batches",
-        f"{table}_counts",
-        f"{table}_tombstones",
-        f"{table}_deleting",
-        f"{table}_counts_deleting",
-        f"{table}_compacting",
-        f"{table}_counts_compacting",
-    ):
-        _drop_table_and_location(spark, t)
-
-
-def _drop_table_and_location(spark: SparkSession, name: str) -> None:
-    """DROP TABLE IF EXISTS *and* delete its default warehouse
-    location: a fresh session's catalog has never heard of a table
-    written by a crashed earlier session, so the DROP no-ops while the
-    directory persists and the next ``saveAsTable`` fails with
-    LOCATION_ALREADY_EXISTS (the r8 lesson, now shared by
-    drop_minhash_table and the compact staging prep)."""
-    sc = spark.sparkContext
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    p = sc._jvm.org.apache.hadoop.fs.Path(f"{wh}/{name.lower()}")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, True)
+    # staging twins and sidecars go too (index_store._drop_tables)
+    _drop_tables(spark, _targets(table))
 
 
 def minhash_table_dedup_batch(
@@ -1022,7 +708,7 @@ def minhash_table_dedup_batch(
             "with minhash_table_append (pinning params + buckets) first"
         )
     if not (resume and _resume_skips_append(
-        _table_marker_rows(spark, table), batch_id, new_df,
+        _marker_rows(spark, table=table), batch_id, new_df,
         "minhash_table_dedup_batch",
     )):
         minhash_table_append(
@@ -1039,211 +725,6 @@ def minhash_table_dedup_batch(
     )
 
 
-def _table_swap_recover(spark: SparkSession, table: str) -> bool:
-    """Heal a ``minhash_table_compact`` killed mid-swap (ADVICE r10: the
-    DROP→RENAME pairs are per-statement catalog-atomic, not atomic
-    across the pair). Run by EVERY read/write entry point, so no append
-    can interleave with a half-applied swap. The states are
-    unambiguous because compact drops BOTH staging twins upfront and
-    stages data before counts — so a ``_deleting`` twin next to a
-    MISSING live table is a swap killed between its DROP and RENAME
-    (rename the twin in), and a ``counts_deleting`` twin with NO
-    ``{table}_deleting`` beside both live tables means the data swap
-    COMPLETED and the counts swap never ran (review r11 — without this
-    arm the next compact's nothing-to-rewrite early exit would strand
-    the recomputed counts forever, and a batch appended meanwhile
-    would land its counts in the stale table): complete the counts
-    swap. A missing table with no twin is left alone (e.g. a
-    half-finished first append — not this function's crash window).
-    Returns True if anything was repaired.
-
-    SINGLE-WRITER assumption (ADVICE r11 #1): recovery distinguishes
-    crash states by table/twin PRESENCE, which is only unambiguous when
-    no compact is running concurrently — a reader in another session
-    that recovers mid-compact races the live writer's own swap (see
-    ``minhash_table_compact``). One maintenance writer per index."""
-    repaired = False
-    data_was_missing = not _table_exists(spark, table)
-    for n in (table, f"{table}_counts"):
-        tmp = f"{n}_deleting"
-        if not _table_exists(spark, n) and _table_exists(spark, tmp):
-            spark.sql(f"ALTER TABLE {tmp} RENAME TO {n}")
-            repaired = True
-    if (repaired and data_was_missing) or (
-        not data_was_missing
-        and _table_exists(spark, table)
-        and _table_exists(spark, f"{table}_counts")
-        and not _table_exists(spark, f"{table}_deleting")
-        and _table_exists(spark, f"{table}_counts_deleting")
-    ):
-        # either the data swap was just recovered above (counts swap
-        # never started), or it completed on its own before the kill —
-        # in both cases the staged counts pair with the CURRENT data
-        tmp = f"{table}_counts_deleting"
-        if _table_exists(spark, tmp):
-            spark.sql(f"DROP TABLE IF EXISTS {table}_counts")
-            spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}_counts")
-            repaired = True
-    return repaired
-
-
-def _tombstones(spark: SparkSession, table: str) -> DataFrame | None:
-    """The delete-request sidecar (``<table>_tombstones``: ``_id`` +
-    ``del_seq``), or None when no delete is pending. Dropped whole by
-    compaction — its absence is the common fast path."""
-    if not _table_exists(spark, f"{table}_tombstones"):
-        return None
-    return spark.table(f"{table}_tombstones")
-
-
-# Past this many batch markers the batch→seq translation switches from
-# an inlined ``create_map`` literal to a broadcast join against the
-# (metadata-sized) marker frame (r12, VERDICT r11 #4 / ADVICE r11 #2):
-# a long-lived crawl table at 15-min snapshots accumulates ~35k markers
-# a year, and a 70k-element literal map in every pairs plan is
-# driver-side analysis/codegen bloat on the hot query path. Below the
-# bound the literal map stays — zero extra plan nodes for the common
-# hundreds-of-batches case.
-_MARKER_MAP_MAX = 1_000
-
-
-def _marker_seq_join(df: DataFrame, markers, how: str) -> DataFrame:
-    """Attach each row's batch SEQUENCE by joining the metadata-sized
-    marker frame (one tiny row per batch) — the ONE batch→seq
-    translation every tier shares (the band tier's
-    >``_MARKER_MAP_MAX`` branch, the ANN tier, the exact tier's keeper
-    order). ``how="left"`` keeps unmarked
-    (crashed-append) rows with a NULL seq; ``how="inner"`` restricts to
-    marked rows. The broadcast hint is structural: the build side is
-    one row per batch marker, metadata-bounded at any corpus size."""
-    mdf = tiny_rows_df(
-        df.sparkSession,
-        [(r.batch_id, int(r.seq)) for r in markers],
-        "_mb string, _seq int",
-    )
-    return df.join(F.broadcast(mdf), df["_batch"] == mdf["_mb"], how).drop("_mb")
-
-
-def _tombstone_join(seqd: DataFrame, tomb: DataFrame, how: str) -> DataFrame:
-    """The ONE seq-scoped tombstone predicate every tier shares: a row is
-    dead iff some tombstone names its ``_id`` AND the row's batch was
-    already marked when the delete ran (``_seq < del_seq``). ``seqd``
-    carries ``_seq`` (``_marker_seq_join``); ``how="left_anti"`` keeps
-    the live rows, ``"left_semi"`` the dead ones. A NULL ``_seq``
-    (unmarked crash-append row) never satisfies the predicate. Drops
-    ``_seq``."""
-    t = tomb.select(F.col("_id").alias("_t_id"), "del_seq")
-    return seqd.join(
-        t,
-        (F.col("_id") == F.col("_t_id")) & (F.col("_seq") < F.col("del_seq")),
-        how,
-    ).drop("_seq")
-
-
-def _apply_tombstones(full: DataFrame, tomb: DataFrame | None, markers) -> DataFrame:
-    """Filter a bucketed-index frame down to its LIVE rows: a row is
-    dead iff some tombstone names its ``_id`` AND the row's batch was
-    already marked when the delete ran (``seq < del_seq``) — so a
-    RE-APPEND of a retracted id after the delete is a new observation
-    and lives, while the retracted batches stay dead (an id-only
-    tombstone would either resurrect GDPR-deleted rows on clearing or
-    permanently kill re-ingested docs). The batch→seq translation is a
-    literal map over the marker list while it is small, and a broadcast
-    join against the one-row-per-batch marker frame past
-    ``_MARKER_MAP_MAX`` (see above); the anti-join's tombstone side is
-    delete-request-sized, so AQE broadcasts it — the index itself never
-    shuffles for retraction."""
-    if tomb is None:
-        return full
-    if len(markers) > _MARKER_MAP_MAX:
-        with_seq = _marker_seq_join(full, markers, "left")
-    else:
-        pairs = []
-        for r in markers:
-            pairs += [F.lit(r.batch_id), F.lit(int(r.seq))]
-        seq = (
-            F.element_at(F.create_map(*pairs), F.col("_batch"))
-            if pairs
-            else F.lit(None).cast("int")
-        )
-        with_seq = full.withColumn("_seq", seq)
-    return _tombstone_join(with_seq, tomb, "left_anti")
-
-
-def _tombstone_delete(
-    spark: SparkSession,
-    table: str,
-    ids,
-    *,
-    who: str,
-    drop_hint: str,
-    markers: list,
-    live: DataFrame,
-    full: DataFrame,
-    n_total_fn,
-    compact_fn,
-    compact_threshold: float,
-) -> int:
-    """Shared tombstone-retraction core for the catalog-table tiers
-    (band ``minhash_table_delete`` and exact ``sha_table_delete`` —
-    review r12: the two bodies were drifting clones, the exact failure
-    mode ``_retraction_forms`` was factored out to prevent). ONE index
-    scan computes both statistics (live rows + requested live rows);
-    the EMPTY guard, seq-scoped del_seq, id-type-pinned sidecar write
-    and threshold'd auto-compaction are identical across tiers.
-    ``n_total_fn`` is only invoked when auto-compaction is possible
-    (``compact_threshold`` ≤ 1) — a deferred-compaction delete pays no
-    corpus-proportional accounting beyond the single stats scan."""
-    if not isinstance(ids, DataFrame):
-        ids = list(ids)  # one-shot-iterable lesson (ADVICE r10)
-    hit, _, gone = _retraction_forms(live, ids, who)
-    if gone is not None:
-        marked_live = live.join(
-            gone.withColumn("_dead", F.lit(1)), "_id", "left"
-        )
-    else:
-        marked_live = live.withColumn(
-            "_dead", F.when(F.col("_id").isin(ids), F.lit(1))
-        )
-    stats = marked_live.agg(
-        F.count(F.lit(1)).alias("n_live"), F.count("_dead").alias("removed")
-    ).first()
-    n_live, removed = int(stats.n_live), int(stats.removed)
-    if removed == 0:
-        # nothing LIVE matches — ids unknown, already tombstoned, or
-        # stranded in unmarked crash-append rows (compact sweeps those)
-        return 0
-    if n_live == removed:
-        raise ValueError(
-            f"{who}: deleting these ids would EMPTY the index table "
-            f"{table} — drop it ({drop_hint}) instead"
-        )
-    del_seq = 1 + max((int(r.seq) for r in markers), default=-1)
-    # pin the sidecar's _id to the INDEX's id type (second review r11):
-    # the first delete's request form must not fix a schema a later,
-    # differently-typed request fails to append under
-    id_type = full.schema["_id"].dataType
-    tomb_rows = (
-        gone.select(F.col("_id").cast(id_type).alias("_id"))
-        if gone is not None
-        else tiny_rows_df(spark, [(i,) for i in ids], full.select("_id").schema)
-    ).withColumn("del_seq", F.lit(del_seq))
-    # coalesce(1): without it the Arrow local-relation frame appends one
-    # file PER ID (measured: a 5-id delete wrote 5 files — 1000 GDPR
-    # requests of 25 ids would leave 25k tiny files on every pairs
-    # query's anti-join read path). One request-sized file per delete;
-    # compaction drops the table whole.
-    tomb_rows.coalesce(1).write.mode("append").format("parquet").saveAsTable(
-        f"{table}_tombstones"
-    )
-    if compact_threshold <= 1:
-        n_total = n_total_fn()
-        dead = n_total - (n_live - removed)
-        if n_total and dead / n_total > compact_threshold:
-            compact_fn()
-    return removed
-
-
 def minhash_table_delete(
     spark: SparkSession, table: str, ids, *, compact_threshold: float = 0.2
 ) -> int:
@@ -1256,7 +737,7 @@ def minhash_table_delete(
     so there is nothing to localize on disk; instead each delete
     APPENDS its request to ``<table>_tombstones`` (``_id`` + the marker
     sequence at delete time) and every pairs query anti-joins the
-    tombstones out (see ``_apply_tombstones`` — request-sized build
+    tombstones out (``index_store._live_rows`` — request-sized build
     side, no index shuffle). The WRITE side is therefore
     request-sized — data and counts tables stay byte-untouched
     (mtime-pinned in tests) — and the accounting is one columnar
@@ -1275,21 +756,11 @@ def minhash_table_delete(
     redelivery. A re-appended id LIVES (its batch seq is past every
     tombstone) while its retracted history stays dead. Returns the
     number of live band rows retracted."""
-    _table_swap_recover(spark, table)
-    meta = minhash_table_meta(spark, table)
-    if meta is None:
+    _recover_tables(spark, _targets(table))
+    if minhash_table_meta(spark, table) is None:
         raise ValueError(f"minhash_table_delete: no index table {table}")
-    markers = _table_marker_rows(spark, table)
-    # marked batches only: unmarked crash rows are invisible to pairs
-    # (crash containment) and a seq-scoped tombstone can never kill
-    # them — they must not count as "removed" or trip the EMPTY guard
-    # (compaction sweeps them physically; review r11)
-    full = spark.table(table).filter(
-        F.col("_batch").isin([r.batch_id for r in markers])
-    )
-    live = _apply_tombstones(full, _tombstones(spark, table), markers)
 
-    def n_total_fn():
+    def n_total_fn(markers):
         # dead-mass fraction from the METADATA-sized counts sidecar
         # (tombstones never change the physical row count)
         return (
@@ -1308,9 +779,6 @@ def minhash_table_delete(
         ids,
         who="minhash_table_delete",
         drop_hint="drop_minhash_table",
-        markers=markers,
-        live=live,
-        full=full,
         n_total_fn=n_total_fn,
         compact_fn=lambda: minhash_table_compact(spark, table),
         compact_threshold=compact_threshold,
@@ -1319,136 +787,39 @@ def minhash_table_delete(
 
 def minhash_table_compact(spark: SparkSession, table: str) -> int:
     """Fold accumulated tombstones into the bucketed band index: one
-    CTAS rewrite of data + recomputed guard counts with the PINNED
-    bucket spec (repartition on the bucket columns so co-location —
-    the tier's whole point — survives), zero-count sentinels re-seeded
-    per marked batch, then the tombstone sidecar is dropped LAST — a
-    crash before that drop leaves tombstones that re-kill already-gone
-    rows (an anti-join no-op), so compaction is idempotent. The
-    DROP→RENAME swap windows are healed by ``_table_swap_recover``
-    (run here and by every read/write entry point). Also the PHYSICAL
-    sweep for unmarked crash-append rows — those never get tombstones
-    (invisible to pairs, unreachable by seq scoping), so compact
-    rewrites whenever marked survivors differ from the physical table,
-    tombstones pending or not. Returns the number of dead rows
-    compacted away (0 when there is nothing to fold or sweep).
+    staged CTAS rewrite of data + recomputed guard counts with the
+    PINNED bucket spec (co-location — the tier's whole point —
+    survives), zero-count sentinels re-seeded per marked batch, then
+    the tombstone sidecar is dropped LAST (``index_store._compact_tables``
+    — also the PHYSICAL sweep of unmarked crash-append rows, which no
+    tombstone can reach). The swap windows are healed by
+    ``index_store._recover_tables``, run here and by every read/write
+    entry point. Returns the number of dead rows compacted away (0 when
+    there is nothing to fold or sweep).
 
     SINGLE-WRITER assumption (ADVICE r11 #1): run one maintenance
-    writer per index at a time. ``_table_swap_recover`` fires from
-    every read/write entry point, and a READER in another session that
-    lands between this compact's data swap and its counts swap will
-    itself complete the counts swap — after which this compact's own
-    counts DROP deletes the just-renamed table and the RENAME throws,
-    leaving ``<table>_counts`` missing until a compact re-run. Fine
-    under a single coordinating writer (the deployment shape for every
+    writer per index at a time. A READER in another session that lands
+    between this compact's data swap and its counts swap will itself
+    complete the counts swap — after which this compact's own counts
+    DROP deletes the just-renamed table and the RENAME throws, leaving
+    ``<table>_counts`` missing until a compact re-run. Fine under a
+    single coordinating writer (the deployment shape for every
     swap-based maintenance op here); concurrent multi-session
     compaction needs an external lock."""
-    _table_swap_recover(spark, table)
+    _recover_tables(spark, _targets(table))
     meta = minhash_table_meta(spark, table)
     if meta is None:
         raise ValueError(f"minhash_table_compact: no index table {table}")
-    tomb = _tombstones(spark, table)
-    markers = _table_marker_rows(spark, table)
-    full = spark.table(table)
-    # survivors = tombstone-filtered MARKED rows: compaction also
-    # physically sweeps unmarked crash-append garbage (review r11 —
-    # those rows are invisible to pairs and unreachable by seq-scoped
-    # tombstones, so without this sweep a GDPR id stranded in a crashed
-    # append would sit in the warehouse forever). The sweep runs even
-    # with NO tombstones pending (second review r11: a GDPR id whose
-    # rows exist ONLY in an unmarked batch produces no tombstone —
-    # delete returns 0 — so compact must be able to purge it alone).
-    survivors = _apply_tombstones(
-        full.filter(F.col("_batch").isin([r.batch_id for r in markers])),
-        tomb,
-        markers,
-    )
-    before = full.count()
-    after = survivors.count()
-    if after == 0:
-        raise ValueError(
-            f"minhash_table_compact: pending tombstones would EMPTY the "
-            f"index table {table} — drop it (drop_minhash_table) instead"
-        )
-    if after == before:
-        # nothing to rewrite (a compact killed between its two swaps
-        # also lands here on re-run — but the entry-point
-        # _table_swap_recover above already completed the stranded
-        # counts swap for that case)
-        if tomb is not None:
-            spark.sql(f"DROP TABLE {table}_tombstones")
-        return 0
-    buckets = meta["buckets"]
-    counts = (
-        survivors.groupBy("band_idx", "band_hash", "_batch")
-        .agg(F.count("*").alias("cnt"))
-        .select("band_idx", "band_hash", "cnt", "_batch")
-        .unionByName(
-            tiny_rows_df(
-                spark,
-                [(-1, 0, 0, b) for b in minhash_table_batches(spark, table)],
-                "band_idx int, band_hash long, cnt long, _batch string",
-            )
-        )
-    )
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old_auto = spark.conf.get(auto_key)
-    spark.conf.set(auto_key, "false")
-    try:
-        # stage BOTH rewrites before any swap: the counts CTAS reads the
-        # ORIGINAL data table (survivors lineage), so dropping it first
-        # would compute counts against a dead relation
-        targets = ((table, survivors), (f"{table}_counts", counts))
-        # clear BOTH staging twins BEFORE the first CTAS (second review
-        # r11): dropping each twin lazily just before its own CTAS
-        # leaves a reachable state where a STALE counts twin survives a
-        # staging crash without its data twin — indistinguishable from
-        # the data-swap-completed crash window _table_swap_recover
-        # heals, so recovery would rename pre-crash counts over the
-        # live table. With both drops upfront, a counts twin can only
-        # exist alongside this attempt's data twin (staged) or after
-        # the data swap consumed it (renamed away) — exactly the two
-        # states recovery distinguishes. Location too: a CTAS killed
-        # mid-write leaves files under {wh}/{tmp} with NO catalog
-        # entry — a bare DROP no-ops and the retry bricks on
-        # LOCATION_ALREADY_EXISTS (the r8 drop_minhash_table lesson).
-        for name, _df in targets:
-            _drop_table_and_location(spark, f"{name}_deleting")
-        for name, df in targets:
-            tmp = f"{name}_deleting"
-            df.repartition(
-                buckets, F.col("band_idx"), F.col("band_hash")
-            ).write.bucketBy(buckets, "band_idx", "band_hash").format(
-                "parquet"
-            ).saveAsTable(tmp)
-        # IF EXISTS (ADVICE r10): a retry after _table_swap_recover
-        # healed a mid-swap kill must not fail on the bare DROP
-        for name, _ in targets:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            spark.sql(f"ALTER TABLE {name}_deleting RENAME TO {name}")
-    finally:
-        spark.conf.set(auto_key, old_auto)
-    if tomb is not None:
-        spark.sql(f"DROP TABLE {table}_tombstones")
-    return before - after
 
+    def targets(survivors, markers):
+        counts = _guard_counts(survivors, [r.batch_id for r in markers])
+        return [(table, survivors), (f"{table}_counts", counts)]
 
-def _has_visible_file(spark: SparkSession, root: str) -> bool:
-    """True iff some file under ``root`` is visible to a Spark read of
-    it. Visibility follows Spark's listing rule (``util.spark_hidden``)
-    on EVERY path component under ``root`` — so a part file inside
-    committer litter (``_temporary/0/part-x``) is invisible, while
-    ``_bgroup=3/part-x`` is visible."""
-    sc = spark.sparkContext
-    jroot = sc._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jroot.getFileSystem(sc._jsc.hadoopConfiguration())
-    prefix = fs.makeQualified(jroot).toString().rstrip("/")
-    it = fs.listFiles(jroot, True)  # recursive
-    while it.hasNext():
-        rel = it.next().getPath().toString()[len(prefix):]
-        if not any(spark_hidden(c) for c in rel.split("/") if c):
-            return True
-    return False
+    return _compact_tables(
+        spark, table, targets, buckets=meta["buckets"],
+        cols=("band_idx", "band_hash"), who="minhash_table_compact",
+        drop_hint="drop_minhash_table",
+    )
 
 
 def minhash_index_delete(
@@ -1629,10 +1000,6 @@ def minhash_index_relayout(
     relayout reads as "no index", the live index keeps serving until
     the caller repoints. A source without the current stamp is refused
     (``minhash_index_meta``)."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
-        _fs_nonempty,
-    )
-
     meta = minhash_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"minhash_index_relayout: no index at {path}")
@@ -1676,12 +1043,6 @@ def minhash_index_relayout(
     spark.read.json(f"{path}/{_BATCH_DIR}").coalesce(1).write.mode(
         "append"
     ).json(f"{new_path}/{_BATCH_DIR}")
-    row = {k: meta[k] for k in _PARAMS}
-    row.update(bgroups=g, layout_version=LAYOUT_VERSION)
-    if meta.get("payload_cols"):
-        # payload schema is part of the index contract (r15) — the data
-        # rows above carried the values verbatim, meta must keep the pin
-        row["payload_cols"] = list(meta["payload_cols"])
-    tiny_rows_df(spark, [row]).coalesce(1).write.mode("overwrite").json(
-        f"{new_path}/{_META_DIR}"
-    )
+    # the payload pin carries over (r15) — the data rows above carried
+    # the values verbatim
+    _write_meta(spark, {**meta, "bgroups": g}, new_path)

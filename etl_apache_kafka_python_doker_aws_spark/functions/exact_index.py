@@ -21,21 +21,19 @@ lives):
                         any index size.
 * ``<t>_meta``        — pinned bucket count (appends into a different
                         bucketing would silently break co-location),
-                        payload schema and ``layout_version`` — the
-                        meta reader refuses any other layout (see
-                        ``dedup_index`` "Layout contract").
+                        payload schema and ``layout_version``.
 * ``<t>_batches``     — (batch_id, seq) markers, written LAST per
                         append (the commit marker; redelivery of a
                         marked batch_id is rejected loudly).
-* ``<t>_tombstones``  — (_id, del_seq) retraction sidecar, seq-scoped
-                        exactly like ``dedup_index._apply_tombstones``:
+* ``<t>_tombstones``  — (_id, del_seq) retraction sidecar, seq-scoped:
                         a re-appended id lives while its retracted
                         history stays dead.
 
-Shares the band tier's machinery (``dedup_index``): marker rows,
-seq joins, tombstone filters, NULL-rejecting retraction forms, and the
-drop-with-location hygiene. SINGLE-WRITER assumption on maintenance
-ops, same as the other tiers.
+Meta, markers, tombstones, retraction forms, the staged compaction swap
+and its recovery, and the drop-with-location hygiene are the shared
+storage protocol in ``index_store`` (its docstring holds the recover
+state table); this tier's one swap target is the data table.
+SINGLE-WRITER assumption on maintenance ops, same as the other tiers.
 """
 
 from __future__ import annotations
@@ -43,50 +41,47 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-    LAYOUT_VERSION,
-    _apply_tombstones,
-    _check_layout,
-    _drop_table_and_location,
+from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+    _append_marker,
+    _compact_tables,
+    _drop_tables,
+    _live_rows,
+    _marker_rows,
     _marker_seq_join,
+    _new_batch_seq,
     _pinned_payloads,
+    _read_meta,
+    _recover_tables,
+    _require_marked,
     _table_exists,
-    _table_marker_rows,
+    _tombstone_delete,
     _tombstones,
+    _write_meta,
 )
 
 #: Column names this tier owns (r15 payload columns must not shadow
 #: them — the band tier's _RESERVED_BAND_COLS rule)
 _RESERVED_SHA_COLS = frozenset({"content_hash", "_id", "_batch", "del_seq"})
-from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
 
 
 def sha_table_meta(spark: SparkSession, table: str) -> dict | None:
     """Pinned bucket count (+ r15 payload schema), or None if the
-    index doesn't exist yet; raises on a meta without the current
-    ``layout_version``."""
-    if not _table_exists(spark, f"{table}_meta"):
-        return None
-    row = spark.table(f"{table}_meta").first()
+    index doesn't exist yet; raises on an unreadable meta or one
+    without the current ``layout_version``."""
+    row = _read_meta(spark, table=table)
     if row is None:
         return None
-    _check_layout(row, f"exact index table {table}")
-    meta = {"buckets": int(row.buckets)}
-    meta["payload_cols"] = (
-        list(row.payload_cols)
-        if "payload_cols" in row.__fields__ and row.payload_cols
-        else []
-    )
-    return meta
+    return {"buckets": int(row["buckets"]), "payload_cols": row["payload_cols"]}
 
 
-def _require_data_table(spark: SparkSession, table: str, who: str) -> None:
-    """Meta exists (the caller checked) but the DATA table might not:
+def _require_data_table(spark: SparkSession, table: str, who: str) -> dict:
+    """The index's meta, after checking the DATA table exists too:
     a first append killed between its meta write and its data write
     leaves exactly that state (review r12 — the enumerated-crash-state
     sweep). ``spark.table`` would throw a raw TABLE_OR_VIEW_NOT_FOUND
     with no recovery guidance; name the state and the heal instead."""
-    if sha_table_meta(spark, table) is None:
+    meta = sha_table_meta(spark, table)
+    if meta is None:
         raise ValueError(f"{who}: no index table {table}")
     if not _table_exists(spark, table):
         raise ValueError(
@@ -94,27 +89,11 @@ def _require_data_table(spark: SparkSession, table: str, who: str) -> None:
             "first append crashed between its meta and data writes; retry "
             f"sha_table_append (same batch_id) or drop_sha_table({table!r})"
         )
+    return meta
 
 
 def sha_table_batches(spark: SparkSession, table: str) -> list[str]:
-    return [r.batch_id for r in _table_marker_rows(spark, table)]
-
-
-def _sha_recover(spark: SparkSession, table: str) -> None:
-    """Heal the one swap window compaction has (single staged twin —
-    no paired-swap states, by construction): a ``<t>_deleting`` twin
-    next to a MISSING live table is a swap killed between its DROP and
-    RENAME → rename the twin in; a twin next to a LIVE table is a
-    crashed staging CTAS → drop it (with its warehouse location, the
-    r8/r11 lesson). Run by every entry point. Single-writer: presence
-    is only unambiguous when no compact runs concurrently."""
-    twin = f"{table}_deleting"
-    if not _table_exists(spark, twin):
-        return
-    if _table_exists(spark, table):
-        _drop_table_and_location(spark, twin)
-    else:
-        spark.sql(f"ALTER TABLE {twin} RENAME TO {table}")
+    return [r.batch_id for r in _marker_rows(spark, table=table)]
 
 
 def sha_table_append(
@@ -145,7 +124,7 @@ def sha_table_append(
     verdict's corpus by a stored-column predicate as a pushed scan
     filter (keeps the co-located zero-shuffle plan)."""
     spark = df.sparkSession
-    _sha_recover(spark, table)
+    _recover_tables(spark, [table])
     meta = sha_table_meta(spark, table)
     if meta is not None and meta["buckets"] != buckets:
         raise ValueError(
@@ -153,21 +132,12 @@ def sha_table_append(
             f"append requested {buckets} — appends must match the pinned "
             "bucket count (co-location breaks silently otherwise)"
         )
-    existing = sha_table_batches(spark, table)
-    if batch_id in existing:
-        raise ValueError(
-            f"sha_table_append: batch_id {batch_id!r} already appended to "
-            f"{table} — use a fresh batch_id per delivery"
-        )
+    seq = _new_batch_seq(_marker_rows(spark, table=table), batch_id,
+                         "sha_table_append", table)
     pay = _pinned_payloads(df, meta, payload_cols, "sha_table_append",
                            _RESERVED_SHA_COLS)
     if meta is None:
-        mrow = {"buckets": buckets, "layout_version": LAYOUT_VERSION}
-        if pay:
-            mrow["payload_cols"] = pay
-        tiny_rows_df(spark, [mrow]).coalesce(1).write.mode(
-            "overwrite"
-        ).saveAsTable(f"{table}_meta")
+        _write_meta(spark, {"buckets": buckets, "payload_cols": pay}, table=table)
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup import (
         content_hash,
     )
@@ -189,9 +159,7 @@ def sha_table_append(
     rows.repartition(buckets, F.col("content_hash")).write.mode(
         "append"
     ).bucketBy(buckets, "content_hash").format("parquet").saveAsTable(table)
-    tiny_rows_df(
-        spark, [{"batch_id": batch_id, "seq": len(existing)}]
-    ).write.mode("append").saveAsTable(f"{table}_batches")
+    _append_marker(spark, {"batch_id": batch_id, "seq": seq}, table=table)
 
 
 def sha_table_dedup_batch(
@@ -221,21 +189,16 @@ def sha_table_dedup_batch(
     band/ANN tier rule); a keeper always satisfies the predicate. A
     pushed scan filter, so the co-located zero-Exchange plan is
     untouched at any selectivity."""
-    _sha_recover(spark, table)
+    _recover_tables(spark, [table])
     _require_data_table(spark, table, "sha_table_dedup_batch")
-    markers = _table_marker_rows(spark, table)
-    marked = [r.batch_id for r in markers]
-    if batch_id not in marked:
-        raise ValueError(
-            f"sha_table_dedup_batch: batch_id {batch_id!r} is not a MARKED "
-            f"batch of {table} (marked: {marked}) — a crashed append must "
-            "be compacted away and re-appended"
-        )
+    markers = _marker_rows(spark, table=table)
+    marked = _require_marked(markers, batch_id, "sha_table_dedup_batch", table)
     batch_seq = next(int(r.seq) for r in markers if r.batch_id == batch_id)
-    live = _apply_tombstones(
+    live = _live_rows(
         spark.table(table).filter(F.col("_batch").isin(marked)),
-        _tombstones(spark, table),
+        _tombstones(spark, table=table),
         markers,
+        keep_unmarked=True,
     )
     if where is not None:
         live = live.filter(where)
@@ -273,27 +236,17 @@ def sha_table_delete(
     ≤ 1). Auto-compacts past ``compact_threshold`` dead mass (0 forces,
     >1 defers — the latency-sensitive endpoint pattern). Returns live
     rows retracted."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        _tombstone_delete,
-    )
-
-    _sha_recover(spark, table)
+    _recover_tables(spark, [table])
     _require_data_table(spark, table, "sha_table_delete")
-    markers = _table_marker_rows(spark, table)
-    full = spark.table(table).filter(
-        F.col("_batch").isin([r.batch_id for r in markers])
-    )
-    live = _apply_tombstones(full, _tombstones(spark, table), markers)
     return _tombstone_delete(
         spark,
         table,
         ids,
         who="sha_table_delete",
         drop_hint="drop_sha_table",
-        markers=markers,
-        live=live,
-        full=full,
-        n_total_fn=full.count,
+        n_total_fn=lambda markers: _live_rows(
+            spark.table(table), None, markers
+        ).count(),
         compact_fn=lambda: sha_table_compact(spark, table),
         compact_threshold=compact_threshold,
     )
@@ -307,52 +260,18 @@ def sha_table_compact(spark: SparkSession, table: str) -> int:
     orphans — unreachable by seq-scoped tombstones, so compact rewrites
     whenever marked live survivors differ from the physical table.
     Crash windows: staged-twin-beside-live and twin-without-live are
-    both healed by ``_sha_recover`` at every entry point; a kill after
-    the swap but before the tombstone drop leaves tombstones that
-    anti-join already-gone rows (no-op) and the next compact's
-    nothing-to-rewrite exit drops them. SINGLE-WRITER per index.
-    Returns the number of dead rows compacted away."""
-    _sha_recover(spark, table)
-    meta = sha_table_meta(spark, table)
-    if meta is None:
-        raise ValueError(f"sha_table_compact: no index table {table}")
-    _require_data_table(spark, table, "sha_table_compact")
-    markers = _table_marker_rows(spark, table)
-    tomb = _tombstones(spark, table)
-    survivors = _apply_tombstones(
-        spark.table(table).filter(
-            F.col("_batch").isin([r.batch_id for r in markers])
-        ),
-        tomb,
-        markers,
+    both healed by ``index_store._recover_tables`` at every entry point;
+    a kill after the swap but before the tombstone drop leaves
+    tombstones that anti-join already-gone rows (no-op) and the next
+    compact's nothing-to-rewrite exit drops them. SINGLE-WRITER per
+    index. Returns the number of dead rows compacted away."""
+    _recover_tables(spark, [table])
+    meta = _require_data_table(spark, table, "sha_table_compact")
+    return _compact_tables(
+        spark, table, lambda survivors, _markers: [(table, survivors)],
+        buckets=meta["buckets"], cols=("content_hash",),
+        who="sha_table_compact", drop_hint="drop_sha_table",
     )
-    before = spark.table(table).count()
-    after = survivors.count()
-    if after == 0 and markers:
-        raise ValueError(
-            f"sha_table_compact: pending tombstones would EMPTY the index "
-            f"table {table} — drop it (drop_sha_table) instead"
-        )
-    # with NO markers, after==0 is the crashed-first-append state (only
-    # unmarked orphans exist) — sweeping to an empty table IS the
-    # documented recovery, not data loss (review r12)
-    if after == before:
-        if tomb is not None:
-            spark.sql(f"DROP TABLE {table}_tombstones")
-        return 0
-    twin = f"{table}_deleting"
-    _drop_table_and_location(spark, twin)  # clear any crashed staging
-    # repartition WITH the bucket count (review r12 / the r10 lesson:
-    # repartition(col) alone uses shuffle.partitions tasks, and bucketBy
-    # then writes one file per (task, bucket) — files = tasks × buckets)
-    survivors.repartition(meta["buckets"], F.col("content_hash")).write.bucketBy(
-        meta["buckets"], "content_hash"
-    ).format("parquet").saveAsTable(twin)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {twin} RENAME TO {table}")
-    if tomb is not None:
-        spark.sql(f"DROP TABLE {table}_tombstones")
-    return before - after
 
 
 def drop_sha_table(spark: SparkSession, table: str) -> None:
@@ -360,11 +279,4 @@ def drop_sha_table(spark: SparkSession, table: str) -> None:
     (DROP alone is not idempotent across sessions — the r8 lesson) and
     including the staging twin, so a reused name can never resurrect
     purged data (the r11 drop-twins lesson)."""
-    for n in (
-        table,
-        f"{table}_meta",
-        f"{table}_batches",
-        f"{table}_tombstones",
-        f"{table}_deleting",
-    ):
-        _drop_table_and_location(spark, n)
+    _drop_tables(spark, [table])

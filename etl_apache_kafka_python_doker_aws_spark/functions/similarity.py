@@ -395,36 +395,27 @@ def _model_lit(values: list) -> Column:
     """The model table as ONE Catalyst ``Literal`` node (r16, VERDICT
     r15 #3). History of this hot spot: ``F.lit`` recursed one py4j
     Column per scalar (~1.4 s per 8×32×8 codebook set, r10); the r10-r15
-    SQL ``array(array(…))`` text parses once (``_expr_cached``) and is
-    bit-identical (repr() shortest-exact + correctly-rounded JVM parse,
-    'D'-pinned DOUBLE) — but the parsed tree still holds ~n_elements
-    CreateArray/Literal nodes, and every subsequent DataFrame
-    composition step re-ANALYZES the whole plan, so ~12 steps per
-    search call × ~3k literal leaves stayed the construction wall
-    (~1.0 s/call). A single ``Literal`` whose VALUE is the prebuilt
-    ArrayData is O(1) for every analyzer walk: values cross py4j as raw
-    IEEE-754 bytes (struct.pack → ByteBuffer → UnsafeArrayData), so
-    they are bit-identical to both older forms (pinned element-wise in
+    SQL ``array(array(…))`` text held ~n_elements CreateArray/Literal
+    nodes, and every subsequent DataFrame composition step re-ANALYZES
+    the whole plan, so ~12 steps per search call × ~3k literal leaves
+    stayed the construction wall (~1.0 s/call). A single ``Literal``
+    whose VALUE is the prebuilt ArrayData is O(1) for every analyzer
+    walk: values cross py4j as raw IEEE-754 bytes (struct.pack →
+    ByteBuffer → UnsafeArrayData), so they are bit-identical to
+    ``F.lit`` (pinned element-wise in
     tests/test_operators_misc.py::test_model_lit_bit_identical_to_lit),
     and the plan prints/canonicalizes exactly like the constant-folded
     form the optimizer produced anyway. The built Column is
     session-cached keyed on CONTENT (``_model_key`` — expression
-    construction, never data); non-classic sessions or unexpected
-    shapes fall back to the r15 SQL form."""
-
-    def build() -> Column:
-        col = _literal_col(values)
-        return col if col is not None else F.expr(_model_sql(values))
-
-    return _col_cached("lit:" + _model_key(values), build)
+    construction, never data)."""
+    return _col_cached("lit:" + _model_key(values), lambda: _literal_col(values))
 
 
 def _model_key(values) -> str:
     """Content digest of a (possibly nested) model table — the cache
     key for built literal/LUT Columns. Raises on non-finite values
     (model tables are finite by construction; NaN/Inf here means a
-    broken training step, rejected loudly like ``_model_sql`` always
-    did)."""
+    broken training step, rejected loudly)."""
     import hashlib
     import struct as _struct
 
@@ -446,100 +437,67 @@ def _model_key(values) -> str:
     return h.hexdigest()
 
 
-_LITERAL_FALLBACK_WARNED = False
-
-
-def _literal_col(values: list) -> Column | None:
+def _literal_col(values: list) -> Column:
     """Build the single-``Literal`` Column for a non-empty depth-1 or
-    depth-2 float table via the classic py4j surface; None when the
-    shape or the session doesn't support it (caller falls back to the
-    SQL-text form). The ByteBuffer hop moves each row in ONE py4j
-    transfer instead of one call per scalar. A py4j failure on a live
-    session also falls back, with a RuntimeWarning once per process —
-    the SQL-text form is correct but re-analyzes ~n_elements literal
-    nodes per composition step, so the slowdown must not be silent."""
+    depth-2 float table via the classic py4j surface (the package needs
+    the classic ``SparkContext`` JVM handle everywhere — the index
+    sidecar reads go through it too). Raises ValueError on any other
+    shape; a py4j error propagates. The ByteBuffer hop moves each row in
+    ONE py4j transfer instead of one call per scalar."""
     import struct as _struct
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkContext
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return None
-    try:
-        sc = spark.sparkContext
-        jvm = sc._jvm
-        gw = sc._gateway
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise ValueError("_literal_col: no active SparkContext")
+    jvm = sc._jvm
+    gw = sc._gateway
 
-        def darr(vals):
-            packed = _struct.pack(f">{len(vals)}d", *[float(v) for v in vals])
-            bb = jvm.java.nio.ByteBuffer.wrap(bytearray(packed))
-            arr = gw.new_array(jvm.double, len(vals))
-            bb.asDoubleBuffer().get(arr)
-            return arr
+    def darr(vals):
+        packed = _struct.pack(f">{len(vals)}d", *[float(v) for v in vals])
+        bb = jvm.java.nio.ByteBuffer.wrap(bytearray(packed))
+        arr = gw.new_array(jvm.double, len(vals))
+        bb.asDoubleBuffer().get(arr)
+        return arr
 
-        uad = jvm.org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        jt = jvm.org.apache.spark.sql.types
-        dbl = jt.DataTypes.DoubleType
-        if values and all(
-            isinstance(r, (list, tuple)) and len(r) > 0 for r in values
-        ):
-            oarr = gw.new_array(jvm.java.lang.Object, len(values))
-            for i, r in enumerate(values):
-                oarr[i] = uad.fromPrimitiveArray(darr(r))
-            data = jvm.org.apache.spark.sql.catalyst.util.GenericArrayData(oarr)
-            dt = jt.ArrayType(jt.ArrayType(dbl, False), False)
-        elif values and all(not isinstance(v, (list, tuple)) for v in values):
-            data = uad.fromPrimitiveArray(darr(values))
-            dt = jt.ArrayType(dbl, False)
-        else:
-            return None
-        lit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(data, dt)
-        return Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(lit))
-    except Exception as e:
-        global _LITERAL_FALLBACK_WARNED
-        if not _LITERAL_FALLBACK_WARNED:
-            import warnings
-
-            _LITERAL_FALLBACK_WARNED = True
-            warnings.warn(
-                f"_literal_col: single-Literal model path unavailable ({e!r}); "
-                "falling back to the slower SQL-text model literal",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return None
+    uad = jvm.org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    jt = jvm.org.apache.spark.sql.types
+    dbl = jt.DataTypes.DoubleType
+    if values and all(
+        isinstance(r, (list, tuple)) and len(r) > 0 for r in values
+    ):
+        oarr = gw.new_array(jvm.java.lang.Object, len(values))
+        for i, r in enumerate(values):
+            oarr[i] = uad.fromPrimitiveArray(darr(r))
+        data = jvm.org.apache.spark.sql.catalyst.util.GenericArrayData(oarr)
+        dt = jt.ArrayType(jt.ArrayType(dbl, False), False)
+    elif values and all(not isinstance(v, (list, tuple)) for v in values):
+        data = uad.fromPrimitiveArray(darr(values))
+        dt = jt.ArrayType(dbl, False)
+    else:
+        raise ValueError(
+            "_literal_col: model tables are non-empty depth-1 or depth-2 "
+            f"float lists, got {values!r:.80}"
+        )
+    lit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(data, dt)
+    return Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(lit))
 
 
-#: (applicationId, sha1(sql)) -> parsed Column. Session-scoped memo of
-#: PARSED MODEL-LITERAL EXPRESSIONS (r15): a pinned index model renders
-#: to the identical SQL text on every search/encode call, and Catalyst
-#: re-parsing the ~45 KB literal was the remaining driver-side
-#: construction wall (~0.4 s/call A/B-measured after the one-parse-per-
-#: LUT fix). A Column is an immutable expression DESCRIPTION — reusing
-#: it across plans is exactly what shared `F.col` expressions do — and
-#: nothing data-derived is memoized beyond what the caller already
-#: passed in as a literal. Keyed on applicationId so a restarted
-#: session never sees a stale JVM handle; bounded by eviction below.
+#: (applicationId, content tag) -> built Column; bounded by eviction in
+#: ``_col_cached``.
 _EXPR_CACHE: dict = {}
 _EXPR_CACHE_MAX = 64
 
 
-def _expr_cached(sql: str) -> Column:
-    import hashlib
-
-    return _col_cached(
-        "sql:" + hashlib.sha1(sql.encode()).hexdigest(), lambda: F.expr(sql)
-    )
-
-
 def _col_cached(tag: str, build) -> Column:
     """Session-scoped memo of BUILT COLUMNS keyed on (applicationId,
-    content tag) — generalizes the r15 parsed-SQL cache to whole
-    composed expressions (single-Literal models, full ADC LUTs). A
-    Column is an immutable expression description; reusing one across
-    plans is exactly what shared ``F.col`` expressions do. Nothing
-    data-derived is memoized beyond what the caller already passed in
-    as a literal."""
+    content tag) — whole composed expressions (single-Literal models,
+    full ADC LUTs). Keyed on applicationId so a restarted session never
+    sees a stale JVM handle. A Column is an immutable expression
+    description; reusing one across plans is exactly what shared
+    ``F.col`` expressions do. Nothing data-derived is memoized beyond
+    what the caller already passed in as a literal."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
@@ -557,23 +515,6 @@ def _col_cached(tag: str, build) -> Column:
         col = build()
         _EXPR_CACHE[key] = col
     return col
-
-
-def _model_sql(values) -> str:
-    """The SQL-text form of ``_model_lit`` — since r16 only the
-    fallback for sessions where the single-``Literal`` py4j path is
-    unavailable (e.g. no classic SparkContext); bit-identical by the
-    repr()/correctly-rounded-parse round-trip, 'D'-pinned DOUBLE."""
-
-    def render(v):
-        if isinstance(v, (list, tuple)):
-            return "array(" + ",".join(render(x) for x in v) + ")"
-        f = float(v)
-        if f != f or f in (float("inf"), float("-inf")):
-            raise ValueError(f"_model_lit: non-finite model value {v!r}")
-        return repr(f) + "D"
-
-    return render(values)
 
 
 def _residual(vec_col: Column, cell_col: Column, centroids: list[list[float]]) -> Column:

@@ -365,7 +365,7 @@ def compact_bucketed_table(spark: SparkSession, table: str) -> int:
     # CTAS killed mid-write leaves files with no catalog entry — a bare
     # DROP no-ops and the retry bricks on LOCATION_ALREADY_EXISTS (the
     # r8 lesson, same helper the _deleting twins use)
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
         _drop_table_and_location,
     )
 

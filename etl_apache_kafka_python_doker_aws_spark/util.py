@@ -95,7 +95,7 @@ def sidecar_json_rows(spark, path: str, with_file: bool = False) -> list | None:
     JSON line, carrying exactly the fields that line holds. Each index
     tier has one sidecar layout, stamped with ``layout_version`` in its
     meta row; the tier's meta reader checks the stamp
-    (``dedup_index._check_layout``), so marker and tally readers can
+    (``index_store._check_layout``), so marker and tally readers can
     rely on the current fields being present.
     ``with_file=True`` adds a ``_f`` field holding the source file URI
     (the ``input_file_name()`` replacement the dead-tally resolver

@@ -41,7 +41,7 @@ def _build(spark, tmp_path, name="ann", **kw):
 
 
 def test_reappended_id_lives_retracted_history_dead(spark, tmp_path):
-    """The seq-scoping contract (the dedup_index._apply_tombstones rule
+    """The seq-scoping contract (the index_store._tombstone_join rule
     on the ANN tier): delete id X, then re-append X under a NEW batch
     with a DIFFERENT vector — the re-appended row serves (dist 0 against
     its own vector) while the RETRACTED vector's row stays dead (a
@@ -231,8 +231,10 @@ def test_compact_rerun_heals_stale_markers(spark, tmp_path):
     strand the overstatement forever (no tally left to subtract, so
     the EMPTY guard and both auto statistics run off a phantom size)."""
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
-        _ann_marker_rows,
         _index_size_from_markers,
+    )
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+        _marker_rows,
     )
 
     corpus, rows, path = _build(spark, tmp_path)
@@ -250,12 +252,12 @@ def test_compact_rerun_heals_stale_markers(spark, tmp_path):
     shutil.copytree(stale, marker_dir)
     shutil.copytree(tombs, f"{path}/_graft_tombstones")
     shutil.copytree(dead, f"{path}/_graft_dead")
-    assert _index_size_from_markers(_ann_marker_rows(spark, path)) == 60
+    assert _index_size_from_markers(_marker_rows(spark, path)) == 60
     assert _ann_live_size(spark, path) == 57  # tally still subtracts
     assert ann_index_compact(spark, path) == 0  # the zero-dead early exit
     assert not os.path.exists(f"{path}/_graft_tombstones")
     assert not os.path.exists(f"{path}/_graft_dead")
-    assert _index_size_from_markers(_ann_marker_rows(spark, path)) == 57, \
+    assert _index_size_from_markers(_marker_rows(spark, path)) == 57, \
         "early exit must heal the stale markers before dropping the tally"
     assert _ann_live_size(spark, path) == 57
 
@@ -394,21 +396,19 @@ def test_delete_list_form_plans_pushed_id_filter(spark, tmp_path):
     the `_id IN (…)` predicate to the parquet reader (row-group skip);
     the DataFrame form legitimately plans a LeftSemi join instead. Pins
     the exact composition ann_index_delete builds (_retraction_forms →
-    _ann_live_rows)."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
-        _ann_live_rows,
-        _ann_marker_rows,
-    )
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    _live_rows)."""
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+        _live_rows,
+        _marker_rows,
         _retraction_forms,
     )
 
     corpus, rows, path = _build(spark, tmp_path)
     codes = spark.read.parquet(path)
-    markers = _ann_marker_rows(spark, path)
+    markers = _marker_rows(spark, path)
     hit, _, gone = _retraction_forms(codes, [1, 2, 3], "test")
     assert gone is None, "list form must keep the pushed-In shape"
-    live_hit = _ann_live_rows(hit, None, markers)
+    live_hit = _live_rows(hit, None, markers)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

@@ -104,7 +104,7 @@ def test_delete_empty_guard_and_auto_compact(spark, tbl):
         sha_table_delete(spark, tbl, list(range(20)))
     # 10 of 20 > 0.2 → auto-compact folds the sidecar away physically
     assert sha_table_delete(spark, tbl, list(range(10))) == 10
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
         _table_exists,
     )
 
@@ -139,7 +139,7 @@ def test_compact_sweeps_unmarked_orphans_and_heals_swap(spark, tbl):
         "parquet"
     ).saveAsTable(f"{tbl}_deleting")
     assert sha_table_dedup_batch(spark, tbl, "b0").count() == 20  # heals
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
         _table_exists,
     )
 
@@ -162,7 +162,7 @@ def test_compact_noop_keeps_table_and_drops_stale_tombstones(spark, tbl):
         "parquet"
     ).saveAsTable(f"{tbl}_tombstones")
     assert sha_table_compact(spark, tbl) == 0
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
         _table_exists,
     )
 
@@ -176,7 +176,7 @@ def test_drop_purges_twins(spark, tbl):
         "parquet"
     ).saveAsTable(f"{tbl}_deleting")
     drop_sha_table(spark, tbl)
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
         _table_exists,
     )
 

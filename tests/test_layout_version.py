@@ -15,6 +15,7 @@ from etl_apache_kafka_python_doker_aws_spark.functions import (
     ann_index as ai,
     dedup_index as di,
     exact_index as xi,
+    index_store,
 )
 from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
 
@@ -56,7 +57,7 @@ def _unstamp_json_meta(path):
 def _unstamp_table_meta(spark, table):
     row = spark.table(f"{table}_meta").first().asDict()
     row.pop("layout_version")
-    di._drop_table_and_location(spark, f"{table}_meta")
+    index_store._drop_table_and_location(spark, f"{table}_meta")
     tiny_rows_df(spark, [row]).write.saveAsTable(f"{table}_meta")
 
 
@@ -156,4 +157,4 @@ def test_stamp_is_written_and_legacy_layout_options_are_rejected(
                                   bgroups=0)
     (meta_file,) = glob.glob(os.path.join(path, "_graft_meta", "*.json"))
     with open(meta_file) as fh:
-        assert json.loads(fh.readline())["layout_version"] == di.LAYOUT_VERSION
+        assert json.loads(fh.readline())["layout_version"] == index_store.LAYOUT_VERSION

@@ -567,25 +567,24 @@ def test_literal_col_fast_path_engages_on_test_session(spark):
     assert _literal_col([0.5]) is not None
 
 
-def test_literal_col_fallback_warns_once(spark, monkeypatch):
-    """When the py4j build fails, _literal_col falls back (None) and
-    warns exactly once per process, however often it is called."""
-    import warnings
-
+def test_literal_col_raises_on_py4j_failure(spark, monkeypatch):
+    """There is no slower SQL-text fallback: a py4j failure while
+    building the single-Literal model column propagates, and a shape
+    other than a non-empty depth-1/depth-2 table is a ValueError."""
     from etl_apache_kafka_python_doker_aws_spark.functions import similarity
 
     def broken(_jc):
         raise RuntimeError("no classic ExpressionUtils")
 
+    with pytest.raises(ValueError, match="depth-1 or depth-2"):
+        similarity._literal_col([])
+    with pytest.raises(ValueError, match="depth-1 or depth-2"):
+        similarity._literal_col([[0.0], []])
     monkeypatch.setattr(similarity, "Column", broken)
-    monkeypatch.setattr(similarity, "_LITERAL_FALLBACK_WARNED", False)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        assert similarity._literal_col([[0.0, 1.0]]) is None
-        assert similarity._literal_col([0.5]) is None
-    fallback = [w for w in caught if "_literal_col" in str(w.message)]
-    assert len(fallback) == 1, [str(w.message) for w in caught]
-    assert issubclass(fallback[0].category, RuntimeWarning)
+    with pytest.raises(RuntimeError, match="no classic ExpressionUtils"):
+        similarity._literal_col([[0.0, 1.0]])
+    with pytest.raises(RuntimeError, match="no classic ExpressionUtils"):
+        similarity._literal_col([0.5])
 
 
 def test_tiny_rows_df_empty_rows_need_typed_schema(spark):

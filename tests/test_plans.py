@@ -711,7 +711,7 @@ def test_every_broadcast_hint_site_is_classified():
         ("functions/ann_index.py", "cand.select('query_id').distinct()"): GATED,
         ("functions/ann_index.py", "cand"): GATED,
         ("functions/ann_index.py", "q_side"): GATED,
-        ("functions/dedup_index.py", "mdf"): DIM,       # batch-marker frame (_marker_seq_join, shared by both index tiers)
+        ("functions/index_store.py", "mdf"): DIM,       # batch-marker frame (_marker_seq_join, shared by every index tier)
         ("functions/dedup.py", "n_total"): ONE_ROW,
         ("functions/dedup.py", "d_mass"): ONE_ROW,
         ("functions/similarity.py", "df"): GATED,       # _hint_if_bounded, the gate itself

@@ -259,7 +259,7 @@ def test_compact_bucketed_table_r12_hardening(spark):
         write_bucketed,
     )
 
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
         _drop_table_and_location,
     )
 
