@@ -93,7 +93,7 @@ and rebuild when it decays (same playbook as FAISS).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
@@ -912,13 +912,21 @@ def _write_batch(
     # _write_split: one file per cell dir for batch-sized appends, an
     # id-hash split key for the corpus-sized build (wide=True) so the
     # write isn't funneled through n_cells straggler tasks; encode
-    # keeps the input's parallelism map-side either way
+    # keeps the input's parallelism map-side either way.
+    # The marker's n_rows comes from this write, not from a recount of
+    # the batch lineage (which cost 2 jobs per append): the codes tier
+    # holds exactly one row per input row, and observing ABOVE the
+    # repartition puts the count in the write job's result stage, where
+    # Spark applies each task's update once even when a task re-runs.
+    written = Observation()
     _write_split(
         _encode_with_models(df, id_col, vec_col, meta, batch_id),
         "cell",
         meta["n_cells"],
         wide,
-    ).write.mode("append").partitionBy("cell").parquet(path)
+    ).observe(written, F.count(F.lit(1)).alias("n_rows")).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(path)
     vecs = df.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
@@ -926,7 +934,9 @@ def _write_batch(
     )
     _write_vec_tier(vecs, path, meta, wide)
     _append_marker(
-        spark, {"batch_id": batch_id, "seq": seq, "n_rows": df.count()}, path
+        spark,
+        {"batch_id": batch_id, "seq": seq, "n_rows": written.get["n_rows"]},
+        path,
     )
 
 

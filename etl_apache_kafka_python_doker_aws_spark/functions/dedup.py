@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_apache_kafka_python_doker_aws_spark.functions.text import tokenize
+from etl_apache_kafka_python_doker_aws_spark.util import _col_cached
 
 # Deterministic MinHash parameters (seeded; SURVEY.md §7 hard-parts (iv)).
 # 31-bit Mersenne prime: a*h+b stays < 2^62, no long overflow under ANSI mode.
@@ -75,8 +76,9 @@ def minhash_signature(text: Column | str, num_hashes: int = 32, shingle_n: int =
     NOTE: convenient for ad-hoc column use, but the nested HOFs
     re-evaluate the shingle-hash array per hash function (measured ~40
     ms/doc at 32 hashes). The pair pipeline uses
-    `minhash_signatures_df` — explode + groupBy-min — which computes each
-    shingle hash once and partial-aggregates map-side (the 100 TB shape).
+    `minhash_signatures_df`, the pure-projection form, which computes the
+    shingle-hash array once per doc as its own column and takes each
+    permutation's min over it (no shuffle).
     """
     sh = shingles(text, shingle_n)
     base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
@@ -121,6 +123,11 @@ def minhash_signatures_df(
         computed once per row and the 32 array_min passes scan it
         in-place. Zero shuffles; per-doc memory is O(doc length).
 
+    The expression Columns are parameter-only, so each is built once per
+    session (``util._col_cached``): building the 32-permutation ``_sig``
+    Column costs 0.34 s of py4j lambda round trips, while a select over
+    a reused one takes 0.05 s (4-core VM, median of 6).
+
     Returns (id_col, _sig array<long>[, carry_cols...]). Docs with no
     shingles (shorter than shingle_n words) get the sentinel all-p
     signature. ``carry_cols`` (r15) names input columns to pass through
@@ -130,54 +137,103 @@ def minhash_signatures_df(
     """
     from etl_apache_kafka_python_doker_aws_spark.util import ensure_parallelism
 
-    params = _hash_params(num_hashes, seed)
     df = ensure_parallelism(df)
-    # Hash tokens ONCE (as a materialized array column so the shingle
-    # expression references an attribute, not a recomputed subtree), then
-    # combine consecutive token hashes polynomially into shingle hashes —
-    # no shingle strings are ever built. Coefficients keep values < 2^62
-    # under ANSI mode (token hashes are 31-bit).
     carry = [F.col(c) for c in carry_cols]
     tok_hashed = df.select(
-        F.col(id_col).alias("_id"),
-        F.transform(
-            tokenize(text_col), lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
-        ).alias("_th"),
-        *carry,
+        F.col(id_col).alias("_id"), _token_hashes(text_col).alias("_th"), *carry
     )
-    n_sh = F.size("_th") - (shingle_n - 1)
-    shingle_hash = F.when(n_sh <= 0, F.array().cast("array<long>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_sh, F.lit(1))),
-            lambda i: F.pmod(
-                sum(
-                    (
-                        F.element_at(F.col("_th"), i + j) * (31 ** (shingle_n - 1 - j))
-                        for j in range(shingle_n)
-                    ),
-                    F.lit(0),
-                ),
-                F.lit(_MERSENNE),
-            ),
-        )
-    )
-    shingled = tok_hashed.select("_id", shingle_hash.alias("_sh"), *carry)
+    shingled = tok_hashed.select("_id", _shingle_hashes(shingle_n).alias("_sh"), *carry)
     return shingled.select(
         F.col("_id").alias(id_col),
-        F.array(
-            *[
-                F.coalesce(
-                    F.array_min(
-                        F.transform(
-                            F.col("_sh"), lambda h: F.pmod(a * h + b, F.lit(_MERSENNE))
-                        )
+        _signature(num_hashes, seed).alias("_sig"),
+        *carry,
+    )
+
+
+# The MinHash/LSH chain is parameter-only: each Column below is built once
+# per session by ``util._col_cached``, keyed on every column name and
+# parameter it reads (measured build cost in ``minhash_signatures_df``).
+
+
+def _tokens(text_col: str) -> Column:
+    return _col_cached(f"minhash.tok:{text_col}", lambda: tokenize(text_col))
+
+
+def _token_hashes(text_col: str) -> Column:
+    """Each token hashed ONCE, as a materialized array column, so the
+    shingle expression references an attribute, not a recomputed
+    subtree."""
+    return _col_cached(f"minhash.th:{text_col}", lambda: F.transform(
+        _tokens(text_col), lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
+    ))
+
+
+def _shingle_hashes(shingle_n: int) -> Column:
+    """Consecutive token hashes of ``_th`` combined polynomially into
+    shingle hashes — no shingle strings are ever built. Coefficients keep
+    values < 2^62 under ANSI mode (token hashes are 31-bit)."""
+    def build():
+        n_sh = F.size("_th") - (shingle_n - 1)
+        return F.when(n_sh <= 0, F.array().cast("array<long>")).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(n_sh, F.lit(1))),
+                lambda i: F.pmod(
+                    sum(
+                        (
+                            F.element_at(F.col("_th"), i + j)
+                            * (31 ** (shingle_n - 1 - j))
+                            for j in range(shingle_n)
+                        ),
+                        F.lit(0),
                     ),
                     F.lit(_MERSENNE),
+                ),
+            )
+        )
+
+    return _col_cached(f"minhash.sh:{shingle_n}", build)
+
+
+def _signature(num_hashes: int, seed: int) -> Column:
+    """``num_hashes`` affine permutations of ``_sh``, each reduced by
+    ``array_min`` (the all-p sentinel for a doc with no shingles)."""
+    def perm(a: int, b: int):
+        # closure factory (PySpark HOF lambdas must take exactly one param)
+        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE))
+
+    return _col_cached(
+        f"minhash.sig:{num_hashes}:{seed}",
+        lambda: F.array(
+            *[
+                F.coalesce(
+                    F.array_min(F.transform(F.col("_sh"), perm(a, b))),
+                    F.lit(_MERSENNE),
                 )
-                for (a, b) in params
+                for a, b in _hash_params(num_hashes, seed)
             ]
-        ).alias("_sig"),
-        *carry,
+        ),
+    )
+
+
+def _band_keys(num_hashes: int, bands: int) -> Column:
+    """``_sig`` exploded into ``bands`` (band_idx, band_hash) structs."""
+    rows_per_band = num_hashes // bands
+    return _col_cached(
+        f"minhash.bands:{num_hashes}:{bands}",
+        lambda: F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.struct(
+                    b.alias("band_idx"),
+                    F.xxhash64(
+                        F.concat_ws(",", F.transform(
+                            F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band),
+                            lambda x: x.cast("string"),
+                        ))
+                    ).alias("band_hash"),
+                ),
+            )
+        ),
     )
 
 
@@ -207,34 +263,17 @@ def banded_minhash_signatures(
     disagree on bucketing given equal (num_hashes, bands, shingle_n,
     seed).
     """
-    rows_per_band = num_hashes // bands
     # docs shorter than shingle_n words have NO shingles; they must be
     # excluded from pairing, not given a shared sentinel signature (which
     # would pair every short doc with every other at est_jaccard 1.0 and
     # silently delete them in dedup_corpus_near)
-    eligible = df.filter(F.size(tokenize(text_col)) >= shingle_n)
+    eligible = df.filter(F.size(_tokens(text_col)) >= shingle_n)
     sig = minhash_signatures_df(
         eligible, id_col, text_col, num_hashes, shingle_n, seed,
         carry_cols=carry_cols,
     ).select(F.col(id_col).alias("_id"), "_sig", *carry_cols)
     return sig.select(
-        "_id",
-        "_sig",
-        *carry_cols,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band_idx"),
-                    F.xxhash64(
-                        F.concat_ws(",", F.transform(
-                            F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ))
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("_band"),
+        "_id", "_sig", *carry_cols, _band_keys(num_hashes, bands).alias("_band")
     ).select("_id", "_sig", *carry_cols,
              F.col("_band.band_idx").cast("int").alias("band_idx"),
              "_band.band_hash")

@@ -256,7 +256,12 @@ def minhash_index_append(
     if meta is None:
         _write_meta(spark, {**params, "bgroups": g, "payload_cols": pay}, path)
     # n_rows on the marker (r15): the resume contract's "same delivery"
-    # evidence — one count job over the batch lineage, batch-sized
+    # evidence — one count job over the batch lineage, batch-sized. It
+    # cannot ride the write as an observation (as the ANN tier's does):
+    # the write filters short docs and explodes bands, so the INPUT row
+    # count is only visible below the repartition, in a shuffle-map
+    # stage, where a re-executed task may apply its count twice. The
+    # table tier's append has the same shape.
     n_in = df.count()
     banded = banded_minhash_signatures(
         df, id_col, text_col, num_hashes, bands, shingle_n, seed,

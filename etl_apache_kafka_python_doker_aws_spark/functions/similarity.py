@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_apache_kafka_python_doker_aws_spark.util import _col_cached
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns via zip_with + aggregate (JVM)."""
@@ -482,39 +484,6 @@ def _literal_col(values: list) -> Column:
         )
     lit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(data, dt)
     return Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(lit))
-
-
-#: (applicationId, content tag) -> built Column; bounded by eviction in
-#: ``_col_cached``.
-_EXPR_CACHE: dict = {}
-_EXPR_CACHE_MAX = 64
-
-
-def _col_cached(tag: str, build) -> Column:
-    """Session-scoped memo of BUILT COLUMNS keyed on (applicationId,
-    content tag) — whole composed expressions (single-Literal models,
-    full ADC LUTs). Keyed on applicationId so a restarted session never
-    sees a stale JVM handle. A Column is an immutable expression
-    description; reusing one across plans is exactly what shared
-    ``F.col`` expressions do. Nothing data-derived is memoized beyond
-    what the caller already passed in as a literal."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return build()
-    key = (spark.sparkContext.applicationId, tag)
-    col = _EXPR_CACHE.get(key)
-    if col is None:
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-            # drop entries from other sessions first, else oldest
-            for k in [k for k in _EXPR_CACHE if k[0] != key[0]] or [
-                next(iter(_EXPR_CACHE))
-            ]:
-                _EXPR_CACHE.pop(k, None)
-        col = build()
-        _EXPR_CACHE[key] = col
-    return col
 
 
 def _residual(vec_col: Column, cell_col: Column, centroids: list[list[float]]) -> Column:

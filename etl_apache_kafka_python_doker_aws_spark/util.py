@@ -206,6 +206,65 @@ def sidecar_json_append(spark, path: str, row: dict, name_hint: str = "row") -> 
         raise IOError(f"sidecar_json_append: rename failed for {final}")
 
 
+#: (applicationId, content tag) -> built Column; bounded by eviction in
+#: ``_col_cached``.
+_EXPR_CACHE: dict = {}
+_EXPR_CACHE_MAX = 64
+
+
+def _col_cached(tag: str, build) -> Column:
+    """Session-scoped memo of BUILT COLUMNS keyed on (applicationId,
+    content tag) — parameter-only composed expressions: single-Literal
+    models, full ADC LUTs, the MinHash/LSH chain. ``tag`` must name
+    everything the built Column depends on (column names, parameters,
+    model content). Keyed on applicationId so a restarted session never
+    sees a stale JVM handle. A Column is an immutable expression
+    description; reusing one across plans is exactly what shared
+    ``F.col`` expressions do. Nothing data-derived is memoized beyond
+    what the caller already passed in as a literal."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return build()
+    key = (spark.sparkContext.applicationId, tag)
+    col = _EXPR_CACHE.get(key)
+    if col is None:
+        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
+            # drop entries from other sessions first, else oldest
+            for k in [k for k in _EXPR_CACHE if k[0] != key[0]] or [
+                next(iter(_EXPR_CACHE))
+            ]:
+                _EXPR_CACHE.pop(k, None)
+        col = build()
+        _EXPR_CACHE[key] = col
+    return col
+
+
+_ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
+_arrow_off_warned = False
+
+
+def _warn_if_arrow_off(spark) -> None:
+    """Warn once per process when ``tiny_rows_df`` is about to take the
+    ~26× slower Python-RDD path because the session lacks the Arrow
+    conf."""
+    global _arrow_off_warned
+    if _arrow_off_warned:
+        return
+    if spark.conf.get(_ARROW_CONF, "false").strip().lower() != "true":
+        import warnings
+
+        _arrow_off_warned = True
+        warnings.warn(
+            f"tiny_rows_df: {_ARROW_CONF} is not 'true' in this session, so "
+            "metadata frames take the Python-RDD path (~26x slower per "
+            "call than Arrow); set the conf to 'true'",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+
 def tiny_rows_df(spark, rows, schema=None) -> DataFrame:
     """Arrow local-relation frame for METADATA-SIZED row sets (markers,
     tombstones, tallies, count sentinels — review r12).
@@ -216,8 +275,14 @@ def tiny_rows_df(spark, rows, schema=None) -> DataFrame:
     path, 26×), and every union/join against such a frame drags Python
     workers into an otherwise JVM-side job. ``rows``: a list of dicts
     sharing one key set, or a list of tuples with an explicit
-    ``schema`` (DDL string or StructType)."""
+    ``schema`` (DDL string or StructType).
+
+    Without ``spark.sql.execution.arrow.pyspark.enabled=true`` Spark
+    silently takes the Python-RDD path instead; that warns once per
+    process (``RuntimeWarning``) and still returns the right frame."""
     import pandas as pd
+
+    _warn_if_arrow_off(spark)
 
     if schema is None:
         names = None

@@ -3,8 +3,10 @@ connection with the fixture views pre-registered (mirrors the driver)."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -92,3 +94,59 @@ def duck_smoke():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+#: JSON-lines report of the Spark state each test module leaves behind.
+LEAK_REPORT = os.path.join(tempfile.gettempdir(), "spark-graft-test-leaks.jsonl")
+
+
+def _spark_state() -> dict | None:
+    """Persisted RDDs (including ``localCheckpoint`` blocks), catalog
+    tables and views, and cached tables of the live session, or None
+    when no session runs. Metadata calls only: no Spark job."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    sc = SparkContext._active_spark_context
+    spark = SparkSession.getActiveSession()
+    if sc is None or spark is None:
+        return None
+    rdds = sc._jsc.getPersistentRDDs()
+    tables = {t.name: t.isTemporary for t in spark.catalog.listTables()}
+    return {
+        "rdds": {int(k): rdds.get(k).toString() for k in rdds.keySet()},
+        "tables": tables,
+        "cached": sorted(
+            n for n, temp in tables.items() if spark.catalog.isCached(n)
+        ),
+    }
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _report_leftover_spark_state(request):
+    """Report-only: append to ``LEAK_REPORT`` what this module added to
+    the session's persisted RDDs and catalog tables, and which tables
+    are cached at its teardown. It never fails or skips a test; a
+    reporting error is written to the report instead."""
+    try:
+        before = _spark_state() or {"rdds": {}, "tables": {}}
+    except Exception as e:  # report-only: never fail the module
+        before = {"rdds": {}, "tables": {}, "error": repr(e)}
+    yield
+    try:
+        after = _spark_state()
+        if after is None:
+            return
+        record = {
+            "module": request.module.__name__,
+            "new_rdds": [d for i, d in after["rdds"].items()
+                         if i not in before["rdds"]],
+            "new_tables": [n for n in after["tables"]
+                           if n not in before["tables"]],
+            "cached_tables": after["cached"],
+            "persisted_rdds": len(after["rdds"]),
+        }
+    except Exception as e:  # report-only: never fail the module
+        record = {"module": request.module.__name__, "error": repr(e)}
+    with open(LEAK_REPORT, "a") as out:
+        out.write(json.dumps(record) + "\n")

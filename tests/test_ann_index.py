@@ -1284,3 +1284,33 @@ def test_doc_map_form_on_payload_backed_index(spark, tmp_path):
     assert {(r.query_doc, r.neighbor_doc) for r in pairs} == {
         (703, 503), (703, 603)
     }, pairs
+
+
+def test_append_marker_n_rows_comes_from_the_write(spark, tmp_path, jobs_during):
+    """The batch marker's ``n_rows`` is observed on the codes-tier write,
+    with no separate counting job: a 25-row append launches at most 4
+    Spark jobs (the two tier writes), and the marker holds the rows
+    appended — for the build, a normal batch and an empty batch."""
+    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+        _marker_rows,
+    )
+
+    corpus, _ = _corpus(spark)
+    path = str(tmp_path / "ann")
+    ann_index_build(corpus, "vec_id", "embedding", path, dim=16,
+                    n_cells=4, n_subspaces=4, n_centroids=8)
+    rng = np.random.RandomState(3)
+    batch = spark.createDataFrame(
+        [(1000 + i, rng.randn(16).astype(float).tolist()) for i in range(25)],
+        "vec_id long, embedding array<double>",
+    )
+    _, n_jobs = jobs_during(
+        lambda: ann_index_append(batch, "vec_id", "embedding", path,
+                                 batch_id="b1")
+    )
+    assert n_jobs <= 4, n_jobs
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    ann_index_append(empty, "vec_id", "embedding", path, batch_id="b2")
+    assert {r.batch_id: r.n_rows for r in _marker_rows(spark, path)} == {
+        "base": 60, "b1": 25, "b2": 0,
+    }

@@ -1345,3 +1345,53 @@ def test_dedup_batch_resume_both_tiers(spark, tmp_path):
             b1.limit(1), "doc_id", "text", tbl, batch_id="b1", resume=True
         )
     drop_minhash_table(spark, tbl)
+
+
+def _banded_rows(spark, **params):
+    from etl_apache_kafka_python_doker_aws_spark.functions.dedup import (
+        banded_minhash_signatures,
+    )
+
+    _, _, both = _frames(spark)
+    return sorted(
+        (r._id, tuple(r._sig), r.band_idx, r.band_hash)
+        for r in banded_minhash_signatures(both, "doc_id", "text", **params).collect()
+    )
+
+
+def test_minhash_chain_is_built_once_per_session(spark, monkeypatch):
+    """The MinHash/LSH expression chain is parameter-only and memoized:
+    a repeat ``banded_minhash_signatures`` call with the same parameters
+    builds no HOF Column at all, and the memoized chain gives the same
+    rows as one built fresh (memo bypassed)."""
+    from etl_apache_kafka_python_doker_aws_spark.functions import dedup
+
+    first = _banded_rows(spark)
+    calls = {"transform": 0, "filter": 0}
+    for name in calls:
+        real = getattr(F, name)
+
+        def counted(*a, _name=name, _real=real, **kw):
+            calls[_name] += 1
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(F, name, counted)
+    again = _banded_rows(spark)
+    assert calls == {"transform": 0, "filter": 0}
+    assert again == first
+    monkeypatch.setattr(dedup, "_col_cached", lambda tag, build: build())
+    fresh = _banded_rows(spark)
+    assert calls["transform"] > 0 and calls["filter"] > 0
+    assert fresh == first
+
+
+def test_minhash_memo_key_names_every_parameter(spark):
+    """Each parameter that defines the chain is in its memo key: a
+    different seed, shingle_n, num_hashes or bands gives different rows,
+    and asking for the original parameters again gives the original
+    rows."""
+    base = _banded_rows(spark)
+    for change in ({"seed": 7}, {"shingle_n": 2}, {"num_hashes": 16},
+                   {"bands": 8}):
+        assert _banded_rows(spark, **change) != base, change
+    assert _banded_rows(spark) == base

@@ -617,3 +617,31 @@ def test_tiny_rows_df_none_in_dict_rows_stays_null(spark):
     assert rows[1] == 10
     assert rows[2] is None, f"expected NULL, got {rows[2]!r}"
     assert df.filter(F.col("n").isNull()).count() == 1
+
+
+def test_tiny_rows_df_warns_once_without_arrow(spark, monkeypatch):
+    """Without the Arrow conf ``tiny_rows_df`` still returns the right
+    frame, but its Python-RDD fallback is loud: one RuntimeWarning per
+    process naming the conf, however many calls take it."""
+    import warnings
+
+    from etl_apache_kafka_python_doker_aws_spark import util
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    monkeypatch.setattr(util, "_arrow_off_warned", False)
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            frames = [util.tiny_rows_df(spark, [{"k": i, "v": "x"}])
+                      for i in range(2)]
+    finally:
+        spark.conf.set(conf, old)
+    hits = [w for w in caught if issubclass(w.category, RuntimeWarning)
+            and conf in str(w.message)]
+    assert len(hits) == 1, [str(w.message) for w in caught]
+    assert "26x" in str(hits[0].message)
+    assert [[tuple(r) for r in f.collect()] for f in frames] == [
+        [(0, "x")], [(1, "x")]
+    ]
