@@ -166,13 +166,13 @@ def _op_ann_index_search(spark, sf_dir: str):
 
 def _op_index_delete(spark, sf_dir: str):
     """Operator path (r11, VERDICT r10 #6): retraction from both
-    persisted indexes — minhash_index_delete (localized band_idx/_bgroup
-    dir rewrite) + ann_index_delete (r12: request-sized TOMBSTONE
-    append, no dir rewrite) of a fresh 25-id chunk per pass, so
-    delete-cost regressions are caught the way query regressions are.
+    persisted indexes — minhash_index_delete and ann_index_delete, each
+    a request-sized TOMBSTONE append (no dir rewrite), of a fresh 25-id
+    chunk per pass, so delete-cost regressions are caught the way query
+    regressions are.
     Setup (untimed): build both indexes once; reserve disjoint id
     chunks so every warm/timed pass deletes ids that are still live (a
-    re-delete would no-op and time nothing). The ANN deletes stay below
+    re-delete would no-op and time nothing). Both deletes stay below
     the auto-compact threshold at this corpus/pass count — the timed
     path is the pure sidecar append."""
     import tempfile

@@ -6,7 +6,7 @@ built it). Mirrors ``dedup_index.py``: tiny pinned models in a meta
 subdir, encoded rows in partitioned parquet, loud guards on drift and
 redelivery.
 
-Index layout at ``path`` (``layout_version`` 1 — the only layout this
+Index layout at ``path`` (``layout_version`` 2 — the only layout this
 module reads; ``ann_index_meta`` refuses a meta without the stamp, and
 such an index is rebuilt from source). Meta-last commit, batch markers,
 seq-scoped tombstones and the payload pin are the shared storage
@@ -97,14 +97,15 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+    _AUTO_COMPACT_SHARE,
     _BATCH_DIR,
     _TOMB_DIR,
     _append_marker,
     _append_tombstones,
-    _dead_rows,
-    _dir_swap,
+    _fold_partition_dirs,
     _fs_nonempty,
     _live_rows,
+    _local_path,
     _marker_rows,
     _new_batch_seq,
     _pinned_payloads,
@@ -428,9 +429,7 @@ def _ann_recover(path: str) -> None:
     physically gone (a no-op), and a missing marker dir only degrades
     the auto size statistic (it reads as 0 rows, so the auto shortlist
     falls to its floor) until the next write entry point heals it."""
-    from urllib.parse import urlparse
-
-    if urlparse(path).scheme not in ("", "file"):
+    if not _local_path(path):
         return
     from etl_apache_kafka_python_doker_aws_spark.plans.merge import _recover
 
@@ -1438,7 +1437,8 @@ def ann_index_dedup_batch(
 
 
 def ann_index_delete(
-    spark: SparkSession, path: str, ids, *, compact_threshold: float = 0.2
+    spark: SparkSession, path: str, ids, *,
+    compact_threshold: float = _AUTO_COMPACT_SHARE,
 ) -> int:
     """Delete vectors from the persisted index — retraction /
     right-to-be-forgotten for a serving ANN index. ``ids`` is a Python
@@ -1531,11 +1531,9 @@ def ann_index_delete(
         {"del_seq": del_seq, "n_dead": removed},
         name_hint="dead",
     )
-    from urllib.parse import urlparse
-
     will_compact = bool(
         n_total and (dead_prev + removed) / n_total > compact_threshold
-    ) and urlparse(path).scheme in ("", "file")
+    ) and _local_path(path)
     if not will_compact:
         # fold the tally once the per-delete files pile up (VERDICT r12
         # #6): every ``shortlist="auto"`` search lists + collects this
@@ -1660,8 +1658,8 @@ def _rewrite_markers(spark: SparkSession, path: str, markers: list) -> bool:
 def ann_index_compact(spark: SparkSession, path: str) -> int:
     """Fold accumulated tombstones into the index physically: rewrite
     ONLY the ``cell=`` / ``_vbucket=`` directories that still hold DEAD
-    rows (``_dir_swap`` — every
-    untouched directory keeps its files byte-identical), recompute the
+    rows (``index_store._fold_partition_dirs`` — every untouched
+    directory keeps its files byte-identical), recompute the
     batch markers' ``n_rows`` from the physical survivors (atomic
     staging swap on the marker dir), then drop the dead tally and the
     tombstone sidecar LAST. Dead = seq-scoped tombstoned rows PLUS
@@ -1715,67 +1713,23 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
 
     tomb = _tombstones(spark, path)
     markers = _marker_rows(spark, path)
-    codes = spark.read.parquet(path)
-    cell_hist = (
-        _dead_rows(codes, tomb, markers)
-        .groupBy("cell")
-        .agg(F.count("*").alias("_n"))
-        .collect()
+    n_dead = _fold_partition_dirs(
+        spark.read.parquet(path), path, "cell", tomb, markers,
+        "ann_index_compact",
     )
-    n_dead = sum(r._n for r in cell_hist)
     vec_dir = f"{path}/{_VEC_DIR}"
-    vecs = spark.read.parquet(vec_dir)
-    vb_hist = (
-        _dead_rows(vecs, tomb, markers)
-        .groupBy("_vbucket")
-        .agg(F.count("*").alias("_n"))
-        .collect()
+    n_dead_vecs = _fold_partition_dirs(
+        spark.read.parquet(vec_dir), vec_dir, "_vbucket", tomb, markers,
+        "ann_index_compact", sort_ids=True,
     )
-    n_dead_vecs = sum(r._n for r in vb_hist)
-    if n_dead == 0 and n_dead_vecs == 0:
-        # already folded (a re-run after a kill between the dir swaps
-        # and the sidecar drops) — re-verify the markers against the
-        # physical survivors (review r12 #1: a kill BEFORE the marker
-        # rewrite reaches here too, and dropping the tally without
-        # healing the markers would strand the overstatement forever),
-        # then finish the drops
-        if tomb is not None or os.path.isdir(os.path.join(path, _DEAD_DIR)):
-            _rewrite_markers(spark, path, markers)
-        drop_sidecars()
-        return 0
-    if n_dead and codes.count() - n_dead <= 0:
-        raise ValueError(
-            f"ann_index_compact: folding the pending dead rows would EMPTY "
-            f"the index at {path} — remove the path instead (live index "
-            "untouched)"
-        )
-    if n_dead:
-        cells = sorted(int(r.cell) for r in cell_hist)
-        keep_codes = _live_rows(
-            codes.filter(F.col("cell").isin(cells)), tomb, markers
-        )
-        _dir_swap(
-            path,
-            "cell",
-            cells,
-            lambda staging: keep_codes.repartition(F.col("cell"))
-            .write.partitionBy("cell")
-            .parquet(staging),
-        )
-    if n_dead_vecs:
-        vb = sorted(int(r._vbucket) for r in vb_hist)
-        keep_vecs = _live_rows(
-            vecs.filter(F.col("_vbucket").isin(vb)), tomb, markers
-        )
-        _dir_swap(
-            vec_dir,
-            "_vbucket",
-            vb,
-            lambda staging: keep_vecs.repartition(F.col("_vbucket"))
-            .sortWithinPartitions("_vbucket", "_id")
-            .write.partitionBy("_vbucket")
-            .parquet(staging),
-        )
-    _rewrite_markers(spark, path, markers)
+    if n_dead or n_dead_vecs or tomb is not None or os.path.isdir(
+        os.path.join(path, _DEAD_DIR)
+    ):
+        # also on a zero-dead re-run (a kill between the dir swaps and
+        # the sidecar drops): re-verify the markers against the physical
+        # survivors (review r12 #1: a kill BEFORE the marker rewrite
+        # lands here too, and dropping the tally without healing the
+        # markers would strand the overstatement forever)
+        _rewrite_markers(spark, path, markers)
     drop_sidecars()  # LAST (see the crash table)
     return n_dead

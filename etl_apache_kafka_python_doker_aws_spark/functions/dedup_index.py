@@ -7,20 +7,14 @@ this module persists the banded signatures it already computes
 parquet index, then answers "which docs in this batch near-duplicate
 anything already indexed (or each other)?" with one equi-join.
 
-Index layout at ``path`` (``layout_version`` 1 — the only layout this
+Index layout at ``path`` (``layout_version`` 2 — the only layout this
 module reads; see "Layout contract" below):
-  * data rows, ``partitionBy("band_idx", "_bgroup")`` parquet:
+  * data rows, ``partitionBy("band_idx")`` parquet:
       (_id, _sig array<long>[, payload cols...], band_hash long,
-      _batch string, band_idx, _bgroup)
+      _batch string, band_idx)
     where ``payload cols`` are optional creation-pinned per-doc
     attribute columns (served by ``pairs_vs_batch(where=...)`` as
-    pushed scan predicates) and ``_bgroup = pmod(band_hash, bgroups)``.
-    The second partition level exists for DELETE locality: every doc
-    lands in ALL band_idx partitions 0..bands-1, so band_idx alone
-    localizes nothing. With ``bgroups`` hash sub-partitions per band, a
-    delete rewrites only the ``band_idx=*/_bgroup=*`` directories its
-    ids hash into (≤ bands × |distinct groups hit|). Pairs queries
-    ignore the column (the band equi-join keys are unchanged).
+    pushed scan predicates). Each append writes one file per band dir.
     The full 32-long signature is stored per band row ON PURPOSE — the
     verify stage needs both sides' signatures, and re-attaching them
     after an ids-only join was measured 5.7x slower at 1M docs
@@ -28,12 +22,11 @@ module reads; see "Layout contract" below):
     num_hashes×8B sig + 8B hash) per doc ≈ 1.1 KB/doc at 4×32 — ~1.1 TB
     per billion docs, a flat parquet table any executor count can scan.
   * ``_graft_meta/`` — one JSON row pinning (num_hashes, bands,
-    shingle_n, seed), ``bgroups`` (a layout property, pinned at
-    creation like the table tier's bucket count), ``payload_cols`` (the
-    attribute schema — every append must carry it) and
-    ``layout_version``. Appends with different LSH params are REJECTED
-    loudly: signatures hashed under different seeds never collide, so
-    a silent mismatch wouldn't fail — it would just find nothing.
+    shingle_n, seed), ``payload_cols`` (the attribute schema — every
+    append must carry it) and ``layout_version``. Appends with
+    different LSH params are REJECTED loudly: signatures hashed under
+    different seeds never collide, so a silent mismatch wouldn't fail —
+    it would just find nothing.
   * ``_graft_batches/`` — one JSON row per appended batch_id
     (batch_id, seq, n_rows), written LAST by each append: the commit
     marker. A duplicate batch_id is REJECTED (the keyed-merge
@@ -46,6 +39,9 @@ module reads; see "Layout contract" below):
     re-running a count window over the full index per query — the
     guard scan shrinks ~70× (counts bytes vs 1.1 KB/doc index bytes)
     and never shuffles index rows.
+  * ``_graft_tombstones/`` — pending delete requests (``_id``,
+    ``del_seq``), anti-joined out of every pairs query until
+    ``minhash_index_compact`` folds them in.
   All subdirs start with ``_`` so Spark's parquet listing of ``path``
   ignores them.
 
@@ -70,21 +66,21 @@ Scale notes (SCALING.md "incremental dedup"):
     but earlier batches' pairs were already emitted — incremental
     recall is ≥ a from-scratch run's (which would drop the whole
     bucket). Never worse, by construction.
-  * Maintenance: appends create one file-set per batch — run
-    ``sources/layout.compact_small_files`` on ``path`` periodically
-    (it discovers the nested ``band_idx=*/_bgroup=*`` layout);
-    ``minhash_index_delete`` retracts documents LOCALIZED (only the
-    directories the ids hash into are rewritten; guard counts updated
-    sidecar-proportionally, batch markers preserved so redelivery stays
-    rejected); ``minhash_index_relayout`` changes ``bgroups``.
+  * Maintenance: appends create one file per band dir per batch — run
+    ``sources/layout.compact_small_files`` on ``path`` periodically.
+    Both forms retract the same way (``index_store``'s tombstone
+    protocol): ``minhash_index_delete`` / ``minhash_table_delete``
+    append a request-sized tombstone (batch markers preserved, so
+    redelivery stays rejected) and auto-compact past the shared dead
+    share; guard counts over-count tombstoned rows until compaction,
+    which can only drop a bucket early.
 
 Layout contract: every meta writer (the first ``minhash_index_append``,
-``minhash_index_relayout``, the first ``minhash_table_append``) stamps
-``layout_version``, every meta reader refuses any other stamp, and the
-commit-marker, tombstone and swap/recover rules are the shared storage
-protocol — all of it lives in ``index_store`` (its docstring holds the
-protocol and the recover state table), shared with the ANN and exact
-tiers.
+the first ``minhash_table_append``) stamps ``layout_version``, every
+meta reader refuses any other stamp, and the commit-marker, tombstone
+and swap/recover rules are the shared storage protocol — all of it
+lives in ``index_store`` (its docstring holds the protocol and the
+recover state table), shared with the ANN and exact tiers.
 """
 
 from __future__ import annotations
@@ -99,14 +95,14 @@ from etl_apache_kafka_python_doker_aws_spark.functions.dedup import (
     estimate_jaccard_pairs,
 )
 from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
-    _BATCH_DIR,
+    _AUTO_COMPACT_SHARE,
+    _TOMB_DIR,
     _append_marker,
     _compact_tables,
-    _dir_swap,
     _drop_tables,
-    _fs_nonempty,
-    _has_visible_file,
+    _fold_partition_dirs,
     _live_rows,
+    _local_path,
     _marker_rows,
     _new_batch_seq,
     _pinned_payloads,
@@ -116,7 +112,6 @@ from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
     _require_local_path,
     _require_marked,
     _resume_skips_append,
-    _retraction_forms,
     _tombstone_delete,
     _tombstones,
     _write_meta,
@@ -125,16 +120,11 @@ from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
 _COUNTS_DIR = "_graft_counts"
 _PARAMS = ("num_hashes", "bands", "shingle_n", "seed")
 
-def _check_bgroups(bgroups, who: str) -> None:
-    if not isinstance(bgroups, int) or bgroups < 1:
-        raise ValueError(f"{who}: bgroups {bgroups!r} must be an int >= 1")
-
 #: Column names the band-index machinery owns — a payload column
 #: shadowing one would silently corrupt the layout or the guard
 #: (r15, the ann_index _RESERVED_COLS rule on the band tier).
 _RESERVED_BAND_COLS = frozenset(
-    {"_id", "_sig", "band_idx", "band_hash", "_batch", "_bgroup", "cnt",
-     "del_seq"}
+    {"_id", "_sig", "band_idx", "band_hash", "_batch", "cnt", "del_seq"}
 )
 
 
@@ -157,15 +147,45 @@ def _guard_counts(rows: DataFrame, batch_ids: list) -> DataFrame:
     )
 
 
+def _counts_total(counts: DataFrame, markers: list) -> int:
+    """Physical band rows of the marked batches, summed from the
+    METADATA-sized counts sidecar (the sentinels excluded): the delete's
+    dead-share denominator — tombstones never change it."""
+    return (
+        counts.filter(F.col("band_idx") >= 0)
+        .filter(F.col("_batch").isin([r.batch_id for r in markers]))
+        .agg(F.sum("cnt").alias("s"))
+        .first()
+        .s
+        or 0
+    )
+
+
+def _band_recover(path: str) -> None:
+    """Heal the swap windows a killed ``minhash_index_compact`` can
+    leave, run by every band-path entry point (append, pairs, delete,
+    compact — the ``ann_index._ann_recover`` rule): a half-swapped
+    ``band_idx=`` dir (``_recover_partition_dirs``; left alone, its
+    ``.old`` name would be discovered as a partition value) and the
+    counts-dir swap (``plans.merge._recover``). No-op on a remote
+    path, which is never compacted in place."""
+    if not _local_path(path):
+        return
+    from etl_apache_kafka_python_doker_aws_spark.plans.merge import _recover
+
+    _recover_partition_dirs(path)
+    _recover(f"{path}/{_COUNTS_DIR}")
+
+
 def minhash_index_meta(spark: SparkSession, path: str) -> dict | None:
-    """Read the index's pinned LSH parameters, ``bgroups`` and payload
-    schema, or None if no index exists at ``path`` yet; raises on an
-    unreadable meta or one without the current ``layout_version``
+    """Read the index's pinned LSH parameters and payload schema, or
+    None if no index exists at ``path`` yet; raises on an unreadable
+    meta or one without the current ``layout_version``
     (``index_store._read_meta``)."""
     row = _read_meta(spark, path)
     if row is None:
         return None
-    meta = {k: int(row[k]) for k in _PARAMS + ("bgroups",)}
+    meta = {k: int(row[k]) for k in _PARAMS}
     meta["payload_cols"] = row["payload_cols"]
     return meta
 
@@ -188,7 +208,6 @@ def minhash_index_append(
     bands: int = 4,
     shingle_n: int = 3,
     seed: int = 42,
-    bgroups: int = 16,
     payload_cols: list[str] | None = None,
 ) -> None:
     """Sign ``df`` and APPEND its band rows to the index at ``path``
@@ -205,17 +224,8 @@ def minhash_index_append(
     caller-side allowed frames at any selectivity. Payload values ride
     the zero-shuffle signature projection (``carry_cols``), are
     replicated per band row (bands× the attribute bytes — the price of
-    scan-time filtering), and survive delete/compact/relayout
-    unchanged (whole-row rewrites).
-
-    ``bgroups`` (an int >= 1) pins the delete-locality sub-partition
-    count at CREATION — like the table tier's bucket count, it is a
-    LAYOUT property: appends into an existing index follow its pinned
-    value (the argument is ignored then; mixing layouts in one index
-    would break partition discovery; ``minhash_index_relayout``
-    changes it). At 10⁹ docs size it so each ``band_idx=*/_bgroup=*``
-    directory holds a few GB — a delete rewrites ≤ bands × groups-hit
-    directories.
+    scan-time filtering), and survive delete and compact unchanged
+    (whole-row rewrites).
 
     Sink helper — runs write jobs (data, guard counts; the meta row on
     creation and the batch marker are driver-side sidecar writes). The
@@ -229,11 +239,11 @@ def minhash_index_append(
     the bucket totals — those buckets under-guard until the partial
     batch is cleaned up; a crash after counts leaves data+counts
     consistent but unmarked. Either way the batch is unmarked —
-    re-append under a NEW batch_id only after cleanup (document over
-    guess).
+    ``minhash_index_compact`` is the cleanup (it sweeps an unmarked
+    batch's rows and counts); re-append after it.
     """
     spark = df.sparkSession
-    _check_bgroups(bgroups, "minhash_index_append")
+    _band_recover(path)
     meta = minhash_index_meta(spark, path)
     params = {
         "num_hashes": num_hashes,
@@ -249,12 +259,10 @@ def minhash_index_append(
         )
     seq = _new_batch_seq(_marker_rows(spark, path), batch_id,
                          "minhash_index_append", path)
-    # layout is creation-pinned: an existing index's bgroups wins
-    g = meta["bgroups"] if meta is not None else bgroups
     pay = _pinned_payloads(df, meta, payload_cols, "minhash_index_append",
                            _RESERVED_BAND_COLS)
     if meta is None:
-        _write_meta(spark, {**params, "bgroups": g, "payload_cols": pay}, path)
+        _write_meta(spark, {**params, "payload_cols": pay}, path)
     # n_rows on the marker (r15): the resume contract's "same delivery"
     # evidence — one count job over the batch lineage, batch-sized. It
     # cannot ride the write as an observation (as the ANN tier's does):
@@ -266,23 +274,16 @@ def minhash_index_append(
     banded = banded_minhash_signatures(
         df, id_col, text_col, num_hashes, bands, shingle_n, seed,
         carry_cols=tuple(pay),
-    ).withColumn("_batch", F.lit(batch_id)).withColumn(
-        "_bgroup", F.pmod(F.col("band_hash"), F.lit(int(g))).cast("int")
-    )
-    # repartition ON the partition columns so each directory is written
-    # by exactly one task → ONE file per dir per append (r10): a naive
-    # partitionBy write opens tasks × bands × bgroups writers — measured
-    # 6,185 files after three appends at the 1M-doc probe, and the
-    # per-batch pairs query paid it in listing + footer reads. Hash
-    # distribution keeps parallelism = min(shuffle.partitions, bands ×
-    # bgroups), which also holds on a cluster (size bgroups so bands ×
-    # bgroups ≳ shuffle parallelism there).
-    banded = banded.repartition(F.col("band_idx"), F.col("_bgroup"))
+    ).withColumn("_batch", F.lit(batch_id))
+    # repartition ON the partition column so each directory is written
+    # by exactly one task → ONE file per band dir per append (r10): a
+    # naive partitionBy write opens tasks × bands writers, and the
+    # per-batch pairs query pays every file in listing + footer reads.
+    # The write runs ``bands`` tasks over one batch's rows.
+    banded = banded.repartition(F.col("band_idx"))
     banded.persist()
     try:
-        banded.write.mode("append").partitionBy("band_idx", "_bgroup").parquet(
-            path
-        )
+        banded.write.mode("append").partitionBy("band_idx").parquet(path)
         _guard_counts(banded, [batch_id]).write.mode("append").parquet(
             f"{path}/{_COUNTS_DIR}"
         )
@@ -339,18 +340,27 @@ def minhash_index_pairs_vs_batch(
     Oversized buckets are excluded on the BATCH side only — an index
     row in a dropped bucket can only pair with batch rows of that same
     bucket, so the emitted pair set is identical to guarding both
-    sides.
+    sides. Pending tombstones are anti-joined out exactly as
+    ``minhash_table_pairs_vs_batch`` does.
     """
+    _band_recover(path)
     meta = minhash_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"minhash_index_pairs_vs_batch: no index at {path}")
-    marked = _require_marked(_marker_rows(spark, path), batch_id,
+    markers = _marker_rows(spark, path)
+    marked = _require_marked(markers, batch_id,
                              "minhash_index_pairs_vs_batch", path)
     # crash-window containment (VERDICT r8 #4): a crashed append leaves
     # band rows without counts/marker, which would join as UNDER-GUARDED
     # candidates — filter the index scan to marked batches (tiny pushed
-    # In predicate) so leftovers are invisible until cleanup
-    full = spark.read.parquet(path).filter(F.col("_batch").isin(marked))
+    # In predicate) so leftovers are invisible until cleanup; pending
+    # tombstones are a request-sized broadcast anti-join
+    full = _live_rows(
+        spark.read.parquet(path).filter(F.col("_batch").isin(marked)),
+        _tombstones(spark, path),
+        markers,
+        keep_unmarked=True,
+    )
     # counts rows from a crashed append (counts written, marker not)
     # would INFLATE bucket totals and spuriously drop buckets
     per_batch = spark.read.parquet(f"{path}/{_COUNTS_DIR}").filter(
@@ -490,6 +500,94 @@ def minhash_index_dedup_batch(
         spark, path, batch_id, threshold=threshold,
         max_bucket_size=max_bucket_size, where=where,
     )
+
+
+def minhash_index_delete(spark: SparkSession, path: str, ids) -> int:
+    """Delete documents from the path-backed band index — the
+    right-to-be-forgotten / retraction op a long-lived crawl index
+    needs. ``ids`` is a Python list (the GDPR shape: small, explicit)
+    or a DataFrame whose FIRST column holds the ids (bulk retractions).
+
+    The table tier's TOMBSTONE protocol (``minhash_table_delete``,
+    ``index_store._tombstone_delete``): the request is APPENDED to
+    ``_graft_tombstones/`` and every pairs query anti-joins it out, so
+    data and counts files stay byte-untouched (mtime-pinned in tests)
+    and the delete works on any Hadoop filesystem. Guard counts
+    over-count the tombstoned rows until compaction — they can only
+    make the skew guard drop a bucket early, never re-open the m²
+    blowup. Once dead rows pass the shared dead share of the index
+    (``index_store._AUTO_COMPACT_SHARE``) a local index is compacted
+    (``minhash_index_compact``); a remote one keeps its tombstones
+    until it is compacted where it is locally mounted. Markers and
+    meta are untouched: a fully-deleted batch still rejects
+    redelivery, and a re-appended id LIVES while its retracted history
+    stays dead. Deleting every live document is refused. Returns the
+    number of live band rows retracted."""
+    _band_recover(path)
+    if minhash_index_meta(spark, path) is None:
+        raise ValueError(f"minhash_index_delete: no index at {path}")
+    return _tombstone_delete(
+        spark,
+        ids,
+        path,
+        who="minhash_index_delete",
+        n_total_fn=lambda markers: _counts_total(
+            spark.read.parquet(f"{path}/{_COUNTS_DIR}"), markers
+        ),
+        compact_fn=lambda: _local_path(path) and minhash_index_compact(
+            spark, path
+        ),
+        compact_threshold=_AUTO_COMPACT_SHARE,
+    )
+
+
+def minhash_index_compact(spark: SparkSession, path: str) -> int:
+    """Fold pending tombstones into the path-backed band index: rewrite
+    the ``band_idx=`` dirs that hold dead rows
+    (``index_store._fold_partition_dirs`` — dead = tombstoned rows plus
+    unmarked crash-append orphans, which no tombstone can reach),
+    recompute ``_graft_counts`` from the survivors (``_guard_counts``,
+    staged then swapped), and drop the tombstones LAST. Crash windows,
+    each healed by ``_band_recover`` at the next band entry point and
+    finished by a re-run:
+
+    * mid-dir-swap — the ``.old`` copy is restored; the re-run folds
+      that dir again;
+    * after the dir swaps, before the counts swap — counts over-count
+      the folded rows (conservative) and the tombstones anti-join rows
+      already gone (a no-op); the re-run finds nothing to fold,
+      rewrites the counts and drops the tombstones;
+    * after the counts swap, before the tombstone drop — the same
+      re-run, with counts already exact.
+
+    Single-writer (the table-tier rule). Local-filesystem paths only
+    (the swaps are os.rename-based). Returns the number of dead band
+    rows folded out (0 when nothing pends)."""
+    import os
+    import shutil
+
+    from etl_apache_kafka_python_doker_aws_spark.plans.merge import _swap_in
+
+    _require_local_path(path, "minhash_index_compact")
+    _band_recover(path)
+    if minhash_index_meta(spark, path) is None:
+        raise ValueError(f"minhash_index_compact: no index at {path}")
+    tomb = _tombstones(spark, path)
+    markers = _marker_rows(spark, path)
+    n_dead = _fold_partition_dirs(
+        spark.read.parquet(path), path, "band_idx", tomb, markers,
+        "minhash_index_compact",
+    )
+    if n_dead or tomb is not None:
+        counts_dir = f"{path}/{_COUNTS_DIR}"
+        staging = counts_dir + ".staging"
+        shutil.rmtree(staging, ignore_errors=True)
+        _guard_counts(
+            spark.read.parquet(path), [r.batch_id for r in markers]
+        ).write.parquet(staging)
+        _swap_in(staging, counts_dir)
+    shutil.rmtree(os.path.join(path, _TOMB_DIR), ignore_errors=True)  # LAST
+    return n_dead
 
 
 # --- Bucketed-table tier (round 8): the SCALING.md upgrade, built ---
@@ -731,7 +829,8 @@ def minhash_table_dedup_batch(
 
 
 def minhash_table_delete(
-    spark: SparkSession, table: str, ids, *, compact_threshold: float = 0.2
+    spark: SparkSession, table: str, ids, *,
+    compact_threshold: float = _AUTO_COMPACT_SHARE,
 ) -> int:
     """Delete documents from the BUCKETED band index table — retraction
     for the zero-Exchange tier. ``ids`` is a Python list or a DataFrame
@@ -765,26 +864,15 @@ def minhash_table_delete(
     if minhash_table_meta(spark, table) is None:
         raise ValueError(f"minhash_table_delete: no index table {table}")
 
-    def n_total_fn(markers):
-        # dead-mass fraction from the METADATA-sized counts sidecar
-        # (tombstones never change the physical row count)
-        return (
-            spark.table(f"{table}_counts")
-            .filter(F.col("band_idx") >= 0)
-            .filter(F.col("_batch").isin([r.batch_id for r in markers]))
-            .agg(F.sum("cnt").alias("s"))
-            .first()
-            .s
-            or 0
-        )
-
     return _tombstone_delete(
         spark,
-        table,
         ids,
+        table=table,
         who="minhash_table_delete",
         drop_hint="drop_minhash_table",
-        n_total_fn=n_total_fn,
+        n_total_fn=lambda markers: _counts_total(
+            spark.table(f"{table}_counts"), markers
+        ),
         compact_fn=lambda: minhash_table_compact(spark, table),
         compact_threshold=compact_threshold,
     )
@@ -825,229 +913,3 @@ def minhash_table_compact(spark: SparkSession, table: str) -> int:
         cols=("band_idx", "band_hash"), who="minhash_table_compact",
         drop_hint="drop_minhash_table",
     )
-
-
-def minhash_index_delete(
-    spark: SparkSession,
-    path: str,
-    ids,
-    id_col_hint: str = "_id",
-) -> int:
-    """Delete documents from the path-backed band index — the
-    right-to-be-forgotten / retraction op a long-lived crawl index
-    needs. ``ids`` is a Python list (the GDPR shape: small, explicit)
-    or a DataFrame whose FIRST column holds the ids (bulk retractions).
-
-    LOCALIZED rewrite (every doc lands in ALL band_idx partitions, so
-    the ``_bgroup`` sub-partition is what localizes a delete): one
-    pushed-filter scan finds the affected
-    ``band_idx=*/_bgroup=*`` directories (≤ bands × distinct
-    band-hash groups the ids hash into); only those are rewritten and
-    swapped — every untouched directory keeps its files byte-identical
-    (mtime-pinned in tests/test_dedup_index.py). Guard counts are
-    rewritten as a sidecar-proportional job (drop the affected
-    buckets' rows, append recomputed survivor counts — the sidecar is
-    ~70× smaller than the index); meta and batch markers are NOT
-    touched, so a fully-deleted batch still rejects redelivery. Crash
-    windows: per-directory swaps are healed by
-    ``_recover_partition_dirs`` (re-run the delete to finish —
-    idempotent); a crash after the data swaps but before the counts
-    rewrite leaves the affected buckets OVER-counted, which can only
-    make the skew guard drop them (the bounded-resource outcome the
-    cap already allows), never re-open the m² blowup; a crash mid
-    counts swap is healed by ``plans.merge._recover`` on the counts
-    dir.
-
-    Returns the number of band rows removed. Batch deletes together:
-    cost scales with affected directories, and one call per id still
-    pays a scan each."""
-    import os
-
-    from etl_apache_kafka_python_doker_aws_spark.plans.merge import (
-        _recover,
-        _swap_in,
-    )
-
-    _require_local_path(path, "minhash_index_delete")
-    meta = minhash_index_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"minhash_index_delete: no index at {path}")
-    g = int(meta["bgroups"])
-    _recover_partition_dirs(path)
-    full = spark.read.parquet(path)
-    hit, drop, _ = _retraction_forms(full, ids, "minhash_index_delete")
-    per_dir = (
-        hit.groupBy("band_idx", "_bgroup").agg(F.count("*").alias("_n")).collect()
-    )
-    removed = sum(r._n for r in per_dir)
-    if removed == 0:
-        return 0
-    by_band: dict[int, list[int]] = {}
-    for r in per_dir:
-        by_band.setdefault(int(r.band_idx), []).append(int(r._bgroup))
-    # partition-pruning predicate over BOTH partition columns: only the
-    # affected directories are read for the survivor rewrite
-    from functools import reduce
-    from operator import or_
-
-    affected = reduce(
-        or_,
-        [
-            (F.col("band_idx") == bi) & F.col("_bgroup").isin(sorted(gs))
-            for bi, gs in sorted(by_band.items())
-        ],
-    )
-    live_dirs = {
-        (int(b.split("=", 1)[1]), int(sg.split("=", 1)[1]))
-        for b in os.listdir(path)
-        if b.startswith("band_idx=") and os.path.isdir(os.path.join(path, b))
-        for sg in os.listdir(os.path.join(path, b))
-        if sg.startswith("_bgroup=")
-    }
-    hit_dirs = {(bi, bg) for bi, gs in by_band.items() for bg in gs}
-    keep = drop(full.filter(affected))
-    rels = [
-        f"band_idx={bi}/_bgroup={bg}"
-        for bi, gs in sorted(by_band.items())
-        for bg in sorted(gs)
-    ]
-
-    # r15 (guide §1.2 — don't compute things you throw away): the
-    # would-EMPTY refusal needs keep.count() ONLY when every live dir is
-    # affected (live_dirs == hit_dirs — the all-ids GDPR edge). The
-    # common delete has untouched dirs, so the refusal can never fire
-    # and the old unconditional count() re-ran the whole
-    # affected-dir anti-join once per delete just to discard it. When
-    # the check IS needed, it now counts the already-written staging
-    # parquet (footer statistics, no data scan) and raises BEFORE the
-    # swap — _dir_swap never runs its renames on a raise, so the live
-    # index stays untouched exactly as before (refusal test unchanged).
-    would_empty_possible = not (live_dirs - hit_dirs)
-
-    def _write_staging(staging: str) -> None:
-        keep.repartition(F.col("band_idx"), F.col("_bgroup")).write.partitionBy(
-            "band_idx", "_bgroup"
-        ).parquet(staging)
-        if would_empty_possible:
-            # ADVICE r15: the old ``try: count() except: n_kept = 0``
-            # misreported ANY transient read failure on a NON-empty
-            # staging dir as the would-EMPTY refusal, permanently
-            # blocking a legitimate delete under that fault. Emptiness
-            # is now an FS fact — an empty partitionBy write commits
-            # only _SUCCESS, so "no visible file anywhere under
-            # staging" ⇔ zero survivors — and real read errors have no
-            # swallow site left.
-            if not _has_visible_file(spark, staging):
-                import shutil
-
-                # drop the staging dir ourselves — _dir_swap only cleans
-                # it after a write_staging that RETURNED
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ValueError(
-                    f"minhash_index_delete: deleting these ids would EMPTY "
-                    f"the index at {path} — an empty parquet dir cannot be "
-                    "read back; remove the index path instead (live index "
-                    "left untouched)"
-                )
-
-    _dir_swap(path, "band_idx", rels, _write_staging)
-    # counts sidecar: sidecar-proportional rewrite (70× smaller than the
-    # index) — drop the affected buckets' rows, append recomputed
-    # survivor counts; sentinels (band_idx −1) never match a real dir so
-    # the NOT-affected filter keeps them
-    counts_dir = f"{path}/{_COUNTS_DIR}"
-    _recover(counts_dir)
-    affected_counts = reduce(
-        or_,
-        [
-            (F.col("band_idx") == bi)
-            & F.pmod(F.col("band_hash"), F.lit(g)).cast("int").isin(sorted(gs))
-            for bi, gs in sorted(by_band.items())
-        ],
-    )
-    kept_counts = spark.read.parquet(counts_dir).filter(~affected_counts)
-    new_counts = (
-        spark.read.parquet(path)
-        .filter(affected)
-        .groupBy("band_idx", "band_hash", "_batch")
-        .agg(F.count("*").alias("cnt"))
-        .select("band_idx", "band_hash", "cnt", "_batch")
-    )
-    staging = counts_dir.rstrip("/") + ".staging"
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
-    kept_counts.unionByName(new_counts, allowMissingColumns=False).write.parquet(
-        staging
-    )
-    _swap_in(staging, counts_dir)
-    return removed
-
-
-def minhash_index_relayout(
-    spark: SparkSession,
-    path: str,
-    new_path: str,
-    *,
-    bgroups: int = 16,
-) -> None:
-    """Re-layout a band index to a different ``bgroups`` count at
-    ``new_path`` — the re-bgrouping path for an index whose group count
-    no longer fits its scale. Unlike ``ann_index_rebuild`` this never
-    retrains anything: the index STORES the signatures, and ``_bgroup =
-    pmod(band_hash, bgroups)`` is derived from stored columns, so the
-    move is one partitioned
-    rewrite of the data rows plus verbatim copies of the counts
-    sidecar (layout-independent: keyed on (band_idx, band_hash,
-    _batch)) and the batch markers (redelivery stays rejected after
-    the repoint). Meta is written LAST with the new ``bgroups`` and the
-    ``layout_version`` stamp — the blue/green rule: a half-finished
-    relayout reads as "no index", the live index keeps serving until
-    the caller repoints. A source without the current stamp is refused
-    (``minhash_index_meta``)."""
-    meta = minhash_index_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"minhash_index_relayout: no index at {path}")
-    if minhash_index_meta(spark, new_path) is not None:
-        raise ValueError(
-            f"minhash_index_relayout: {new_path} already holds an index — "
-            "relayout targets a FRESH path (the live index keeps serving "
-            "until the repoint)"
-        )
-    if _fs_nonempty(spark, new_path):
-        # meta is written LAST, so meta-less leftovers = a crashed
-        # relayout; every write below is mode("append") and a retry
-        # onto leftovers would silently double band rows, counts AND
-        # markers (review r10 — the ann_index_build retry rule)
-        raise ValueError(
-            f"minhash_index_relayout: {new_path} holds leftover files "
-            "without index meta — a crashed relayout; remove the path "
-            "and re-run (live index untouched)"
-        )
-    _check_bgroups(bgroups, "minhash_index_relayout")
-    # heal SOURCE swap leftovers before reading (ADVICE r10): a
-    # localized delete killed between _dir_swap's paired renames leaves
-    # a `_bgroup=N.old` dir whose name contains '=' — Spark does NOT
-    # hide it, so it would be discovered as a partition value and its
-    # pre-delete rows (including GDPR-retracted ids) silently migrated.
-    # Same healing every delete entry point runs.
-    from etl_apache_kafka_python_doker_aws_spark.plans.merge import _recover
-
-    _recover_partition_dirs(path)
-    _recover(f"{path}/{_COUNTS_DIR}")
-    g = int(bgroups)
-    rows = spark.read.parquet(path).drop("_bgroup")
-    rows.withColumn(
-        "_bgroup", F.pmod(F.col("band_hash"), F.lit(g)).cast("int")
-    ).repartition(F.col("band_idx"), F.col("_bgroup")).write.mode(
-        "append"
-    ).partitionBy("band_idx", "_bgroup").parquet(new_path)
-    spark.read.parquet(f"{path}/{_COUNTS_DIR}").write.mode("append").parquet(
-        f"{new_path}/{_COUNTS_DIR}"
-    )
-    spark.read.json(f"{path}/{_BATCH_DIR}").coalesce(1).write.mode(
-        "append"
-    ).json(f"{new_path}/{_BATCH_DIR}")
-    # the payload pin carries over (r15) — the data rows above carried
-    # the values verbatim
-    _write_meta(spark, {**meta, "bgroups": g}, new_path)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+    _AUTO_COMPACT_SHARE,
     _append_marker,
     _compact_tables,
     _drop_tables,
@@ -224,7 +225,8 @@ def sha_table_dedup_batch(
 
 
 def sha_table_delete(
-    spark: SparkSession, table: str, ids, *, compact_threshold: float = 0.2
+    spark: SparkSession, table: str, ids, *,
+    compact_threshold: float = _AUTO_COMPACT_SHARE,
 ) -> int:
     """Retraction — right-to-be-forgotten for the exact-dedup tier.
     ``ids`` is a Python list or a DataFrame whose FIRST column holds
@@ -240,8 +242,8 @@ def sha_table_delete(
     _require_data_table(spark, table, "sha_table_delete")
     return _tombstone_delete(
         spark,
-        table,
         ids,
+        table=table,
         who="sha_table_delete",
         drop_hint="drop_sha_table",
         n_total_fn=lambda markers: _live_rows(

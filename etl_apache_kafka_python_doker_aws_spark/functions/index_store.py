@@ -4,10 +4,10 @@ path (``dedup_index.minhash_index_*``), the band table
 exact table (``exact_index``). This is the engine's form of the
 reference's keyed, idempotent insert (see the ``plans/merge.py``
 docstring): each append writes its data, writes a commit marker last,
-and the next call heals a torn swap. The tiers keep only what is
-specific to them (encoding, signing, search and pairs; the band path's
-localized delete; the ANN dead tally), so the rules below are proved
-once, here.
+and the next call heals a torn swap. Every tier retracts the same way:
+a delete appends tombstones, a compaction folds them in. The tiers keep
+only what is specific to them (encoding, signing, search and pairs; the
+ANN dead tally), so the rules below are proved once, here.
 
 Locations. A path tier keeps its sidecars as ``_``-prefixed subdirs of
 the index root, which Spark's listing of the data ignores:
@@ -70,10 +70,14 @@ The protocol:
   ======================================  ==============================
 
   Presence is unambiguous only with ONE maintenance writer per index.
-* **Directory swaps.** Path tiers rewrite affected partition dirs
-  (``_dir_swap``, healed by ``_recover_partition_dirs``) and whole
+* **Directory swaps.** A path tier's compaction rewrites exactly the
+  partition dirs that hold dead rows (``_fold_partition_dirs`` over
+  ``_dir_swap``, healed by ``_recover_partition_dirs``) and swaps whole
   sidecar dirs (``plans.merge._swap_in``/``_recover``, which stay in
-  ``plans.merge`` because ``merge_upsert`` uses them).
+  ``plans.merge`` because ``merge_upsert`` uses them). Only compaction
+  renames, so only compaction is local-filesystem-only
+  (``_require_local_path``); deletes append and work on any Hadoop
+  filesystem.
 """
 
 from __future__ import annotations
@@ -85,13 +89,16 @@ from etl_apache_kafka_python_doker_aws_spark.util import (
     sidecar_json_append,
     sidecar_json_rows,
     sidecar_read,
-    spark_hidden,
     tiny_rows_df,
 )
 
 #: The on-disk layout every index tier writes and the only one it reads
-#: — stamped into each meta row.
-LAYOUT_VERSION = 1
+#: — stamped into each meta row. 2: the band path partitions by
+#: ``band_idx`` alone and retracts by tombstone.
+LAYOUT_VERSION = 2
+
+#: Dead share of an index past which a delete compacts it (every tier).
+_AUTO_COMPACT_SHARE = 0.2
 
 _META_DIR = "_graft_meta"
 _BATCH_DIR = "_graft_batches"
@@ -458,29 +465,31 @@ def _append_tombstones(
 
 def _tombstone_delete(
     spark: SparkSession,
-    table: str,
     ids,
+    path: str | None = None,
     *,
+    table: str | None = None,
     who: str,
-    drop_hint: str,
+    drop_hint: str | None = None,
     n_total_fn,
     compact_fn,
     compact_threshold: float,
 ) -> int:
-    """Tombstone retraction for the table tiers (band
-    ``minhash_table_delete``, exact ``sha_table_delete``). ONE index
+    """Tombstone retraction for the band path, band table and exact
+    table (the ANN path keeps its own, for its dead tally). ONE index
     scan computes both statistics (live rows + requested live rows,
     marked batches only: unmarked orphans must neither count as removed
     nor trip the EMPTY guard); then the EMPTY guard, the tombstone
     append and the threshold'd auto-compaction. ``n_total_fn(markers)``
     — the physical size of the marked batches — is only invoked when
-    auto-compaction is possible (``compact_threshold`` ≤ 1). Returns
-    the number of live rows retracted."""
+    auto-compaction is possible (``compact_threshold`` ≤ 1).
+    ``drop_hint`` names a table tier's drop function for the EMPTY
+    refusal. Returns the number of live rows retracted."""
     if not isinstance(ids, DataFrame):
         ids = list(ids)  # one-shot-iterable lesson (ADVICE r10)
-    markers = _marker_rows(spark, table=table)
-    full = spark.table(table)
-    live = _live_rows(full, _tombstones(spark, table=table), markers)
+    markers = _marker_rows(spark, path, table=table)
+    full = spark.read.parquet(path) if table is None else spark.table(table)
+    live = _live_rows(full, _tombstones(spark, path, table=table), markers)
     _, _, gone = _retraction_forms(live, ids, who)
     if gone is not None:
         marked_live = live.join(gone.withColumn("_dead", F.lit(1)), "_id", "left")
@@ -497,11 +506,15 @@ def _tombstone_delete(
         # stranded in unmarked crash-append rows (compact sweeps those)
         return 0
     if n_live == removed:
+        if table is None:
+            where, hint = f"index at {path}", "remove the index path"
+        else:
+            where, hint = f"index table {table}", f"drop it ({drop_hint})"
         raise ValueError(
-            f"{who}: deleting these ids would EMPTY the index table "
-            f"{table} — drop it ({drop_hint}) instead"
+            f"{who}: deleting these ids would EMPTY the {where} — {hint} "
+            "instead"
         )
-    _append_tombstones(spark, ids, gone, full, markers, table=table)
+    _append_tombstones(spark, ids, gone, full, markers, path, table=table)
     if compact_threshold <= 1:
         n_total = n_total_fn(markers)
         dead = n_total - (n_live - removed)
@@ -637,39 +650,41 @@ def _compact_tables(
 # --- directory swap and recovery (path tiers) ------------------------
 
 
-def _require_local_path(path: str, who: str) -> None:
-    """Index DELETES stage + swap through os.rename/shutil (local-FS
-    semantics); on an hdfs://... or s3a://... index the Spark staging
-    write would succeed REMOTELY while the local empty-check finds
-    nothing and falsely raises 'would EMPTY the index', stranding
-    remote staging garbage (ADVICE r8). Fail fast with the real reason
-    instead. Reads/appends/searches work on any Hadoop filesystem."""
+def _local_path(path: str) -> bool:
+    """True for a local-filesystem index path (no scheme, or file:)."""
     from urllib.parse import urlparse
 
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
+    return urlparse(path).scheme in ("", "file")
+
+
+def _require_local_path(path: str, who: str) -> None:
+    """Index COMPACTIONS stage + swap through os.rename/shutil (local-FS
+    semantics); on an hdfs://... or s3a://... index the Spark staging
+    write would succeed REMOTELY while the local renames find nothing,
+    stranding remote staging garbage (ADVICE r8). Fail fast with the
+    real reason instead. Reads, appends, deletes and searches work on
+    any Hadoop filesystem."""
+    if not _local_path(path):
         raise ValueError(
-            f"{who}: delete is local-filesystem-only (the staging swap "
-            f"uses os.rename); got scheme {scheme!r} for {path} — run the "
-            "delete where the index is locally mounted, or rebuild the "
-            "index minus the retracted ids"
+            f"{who}: compaction is local-filesystem-only (the staging swap "
+            f"uses os.rename); got {path} — run the compaction where the "
+            "index is locally mounted, or rebuild the index from source"
         )
 
 
 def _recover_partition_dirs(root: str) -> None:
-    """Heal a localized delete killed mid-swap (r9): ``_dir_swap``
-    renames live partition dir → ``<dir>.old`` then staged → live; a
-    kill between the renames leaves only the .old copy — restore it
-    (the delete is then simply incomplete and re-runnable). A leftover
+    """Heal a compaction killed mid-swap (r9): ``_dir_swap`` renames
+    live partition dir → ``<dir>.old`` then staged → live; a kill
+    between the renames leaves only the .old copy — restore it (the
+    compaction is then simply incomplete and re-runnable). A leftover
     .old NEXT TO a live dir means the swap completed but cleanup
-    didn't — drop it."""
+    didn't — drop it. One listing of ``root``: every path tier
+    partitions one level deep."""
     import glob
     import os
     import shutil
 
-    if not os.path.isdir(root):
-        return
-    for old in glob.glob(os.path.join(root, "**", "*=*.old"), recursive=True):
+    for old in glob.glob(os.path.join(root, "*=*.old")):
         live = old[: -len(".old")]
         if os.path.exists(live):
             shutil.rmtree(old, ignore_errors=True)
@@ -678,18 +693,16 @@ def _recover_partition_dirs(root: str) -> None:
 
 
 def _dir_swap(root: str, part_col: str, values: list, write_staging) -> None:
-    """Localized partition-directory rewrite (r9, VERDICT r8 #7): write
-    the survivors of the AFFECTED partitions to a staging dir (hive
-    layout), then swap each affected ``<part_col>=<v>`` directory in
-    with paired renames — untouched partition directories are never
-    read or written (their files stay byte-identical; mtime-pinned in
-    tests). A partition whose survivors are empty simply has its live
-    dir removed (partition discovery skips missing dirs). Staging lives
-    NEXT TO root (``.delstage``), distinct from the whole-dir
-    ``.staging`` machinery so plans/merge._recover never mistakes it
-    for a complete table copy. ``values`` may include nested partition
-    paths (e.g. ``band_idx=0/_bgroup=3``) — pass them as rendered
-    RELATIVE dir strings; plain scalars are rendered ``col=value``."""
+    """Partition-directory rewrite (r9, VERDICT r8 #7): write the
+    survivors of the AFFECTED partitions to a staging dir (hive layout),
+    then swap each affected ``<part_col>=<v>`` directory in with paired
+    renames — untouched partition directories are never read or written
+    (their files stay byte-identical; mtime-pinned in tests). A
+    partition whose survivors are empty simply has its live dir removed
+    (partition discovery skips missing dirs). Staging lives NEXT TO root
+    (``.delstage``), distinct from the whole-dir ``.staging`` machinery
+    so plans/merge._recover never mistakes it for a complete table
+    copy."""
     import os
     import shutil
 
@@ -698,37 +711,56 @@ def _dir_swap(root: str, part_col: str, values: list, write_staging) -> None:
     write_staging(staging)
     try:
         for v in values:
-            rel = v if isinstance(v, str) and "=" in str(v) else f"{part_col}={v}"
-            live = os.path.join(root, rel)
-            new = os.path.join(staging, rel)
+            live = os.path.join(root, f"{part_col}={v}")
+            new = os.path.join(staging, f"{part_col}={v}")
             old = live + ".old"
             shutil.rmtree(old, ignore_errors=True)
             if os.path.exists(live):
                 os.rename(live, old)
             if os.path.exists(new):
-                os.makedirs(os.path.dirname(live), exist_ok=True)
                 os.rename(new, live)
             shutil.rmtree(old, ignore_errors=True)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _has_visible_file(spark: SparkSession, root: str) -> bool:
-    """True iff some file under ``root`` is visible to a Spark read of
-    it. Visibility follows Spark's listing rule (``util.spark_hidden``)
-    on EVERY path component under ``root`` — so a part file inside
-    committer litter (``_temporary/0/part-x``) is invisible, while
-    ``_bgroup=3/part-x`` is visible."""
-    sc = spark.sparkContext
-    jroot = sc._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jroot.getFileSystem(sc._jsc.hadoopConfiguration())
-    prefix = fs.makeQualified(jroot).toString().rstrip("/")
-    it = fs.listFiles(jroot, True)  # recursive
-    while it.hasNext():
-        rel = it.next().getPath().toString()[len(prefix):]
-        if not any(spark_hidden(c) for c in rel.split("/") if c):
-            return True
-    return False
+def _fold_partition_dirs(
+    df: DataFrame, root: str, part_col: str, tomb: DataFrame | None,
+    markers: list, who: str, sort_ids: bool = False,
+) -> int:
+    """Fold dead rows out of a path tier physically — the ONE
+    compaction core of the path tiers (ANN ``cell`` and ``_vbucket``,
+    band ``band_idx``): a dead-row histogram per ``part_col`` value
+    (``_dead_rows``: tombstoned rows plus unmarked crash-append
+    orphans), then ``_dir_swap`` of exactly the dirs that hold dead
+    rows, each rewritten as one file (id-sorted with ``sort_ids``).
+    Refuses a fold that would EMPTY the tier before anything is
+    written. Returns the number of rows folded out (0: nothing
+    written)."""
+    hist = (
+        _dead_rows(df, tomb, markers)
+        .groupBy(part_col)
+        .agg(F.count("*").alias("_n"))
+        .collect()
+    )
+    n_dead = sum(r._n for r in hist)
+    if n_dead == 0:
+        return 0
+    if df.count() <= n_dead:
+        raise ValueError(
+            f"{who}: folding the pending dead rows would EMPTY the index "
+            f"at {root} — remove the path instead (live index untouched)"
+        )
+    values = sorted(r[part_col] for r in hist)
+    keep = _live_rows(df.filter(F.col(part_col).isin(values)), tomb, markers)
+    keep = keep.repartition(F.col(part_col))
+    if sort_ids:
+        keep = keep.sortWithinPartitions(part_col, "_id")
+    _dir_swap(
+        root, part_col, values,
+        lambda staging: keep.write.partitionBy(part_col).parquet(staging),
+    )
+    return n_dead
 
 
 def _fs_nonempty(spark: SparkSession, path: str) -> bool:

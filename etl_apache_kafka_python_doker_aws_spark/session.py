@@ -2,8 +2,9 @@
 
 Local mode is a single JVM (local[N]); on a real cluster the same settings
 hold: AQE handles skew/coalesce at runtime, shuffle partitions are sized by
-the caller (32 locally, ~2-3x total cores on a cluster), Arrow accelerates
-any Pandas-UDF boundary, and UTC pins timestamp semantics for oracle parity.
+the caller (the usable CPU count locally, ~2-3x total cores on a cluster),
+Arrow accelerates any Pandas-UDF boundary, and UTC pins timestamp semantics
+for oracle parity.
 """
 
 from __future__ import annotations
@@ -22,10 +23,12 @@ def get_spark(
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
     Defaults follow the env contract: ``local[$SPARK_GRAFT_CPUS]`` and
-    ``spark.sql.shuffle.partitions`` matching core count — on a cluster
-    pass ``master=None`` with an external conf and these become no-ops.
+    ``spark.sql.shuffle.partitions`` matching core count, where an unset
+    ``SPARK_GRAFT_CPUS`` means the CPUs this process may run on — on a
+    cluster pass ``master=None`` with an external conf and these become
+    no-ops.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

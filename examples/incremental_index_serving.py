@@ -103,10 +103,11 @@ def main() -> None:
         n_probe=8, shortlist=200,
     ).orderBy("query_id", "rk").show(6)
 
-    print("== 4. right-to-be-forgotten: LOCALIZED retraction ==")
-    # both deletes rewrite only the partition dirs the ids hash into
-    # (band_idx/_bgroup and cell/_vbucket) — untouched dirs stay
-    # byte-identical; markers survive, so redelivery stays rejected
+    print("== 4. right-to-be-forgotten: tombstone retraction ==")
+    # both deletes append a request-sized tombstone that every pairs
+    # query / search anti-joins out — data files stay byte-identical
+    # until a compaction folds the tombstones in; markers survive, so
+    # redelivery stays rejected
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
         ann_index_delete,
     )

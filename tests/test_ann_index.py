@@ -324,21 +324,21 @@ def test_ann_append_after_delete(spark, tmp_path):
 
 def test_remote_scheme_rules(spark):
     """ADVICE r8 / r12: swap-based ops are os.rename-based and must fail
-    fast on a remote-scheme path with the real reason, not a misleading
-    'would EMPTY the index' after writing remote staging garbage. Since
-    r12 ann_index_delete itself is a plain tombstone APPEND (any Hadoop
-    FS) — the local-only op is the fold-in, ann_index_compact."""
+    fast on a remote-scheme path with the real reason, before touching
+    the remote FS. Deletes are plain tombstone APPENDS (any Hadoop FS)
+    on both path tiers — the local-only ops are the fold-ins,
+    ann_index_compact and minhash_index_compact."""
     from etl_apache_kafka_python_doker_aws_spark.functions.ann_index import (
         ann_index_compact,
     )
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        minhash_index_delete,
+        minhash_index_compact,
     )
 
     with pytest.raises(ValueError, match="local-filesystem-only"):
         ann_index_compact(spark, "s3a://bucket/ann_idx")
     with pytest.raises(ValueError, match="local-filesystem-only"):
-        minhash_index_delete(spark, "hdfs://nn/band_idx", [1])
+        minhash_index_compact(spark, "hdfs://nn/band_idx")
 
 
 def test_rebuild_retrains_preserves_lineage(spark, tmp_path):

@@ -52,7 +52,7 @@ def test_incremental_pairs_tile_the_whole_corpus(spark, tmp_path):
     assert minhash_index_batches(spark, path) == ["b0", "b1"]
     assert minhash_index_meta(spark, path) == {
         "num_hashes": 32, "bands": 4, "shingle_n": 3, "seed": 42,
-        "bgroups": 16, "payload_cols": [],
+        "payload_cols": [],
     }
 
 
@@ -175,9 +175,10 @@ def test_bucketed_dedup_batch_convenience(spark, tmp_path):
 
 def test_delete_removes_pairs_and_keeps_guards(spark, tmp_path):
     """minhash_index_delete (r8): deleted docs vanish from every
-    subsequent pairs query, guard counts stay exact (recomputed from
-    survivors), and batch markers survive — a fully-deleted batch still
-    rejects redelivery under its batch_id."""
+    subsequent pairs query, guard counts are exact again after the
+    auto-compaction (recomputed from survivors), and batch markers
+    survive — a fully-deleted batch still rejects redelivery under its
+    batch_id."""
     import pytest
 
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
@@ -196,8 +197,17 @@ def test_delete_removes_pairs_and_keeps_guards(spark, tmp_path):
            minhash_index_pairs_vs_batch(spark, path, "b1").collect()}
     assert all(101 not in p for p in got)
     assert (102, 103) in got  # untouched within-batch pair survives
-    # markers retained: redelivery still rejected after full delete of b1
+    # markers retained: redelivery still rejected after full delete of
+    # b1 — which crosses the dead share, so it also compacts: tombstones
+    # folded in, guard counts exact again
+    import os
+
     minhash_index_delete(spark, path, [r.doc_id for r in new.collect()])
+    assert not os.path.exists(os.path.join(path, "_graft_tombstones"))
+    guard = spark.read.parquet(os.path.join(path, "_graft_counts"))
+    assert guard.filter("band_idx >= 0").agg(F.sum("cnt")).first()[0] == (
+        spark.read.parquet(path).count()
+    )
     with pytest.raises(ValueError, match="already appended"):
         minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
     # deleting everything is refused, loudly, with the index intact
@@ -209,11 +219,10 @@ def test_delete_removes_pairs_and_keeps_guards(spark, tmp_path):
 
 
 def test_append_after_delete(spark, tmp_path):
-    """VERDICT r8 #5: the recomputed counts sidecar + zero-count
-    sentinel rows written by minhash_index_delete must compose with a
-    SUBSEQUENT append — pairs queries for both an old and the new batch
-    stay correct (the only index state transition that had zero test
-    coverage)."""
+    """VERDICT r8 #5: the tombstones and counts sidecar left by
+    minhash_index_delete must compose with a SUBSEQUENT append — pairs
+    queries for both an old and the new batch stay correct (the only
+    index state transition that had zero test coverage)."""
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
         minhash_index_delete,
     )
@@ -260,10 +269,9 @@ def test_crashed_append_is_contained(spark, tmp_path):
     banded_minhash_signatures(
         new, "doc_id", "text", meta["num_hashes"], meta["bands"],
         meta["shingle_n"], meta["seed"],
-    ).withColumn("_batch", F.lit("b1_crashed")).withColumn(
-        "_bgroup",
-        F.pmod(F.col("band_hash"), F.lit(meta["bgroups"])).cast("int"),
-    ).write.mode("append").partitionBy("band_idx", "_bgroup").parquet(path)
+    ).withColumn("_batch", F.lit("b1_crashed")).write.mode(
+        "append"
+    ).partitionBy("band_idx").parquet(path)
     # unmarked batch_id: loud, not silently-empty
     with pytest.raises(ValueError, match="not a MARKED batch"):
         minhash_index_pairs_vs_batch(spark, path, "b1_crashed")
@@ -341,219 +349,123 @@ def _dir_snapshot(root):
     return snap
 
 
-def test_delete_is_localized_untouched_dirs_byte_identical(spark, tmp_path):
-    """VERDICT r9 #2/#3: the r10 _bgroup layout makes minhash deletes
-    LOCALIZED — only the band_idx=*/_bgroup=* directories the deleted
-    ids hash into are rewritten; every other partition directory keeps
-    its exact files (size + mtime pinned), and pair results match a
-    from-scratch index built without the deleted docs."""
-    import os
+class _BandForm:
+    """One band index form — the path (``minhash_index_*``) or the
+    bucketed table (``minhash_table_*``) — behind the calls the shared
+    tombstone test bodies make, so one body checks both forms."""
 
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup import (
-        banded_minhash_signatures,
-    )
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        minhash_index_delete,
-    )
-
-    base, new, _ = _frames(spark)
-    path = str(tmp_path / "idx")
-    minhash_index_append(base, "doc_id", "text", path, batch_id="b0")
-    minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
-    meta = minhash_index_meta(spark, path)
-    # which dirs SHOULD the delete touch? the deleted id's band rows
-    hit = {
-        (int(r.band_idx), int(r.band_hash) % meta["bgroups"])
-        for r in banded_minhash_signatures(
-            new.filter("doc_id = 104"), "doc_id", "text",
-            meta["num_hashes"], meta["bands"], meta["shingle_n"],
-            meta["seed"],
-        ).collect()
-    }
-    pre = _dir_snapshot(path)
-    assert minhash_index_delete(spark, path, [104]) > 0
-    post = _dir_snapshot(path)
-    touched_rels = {f"band_idx={bi}/_bgroup={bg}" for bi, bg in hit}
-
-    def owner(rel):
-        parts = rel.split(os.sep)
-        return "/".join(parts[:2]) if parts[0].startswith("band_idx=") else None
-
-    for rel, stat in pre.items():
-        o = owner(rel)
-        if o is not None and o not in touched_rels:
-            assert post.get(rel) == stat, f"untouched file rewritten: {rel}"
-    # every touched dir was actually rewritten (or emptied)
-    for rel in touched_rels:
-        old_files = {r for r in pre if owner(r) == rel}
-        assert all(post.get(r) != pre[r] for r in old_files), rel
-    # counts sidecar rewritten but consistent: pairs for b1 still exact
-    got = {(r.id_a, r.id_b) for r in
-           minhash_index_pairs_vs_batch(spark, path, "b1").collect()}
-    assert (102, 103) in got and all(104 not in p for p in got)
-
-
-def test_would_empty_probe_ignores_committer_litter(spark, tmp_path,
-                                                    monkeypatch):
-    """ADVICE r16: the would-EMPTY probe applies Spark's listing rule to
-    every path component under staging — a part file inside
-    ``_temporary/0/`` is invisible to a read, so an all-ids delete whose
-    staging holds only that litter is still refused, and the live index
-    stays byte-identical."""
-    import os
-
-    from etl_apache_kafka_python_doker_aws_spark.functions import dedup_index
-
-    base, _, _ = _frames(spark)
-    path = str(tmp_path / "idx")
-    minhash_index_append(base, "doc_id", "text", path, batch_id="b0")
-    # the probe's verdicts on each listing-rule case
-    probe = str(tmp_path / "probe")
-    for rel, visible in (
-        ("_temporary/0/part-x.parquet", False),
-        (".hidden=1/part-x.parquet", False),
-        ("band_idx=0/_bgroup=3/part-x.parquet", True),
-    ):
-        os.makedirs(os.path.dirname(os.path.join(probe, rel)), exist_ok=True)
-        with open(os.path.join(probe, rel), "wb") as fh:
-            fh.write(b"PAR1")
-        assert dedup_index._has_visible_file(spark, probe) is visible, rel
-
-    real = dedup_index._has_visible_file
-
-    def planted(spark_, staging):
-        litter = os.path.join(staging, "_temporary", "0")
-        os.makedirs(litter, exist_ok=True)
-        with open(os.path.join(litter, "part-x.parquet"), "wb") as fh:
-            fh.write(b"PAR1")
-        return real(spark_, staging)
-
-    monkeypatch.setattr(dedup_index, "_has_visible_file", planted)
-    pre = _dir_snapshot(path)
-    with pytest.raises(ValueError, match="EMPTY"):
-        dedup_index.minhash_index_delete(
-            spark, path, [r.doc_id for r in base.collect()]
-        )
-    assert _dir_snapshot(path) == pre
-
-
-def test_relayout_migrates_flat_index_to_localized_deletes(spark, tmp_path):
-    """minhash_index_relayout: a bgroups 8 index re-partitions into
-    bgroups 16 at a fresh path with NO retraining (stored signatures
-    move verbatim), markers + counts carried (redelivery rejected),
-    pair results identical, and the relayout index deletes LOCALIZED."""
-    import os
-
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        minhash_index_delete,
-        minhash_index_relayout,
-    )
-
-    base, new, _ = _frames(spark)
-    path = str(tmp_path / "g8")
-    minhash_index_append(base, "doc_id", "text", path, batch_id="b0",
-                         bgroups=8)
-    minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
-    before = {(r.id_a, r.id_b) for r in
-              minhash_index_pairs_vs_batch(spark, path, "b1").collect()}
-
-    migrated = str(tmp_path / "g16")
-    minhash_index_relayout(spark, path, migrated, bgroups=16)
-    assert minhash_index_meta(spark, migrated)["bgroups"] == 16
-    groups = {
-        int(sub.split("=", 1)[1])
-        for d in os.listdir(migrated) if d.startswith("band_idx=")
-        for sub in os.listdir(os.path.join(migrated, d))
-        if sub.startswith("_bgroup=")
-    }
-    assert groups and max(groups) < 16 and any(g >= 8 for g in groups)
-    # counts carried over verbatim (the guard sidecar is keyed on
-    # (band_idx, band_hash, _batch), independent of bgroups)
-    def counts(p):
-        return sorted(
-            tuple(r) for r in spark.read.parquet(f"{p}/_graft_counts")
-            .select("band_idx", "band_hash", "cnt", "_batch").collect()
+    def __init__(self, spark, tmp_path, form, name):
+        from etl_apache_kafka_python_doker_aws_spark.functions import (
+            dedup_index as di,
         )
 
-    assert counts(migrated) == counts(path)
-    after = {(r.id_a, r.id_b) for r in
-             minhash_index_pairs_vs_batch(spark, migrated, "b1").collect()}
-    assert after == before and (1, 101) in after
-    assert minhash_index_batches(spark, migrated) == ["b0", "b1"]
+        self.spark, self.form, self.di = spark, form, di
+        self.loc = str(tmp_path / name) if form == "path" else name
+        if form == "table":
+            di.drop_minhash_table(spark, name)
+
+    def _call(self, op, *a, **kw):
+        tier = "index" if self.form == "path" else "table"
+        return getattr(self.di, f"minhash_{tier}_{op}")(*a, **kw)
+
+    def append(self, df, batch_id):
+        extra = {} if self.form == "path" else {"buckets": 4}
+        self._call("append", df, "doc_id", "text", self.loc,
+                   batch_id=batch_id, **extra)
+
+    def pairs_df(self, batch_id):
+        return self._call("pairs_vs_batch", self.spark, self.loc, batch_id)
+
+    def pairs(self, batch_id):
+        return {(r.id_a, r.id_b) for r in self.pairs_df(batch_id).collect()}
+
+    def delete(self, ids):
+        return self._call("delete", self.spark, self.loc, ids)
+
+    def compact(self):
+        return self._call("compact", self.spark, self.loc)
+
+    def tombstones(self):
+        from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
+            _tombstones,
+        )
+
+        if self.form == "path":
+            return _tombstones(self.spark, self.loc)
+        return _tombstones(self.spark, table=self.loc)
+
+    def rows(self):
+        if self.form == "path":
+            return self.spark.read.parquet(self.loc)
+        return self.spark.table(self.loc)
+
+    def files(self, part):
+        """(size, mtime) of every data file (``part="data"``) or guard
+        counts file (``part="counts"``)."""
+        import os
+
+        if self.form == "path":
+            if part == "counts":
+                return _dir_snapshot(os.path.join(self.loc, "_graft_counts"))
+            return {r: st for r, st in _dir_snapshot(self.loc).items()
+                    if r.startswith("band_idx=")}
+        wh = self.spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        name = self.loc if part == "data" else f"{self.loc}_counts"
+        return _dir_snapshot(os.path.join(wh, name.lower()))
+
+    def cleanup(self):
+        if self.form == "table":
+            for name in (self.loc, f"{self.loc}_counts"):
+                self.spark.sql(f"DROP TABLE IF EXISTS {name}_deleting")
+            self.di.drop_minhash_table(self.spark, self.loc)
+
+
+def _delete_removes_pairs(form, base, new):
+    """Deleted docs vanish from pairs, a no-op delete returns 0, markers
+    keep rejecting redelivery, and deleting everything is refused with
+    the index intact."""
+    form.append(base, "b0")
+    form.append(new, "b1")
+    assert (1, 101) in form.pairs("b1")
+    assert form.delete([101]) > 0
+    got = form.pairs("b1")
+    assert all(101 not in p for p in got) and (102, 103) in got
+    assert form.delete([999999]) == 0
     with pytest.raises(ValueError, match="already appended"):
-        minhash_index_append(new, "doc_id", "text", migrated, batch_id="b1")
-    # localized delete works on the migrated layout
-    pre = _dir_snapshot(migrated)
-    assert minhash_index_delete(spark, migrated, [104]) > 0
-    post = _dir_snapshot(migrated)
-    assert any(post.get(r) == s for r, s in pre.items()
-               if r.startswith("band_idx="))  # some dirs untouched
-    got = {(r.id_a, r.id_b) for r in
-           minhash_index_pairs_vs_batch(spark, migrated, "b1").collect()}
-    assert (102, 103) in got and all(104 not in p for p in got)
-    # a non-empty target is refused
-    with pytest.raises(ValueError, match="FRESH path"):
-        minhash_index_relayout(spark, path, migrated)
+        form.append(new, "b1")
+    with pytest.raises(ValueError, match="EMPTY"):
+        form.delete([r.doc_id for r in base.collect()] + [101, 102, 103, 104])
+    assert form.rows().count() > 0
 
 
 def test_table_delete_removes_pairs_keeps_colocation(spark, tmp_path):
     """minhash_table_delete (r10): the bucketed tier's retraction —
-    deleted docs vanish from pairs, markers keep rejecting redelivery,
-    guard counts recomputed, deleting everything refused, and the
-    zero-Exchange band join still plans after the CTAS swap
-    (co-location survived)."""
+    the shared pairs checks (``_delete_removes_pairs``), and the
+    zero-Exchange band join still plans after the delete (co-location
+    survived)."""
     import re
 
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        drop_minhash_table,
-        minhash_table_append,
-        minhash_table_delete,
-        minhash_table_pairs_vs_batch,
-    )
-
     base, new, _ = _frames(spark)
-    tbl = "t_mh_delete"
-    drop_minhash_table(spark, tbl)
+    form = _BandForm(spark, tmp_path, "table", "t_mh_delete")
     try:
-        minhash_table_append(base, "doc_id", "text", tbl, batch_id="b0",
-                             buckets=4)
-        minhash_table_append(new, "doc_id", "text", tbl, batch_id="b1",
-                             buckets=4)
-        assert (1, 101) in {(r.id_a, r.id_b) for r in
-                            minhash_table_pairs_vs_batch(spark, tbl, "b1")
-                            .collect()}
-        assert minhash_table_delete(spark, tbl, [101]) > 0
-        got = {(r.id_a, r.id_b) for r in
-               minhash_table_pairs_vs_batch(spark, tbl, "b1").collect()}
-        assert all(101 not in p for p in got) and (102, 103) in got
-        # no-op delete returns 0
-        assert minhash_table_delete(spark, tbl, [999999]) == 0
-        # co-location: no band-key shuffle after the CTAS swap, and the
-        # scan is still bucketed (the r8 zero-Exchange pin's assertions)
-        plan = (
-            minhash_table_pairs_vs_batch(spark, tbl, "b1")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+        _delete_removes_pairs(form, base, new)
+        # co-location: no band-key shuffle, and the scan is still
+        # bucketed (the r8 zero-Exchange pin's assertions)
+        plan = form.pairs_df("b1")._jdf.queryExecution().executedPlan().toString()
         exchanges = re.findall(
             r"Exchange (?:hash|range)partitioning\(([^)]*)\)", plan
         )
         assert not [e for e in exchanges if "band_" in e], exchanges
         assert "SelectedBucketsCount" in plan, "bucketed scan not used"
-        # markers survive: redelivery still rejected after delete
-        with pytest.raises(ValueError, match="already appended"):
-            minhash_table_append(new, "doc_id", "text", tbl, batch_id="b1",
-                                 buckets=4)
-        # deleting everything is refused with the table intact
-        with pytest.raises(ValueError, match="EMPTY"):
-            minhash_table_delete(
-                spark, tbl,
-                [r.doc_id for r in base.collect()] + [101, 102, 103, 104],
-            )
-        assert spark.table(tbl).count() > 0
     finally:
-        drop_minhash_table(spark, tbl)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_deleting")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_counts_deleting")
+        form.cleanup()
+
+
+def test_path_delete_removes_pairs(spark, tmp_path):
+    """minhash_index_delete: the band table's pairs checks, on the
+    path form."""
+    base, new, _ = _frames(spark)
+    _delete_removes_pairs(_BandForm(spark, tmp_path, "path", "idx"), base, new)
 
 
 def test_delete_rejects_null_ids_loudly(spark, tmp_path):
@@ -587,68 +499,15 @@ def test_delete_rejects_null_ids_loudly(spark, tmp_path):
     banded_minhash_signatures(
         nulldoc, "doc_id", "text", meta["num_hashes"], meta["bands"],
         meta["shingle_n"], meta["seed"],
-    ).withColumn("_batch", F.lit("b0")).withColumn(
-        "_bgroup",
-        F.pmod(F.col("band_hash"), F.lit(meta["bgroups"])).cast("int"),
-    ).write.mode("append").partitionBy("band_idx", "_bgroup").parquet(path)
+    ).withColumn("_batch", F.lit("b0")).write.mode("append").partitionBy(
+        "band_idx"
+    ).parquet(path)
     n_null = spark.read.parquet(path).filter(F.col("_id").isNull()).count()
     assert n_null > 0
     assert minhash_index_delete(spark, path, [3]) > 0
     assert spark.read.parquet(path).filter(
         F.col("_id").isNull()
     ).count() == n_null
-
-
-def test_relayout_heals_crashed_delete_leftovers(spark, tmp_path):
-    """ADVICE r10: a localized delete killed between _dir_swap's paired
-    renames can leave a `_bgroup=N.old` dir NEXT TO the rewritten live
-    dir (swap done, cleanup not). Its name contains '=', so Spark would
-    discover it as a partition value and relayout would silently
-    migrate the PRE-delete rows — including GDPR-retracted ids — into
-    the new index. minhash_index_relayout now runs the same healing as
-    the delete entry points before reading the source."""
-    import os
-    import shutil
-
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        minhash_index_delete,
-        minhash_index_relayout,
-    )
-
-    base, new, _ = _frames(spark)
-    path = str(tmp_path / "idx")
-    minhash_index_append(base, "doc_id", "text", path, batch_id="b0",
-                         bgroups=8)
-    minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
-    # snapshot the pre-delete tree, delete 101, then resurrect every
-    # rewritten dir's pre-delete copy as `<dir>.old` — exactly the
-    # swap-completed-cleanup-skipped crash state
-    pre_copy = str(tmp_path / "pre")
-    shutil.copytree(path, pre_copy)
-    assert minhash_index_delete(spark, path, [101]) > 0
-    planted = 0
-    for b in os.listdir(pre_copy):
-        if not b.startswith("band_idx="):
-            continue
-        for g in os.listdir(os.path.join(pre_copy, b)):
-            if not g.startswith("_bgroup="):
-                continue
-            old_files = sorted(os.listdir(os.path.join(pre_copy, b, g)))
-            live = os.path.join(path, b, g)
-            now_files = sorted(os.listdir(live)) if os.path.isdir(live) else []
-            if old_files != now_files:  # this dir was rewritten
-                shutil.copytree(os.path.join(pre_copy, b, g), live + ".old")
-                planted += 1
-    assert planted > 0
-    migrated = str(tmp_path / "migrated")
-    minhash_index_relayout(spark, path, migrated, bgroups=4)
-    moved = spark.read.parquet(migrated)
-    assert moved.filter(F.col("_id") == 101).count() == 0
-    # healing restored the source: leftovers gone, retracted id stays out
-    assert not any(d.endswith(".old")
-                   for b in os.listdir(path) if os.path.isdir(os.path.join(path, b))
-                   for d in os.listdir(os.path.join(path, b)))
-    assert spark.read.parquet(path).filter(F.col("_id") == 101).count() == 0
 
 
 def test_table_delete_swap_recovery(spark, tmp_path):
@@ -706,107 +565,187 @@ def test_table_delete_swap_recovery(spark, tmp_path):
         drop_minhash_table(spark, tbl)
 
 
+def _delete_is_request_proportional(form, base, new):
+    """A delete appends a request-sized tombstone: (1) data and guard
+    counts files are BYTE-UNTOUCHED (mtime-pinned); the anti-join
+    broadcasts; (2) retracted history stays dead while a RE-APPENDED id
+    lives (seq-scoped tombstones — an id-only sidecar would either
+    resurrect GDPR rows or permanently kill re-ingests); (3) compaction
+    folds the tombstones in, drops the sidecar, and pairs results are
+    unchanged."""
+    import re
+
+    form.append(base, "b0")
+    form.append(new, "b1")
+    pre_data, pre_counts = form.files("data"), form.files("counts")
+    assert pre_data and pre_counts
+    assert form.delete([101]) > 0
+    # (1) request-proportional: data + counts byte-untouched
+    assert form.files("data") == pre_data
+    assert form.files("counts") == pre_counts
+    assert form.tombstones() is not None
+    got = form.pairs("b1")
+    assert all(101 not in p for p in got) and (102, 103) in got
+    # the tombstone anti-join must BROADCAST its request-sized build
+    # side — an _id-key SortMergeJoin would shuffle the whole index per
+    # snapshot (review r11). Keys are matched as whole attribute names:
+    # the path form's band join legitimately shuffles on band_idx
+    plan = form.pairs_df("b1")._jdf.queryExecution().executedPlan().toString()
+    id_ex = [e for e in re.findall(
+        r"Exchange (?:hash|range)partitioning\(([^)]*)\)", plan
+    ) if re.search(r"(?<!\w)_(?:t_)?id#", e)]
+    assert not id_ex, f"tombstone anti-join shuffled the index: {id_ex}"
+    # idempotent re-delete of a dead id is a no-op
+    assert form.delete([101]) == 0
+    # (2) re-append the retracted id: the NEW observation lives, the
+    # retracted history stays dead
+    again = base.sparkSession.createDataFrame(
+        [(101, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string")
+    form.append(again, "b2")
+    b2 = form.pairs("b2")
+    assert (1, 101) in b2
+    b1 = form.pairs("b1")
+    assert all(101 not in p for p in b1)
+    # (3) compaction folds the tombstones in and drops the sidecar
+    assert form.compact() > 0
+    assert form.tombstones() is None
+    assert form.pairs("b2") == b2 and form.pairs("b1") == b1
+    # compact with nothing pending is a cheap no-op
+    assert form.compact() == 0
+
+
 def test_table_delete_tombstones_are_request_proportional(spark, tmp_path):
-    """r11 (VERDICT r10 #2): minhash_table_delete no longer CTAS-rewrites
-    the table per delete — it appends a request-sized tombstone sidecar
-    that pairs queries anti-join out. Pinned here: (1) the data table's
-    files are BYTE-UNTOUCHED by a delete (per-delete cost proportional
-    to the request); (2) retracted history stays dead while a
-    RE-APPENDED id lives (seq-scoped tombstones — an id-only sidecar
-    would either resurrect GDPR rows or permanently kill re-ingests);
-    (3) compaction folds tombstones in, drops the sidecar, and pairs
-    results are unchanged."""
-    import os
-
-    from etl_apache_kafka_python_doker_aws_spark.functions.index_store import _table_exists
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        drop_minhash_table,
-        minhash_table_append,
-        minhash_table_compact,
-        minhash_table_delete,
-        minhash_table_pairs_vs_batch,
-    )
-
-    def files_of(tbl):
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        root = wh[len("file:"):] if wh.startswith("file:") else wh
-        loc = os.path.join(root, tbl.lower())
-        out = {}
-        for dp, _, fs in os.walk(loc):
-            for f in fs:
-                p = os.path.join(dp, f)
-                st = os.stat(p)
-                out[os.path.relpath(p, loc)] = (st.st_mtime_ns, st.st_size)
-        return out
-
+    """r11 (VERDICT r10 #2): minhash_table_delete appends tombstones
+    instead of CTAS-rewriting the table (``_delete_is_request_proportional``);
+    a forced auto-compaction (threshold 0) takes the CTAS path."""
     base, new, _ = _frames(spark)
-    tbl = "t_mh_tombstones"
-    drop_minhash_table(spark, tbl)
+    form = _BandForm(spark, tmp_path, "table", "t_mh_tombstones")
     try:
-        minhash_table_append(base, "doc_id", "text", tbl, batch_id="b0",
-                             buckets=4)
-        minhash_table_append(new, "doc_id", "text", tbl, batch_id="b1",
-                             buckets=4)
-        pre_files = files_of(tbl)
-        pre_counts = files_of(f"{tbl}_counts")
-        assert minhash_table_delete(spark, tbl, [101]) > 0
-        # (1) request-proportional: data + counts tables byte-untouched
-        assert files_of(tbl) == pre_files
-        assert files_of(f"{tbl}_counts") == pre_counts
-        assert _table_exists(spark, f"{tbl}_tombstones")
-        got = {(r.id_a, r.id_b) for r in
-               minhash_table_pairs_vs_batch(spark, tbl, "b1").collect()}
-        assert all(101 not in p for p in got) and (102, 103) in got
-        # the tombstone anti-join must BROADCAST its request-sized
-        # build side — an _id-key SortMergeJoin would shuffle the whole
-        # index per snapshot, exactly the cost this tier exists to
-        # avoid (review r11: the zero-Exchange pin above never ran with
-        # tombstones present, so the regression would pass CI)
-        import re as _re
-        plan = (
-            minhash_table_pairs_vs_batch(spark, tbl, "b1")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        id_ex = [e for e in _re.findall(
-            r"Exchange (?:hash|range)partitioning\(([^)]*)\)", plan
-        ) if "_id" in e or "_t_id" in e]
-        assert not id_ex, f"tombstone anti-join shuffled the index: {id_ex}"
-        # idempotent re-delete of a dead id is a no-op
-        assert minhash_table_delete(spark, tbl, [101]) == 0
-        # (2) re-append the retracted id: the NEW observation lives,
-        # the retracted history stays dead
-        again = spark.createDataFrame(
-            [(101, "the quick brown fox jumps over the lazy dog")],
-            "doc_id long, text string")
-        minhash_table_append(again, "doc_id", "text", tbl, batch_id="b2",
-                             buckets=4)
-        b2 = {(r.id_a, r.id_b) for r in
-              minhash_table_pairs_vs_batch(spark, tbl, "b2").collect()}
-        assert (1, 101) in b2
-        b1 = {(r.id_a, r.id_b) for r in
-              minhash_table_pairs_vs_batch(spark, tbl, "b1").collect()}
-        assert all(101 not in p for p in b1)
-        # (3) compaction folds the tombstones in and drops the sidecar
-        removed = minhash_table_compact(spark, tbl)
-        assert removed > 0
-        assert not _table_exists(spark, f"{tbl}_tombstones")
-        assert {(r.id_a, r.id_b) for r in
-                minhash_table_pairs_vs_batch(spark, tbl, "b2").collect()} == b2
-        assert {(r.id_a, r.id_b) for r in
-                minhash_table_pairs_vs_batch(spark, tbl, "b1").collect()} == b1
-        # compact with nothing pending is a cheap no-op
-        assert minhash_table_compact(spark, tbl) == 0
-        # forced auto-compaction (threshold 0) takes the CTAS path
-        assert minhash_table_delete(spark, tbl, [104],
-                                    compact_threshold=0) > 0
-        assert not _table_exists(spark, f"{tbl}_tombstones")
-        got = {(r.id_a, r.id_b) for r in
-               minhash_table_pairs_vs_batch(spark, tbl, "b1").collect()}
+        _delete_is_request_proportional(form, base, new)
+        assert form.di.minhash_table_delete(spark, form.loc, [104],
+                                            compact_threshold=0) > 0
+        assert form.tombstones() is None
+        got = form.pairs("b1")
         assert all(104 not in p for p in got) and (102, 103) in got
     finally:
-        for name in (tbl, f"{tbl}_counts"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_deleting")
-        drop_minhash_table(spark, tbl)
+        form.cleanup()
+
+
+def test_path_delete_tombstones_are_request_proportional(spark, tmp_path):
+    """minhash_index_delete appends tombstones (the band table's
+    checks, on the path form)."""
+    base, new, _ = _frames(spark)
+    _delete_is_request_proportional(
+        _BandForm(spark, tmp_path, "path", "idx"), base, new)
+
+
+def test_path_delete_runs_no_more_jobs_than_table_delete(
+    spark, tmp_path, jobs_during
+):
+    """A non-compacting band-path delete of one id runs no more Spark
+    jobs than minhash_table_delete of the same request."""
+    base, new, _ = _frames(spark)
+    forms = [_BandForm(spark, tmp_path, "path", "idx"),
+             _BandForm(spark, tmp_path, "table", "t_mh_delete_jobs")]
+    jobs = {}
+    try:
+        for form in forms:
+            form.append(base, "b0")
+            form.append(new, "b1")
+            removed, jobs[form.form] = jobs_during(lambda: form.delete([101]))
+            assert removed > 0 and form.tombstones() is not None  # no compaction
+        assert jobs["path"] <= jobs["table"], jobs
+    finally:
+        forms[1].cleanup()
+
+
+class Killed(Exception):
+    """A simulated process kill."""
+
+
+def _kill_compact_at(monkeypatch, state, path):
+    """Make the next ``minhash_index_compact`` die at ``state``."""
+    import os
+    import shutil
+
+    from etl_apache_kafka_python_doker_aws_spark.plans import merge
+
+    if state == "mid_dir_swap":
+        # the 4th rename moves the second staged dir in: the first
+        # band dir is folded, the second sits in ``band_idx=N.old``
+        real, n = os.rename, [0]
+
+        def rename(src, dst):
+            n[0] += 1
+            if n[0] == 4:
+                raise Killed(src)
+            real(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+    elif state == "before_counts_swap":
+        def swap_in(staging, target):
+            raise Killed(target)
+
+        monkeypatch.setattr(merge, "_swap_in", swap_in)
+    else:  # before_tombstone_drop
+        real_rmtree = shutil.rmtree
+
+        def rmtree(p, *a, **kw):
+            if str(p).rstrip("/").endswith("_graft_tombstones"):
+                raise Killed(p)
+            real_rmtree(p, *a, **kw)
+
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+
+
+@pytest.mark.parametrize(
+    "state", ["mid_dir_swap", "before_counts_swap", "before_tombstone_drop"]
+)
+def test_path_compact_crash_windows_heal(spark, tmp_path, monkeypatch, state):
+    """minhash_index_compact killed at each window: the next band entry
+    point heals the swap (no ``.old`` dir left, the retracted id never
+    served, the surviving pairs intact), and a re-run finishes the fold,
+    makes the guard counts exact and drops the tombstones."""
+    import os
+
+    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
+        minhash_index_compact,
+        minhash_index_delete,
+    )
+
+    base, new, _ = _frames(spark)
+    path = str(tmp_path / "idx")
+    minhash_index_append(base, "doc_id", "text", path, batch_id="b0")
+    minhash_index_append(new, "doc_id", "text", path, batch_id="b1")
+    want = minhash_index_pairs_vs_batch(spark, path, "b1").collect()
+    want = {(r.id_a, r.id_b) for r in want if 101 not in (r.id_a, r.id_b)}
+    n_dead = minhash_index_delete(spark, path, [101])
+    assert n_dead > 0
+    _kill_compact_at(monkeypatch, state, path)
+    with pytest.raises(Killed):
+        minhash_index_compact(spark, path)
+    monkeypatch.undo()
+    # the next entry point heals, and serves the post-delete pair set
+    got = {(r.id_a, r.id_b) for r in
+           minhash_index_pairs_vs_batch(spark, path, "b1").collect()}
+    assert got == want and (102, 103) in got
+    assert not [d for d in os.listdir(path) if d.endswith(".old")]
+    assert sorted(d for d in os.listdir(path) if d.startswith("band_idx=")) == [
+        f"band_idx={i}" for i in range(4)]
+    # the re-run folds what the kill left and finishes
+    left = minhash_index_compact(spark, path)
+    if state == "mid_dir_swap":
+        assert 0 < left < n_dead  # the dirs not yet swapped
+    else:
+        assert left == 0
+    assert not os.path.exists(os.path.join(path, "_graft_tombstones"))
+    rows = spark.read.parquet(path)
+    assert rows.filter(F.col("_id") == 101).count() == 0
+    guard = spark.read.parquet(os.path.join(path, "_graft_counts"))
+    assert guard.filter("band_idx >= 0").agg(F.sum("cnt")).first()[0] == rows.count()
+    assert {(r.id_a, r.id_b) for r in
+            minhash_index_pairs_vs_batch(spark, path, "b1").collect()} == want
 
 
 def test_compact_heals_stranded_counts_swap(spark, tmp_path):
@@ -989,40 +928,37 @@ def test_compact_sweeps_unmarked_rows_without_tombstones(spark, tmp_path):
         drop_minhash_table(spark, tbl)
 
 
-def test_tombstone_sidecar_id_type_is_order_independent(spark, tmp_path):
-    """second review r11: the tombstone sidecar's _id type is pinned to
-    the INDEX's id type, not to whichever request form ran first — a
-    first delete with an INT-typed id frame must not brick a later
-    BIGINT list delete on the sidecar append."""
-    from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
-        drop_minhash_table,
-        minhash_table_append,
-        minhash_table_delete,
-        minhash_table_pairs_vs_batch,
-    )
+def _tombstone_id_type_is_order_independent(form, base, new):
+    """The tombstone sidecar's _id type is pinned to the INDEX's id
+    type, not to whichever request form ran first — a first delete with
+    an INT-typed id frame must not brick a later BIGINT list delete on
+    the sidecar append."""
+    form.append(base, "b0")
+    form.append(new, "b1")
+    narrow = base.sparkSession.createDataFrame([(101,)], "doc_id int")
+    assert form.delete(narrow) > 0
+    assert form.tombstones().schema["_id"].simpleString() == "_id:bigint"
+    # the list form (BIGINT) appends into the same sidecar cleanly
+    assert form.delete([104]) > 0
+    got = form.pairs("b1")
+    assert all(101 not in p and 104 not in p for p in got)
+    assert (102, 103) in got
 
+
+def test_tombstone_sidecar_id_type_is_order_independent(spark, tmp_path):
+    """second review r11, on the band table."""
     base, new, _ = _frames(spark)
-    tbl = "t_mh_tomb_types"
-    drop_minhash_table(spark, tbl)
+    form = _BandForm(spark, tmp_path, "table", "t_mh_tomb_types")
     try:
-        minhash_table_append(base, "doc_id", "text", tbl, batch_id="b0",
-                             buckets=4)
-        minhash_table_append(new, "doc_id", "text", tbl, batch_id="b1",
-                             buckets=4)
-        narrow = spark.createDataFrame([(101,)], "doc_id int")  # INT, not BIGINT
-        assert minhash_table_delete(spark, tbl, narrow) > 0
-        assert spark.table(f"{tbl}_tombstones").schema["_id"].simpleString() \
-            == "_id:bigint"
-        # the list form (BIGINT) appends into the same sidecar cleanly
-        assert minhash_table_delete(spark, tbl, [104]) > 0
-        got = {(r.id_a, r.id_b) for r in
-               minhash_table_pairs_vs_batch(spark, tbl, "b1").collect()}
-        assert all(101 not in p and 104 not in p for p in got)
-        assert (102, 103) in got
+        _tombstone_id_type_is_order_independent(form, base, new)
     finally:
-        for name in (tbl, f"{tbl}_counts"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_deleting")
-        drop_minhash_table(spark, tbl)
+        form.cleanup()
+
+
+def test_path_tombstone_sidecar_id_type_is_order_independent(spark, tmp_path):
+    base, new, _ = _frames(spark)
+    _tombstone_id_type_is_order_independent(
+        _BandForm(spark, tmp_path, "path", "idx"), base, new)
 
 
 def test_apply_tombstones_bounds_the_marker_map(spark):
@@ -1238,14 +1174,14 @@ def test_payload_append_guards(spark, tmp_path):
 
 
 def test_payload_survives_lifecycle(spark, tmp_path):
-    """r15: payload values and the meta pin survive relayout, localized
-    delete, and bucketed-table compact (whole-row rewrites — this pins
-    the contract, not the mechanism)."""
+    """r15: payload values and the meta pin survive tombstone delete and
+    compaction on both band forms (whole-row rewrites — this pins the
+    contract, not the mechanism)."""
     from etl_apache_kafka_python_doker_aws_spark.functions.dedup_index import (
         drop_minhash_table,
+        minhash_index_compact,
         minhash_index_delete,
         minhash_index_meta,
-        minhash_index_relayout,
         minhash_table_append,
         minhash_table_compact,
         minhash_table_delete,
@@ -1256,19 +1192,18 @@ def test_payload_survives_lifecycle(spark, tmp_path):
     path = str(tmp_path / "mh_payload_life")
     minhash_index_append(
         _with_lang(full), "doc_id", "text", path, batch_id="b0",
-        payload_cols=["lang"], bgroups=4,
+        payload_cols=["lang"],
     )
-    new = str(tmp_path / "mh_payload_life_v2")
-    minhash_index_relayout(spark, path, new, bgroups=2)
-    assert minhash_index_meta(spark, new)["payload_cols"] == ["lang"]
-    assert minhash_index_delete(spark, new, [102]) > 0
+    assert minhash_index_delete(spark, path, [102]) > 0
+    assert minhash_index_compact(spark, path) > 0
+    assert minhash_index_meta(spark, path)["payload_cols"] == ["lang"]
     got = minhash_index_pairs_vs_batch(
-        spark, new, "b0", where="lang = 'de'"
+        spark, path, "b0", where="lang = 'de'"
     ).collect()
     assert {(r.id_a, r.id_b) for r in got} == {(1, 101)}, got
     # stored values (not recomputed): every surviving row's lang matches
     # the id-derived rule
-    rows = spark.read.parquet(new).select("_id", "lang").collect()
+    rows = spark.read.parquet(path).select("_id", "lang").collect()
     assert rows and all(
         r.lang == ("en" if r._id % 2 == 0 else "de") for r in rows
     )

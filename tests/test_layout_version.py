@@ -19,7 +19,10 @@ from etl_apache_kafka_python_doker_aws_spark.functions import (
 )
 from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
 
-REBUILD = "layout_version None.*rebuild the index from source"
+REBUILD = (
+    f"layout_version {{}}, but only layout_version {index_store.LAYOUT_VERSION} "
+    "is readable.*rebuild the index from source"
+)
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -39,9 +42,10 @@ def _vecs(spark, ids):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def _unstamp_json_meta(path):
-    """Rewrite a path tier's JSON meta row without ``layout_version``
-    (and drop the .crc sidecars a hand edit would invalidate)."""
+def _unstamp_json_meta(path, stamp=None):
+    """Rewrite a path tier's JSON meta row without ``layout_version``,
+    or with ``stamp`` as it (and drop the .crc sidecars a hand edit
+    would invalidate)."""
     meta_dir = os.path.join(path, "_graft_meta")
     for f in glob.glob(os.path.join(meta_dir, "*.json")):
         with open(f) as fh:
@@ -49,6 +53,8 @@ def _unstamp_json_meta(path):
         with open(f, "w") as fh:
             for row in rows:
                 row.pop("layout_version")
+                if stamp is not None:
+                    row["layout_version"] = stamp
                 fh.write(json.dumps(row) + "\n")
     for crc in glob.glob(os.path.join(meta_dir, ".*.crc")):
         os.remove(crc)
@@ -79,20 +85,25 @@ def _ann(spark, tmp_path):
     }, None
 
 
-def _band_path(spark, tmp_path):
+def _band_path(spark, tmp_path, stamp=None):
     path = str(tmp_path / "band")
     di.minhash_index_append(_docs(spark), "doc_id", "text", path,
                             batch_id="b0")
-    _unstamp_json_meta(path)
+    _unstamp_json_meta(path, stamp)
     return {
         "meta": lambda: di.minhash_index_meta(spark, path),
         "append": lambda: di.minhash_index_append(
             _docs(spark), "doc_id", "text", path, batch_id="b1"),
         "pairs": lambda: di.minhash_index_pairs_vs_batch(spark, path, "b0"),
         "delete": lambda: di.minhash_index_delete(spark, path, [1]),
-        "relayout": lambda: di.minhash_index_relayout(
-            spark, path, str(tmp_path / "band2")),
+        "compact": lambda: di.minhash_index_compact(spark, path),
     }, None
+
+
+def _band_path_v1(spark, tmp_path):
+    """A band path index stamped with the retired layout 1 (the
+    ``band_idx=*/_bgroup=*`` layout) — refused, never misread."""
+    return _band_path(spark, tmp_path, stamp=1)
 
 
 def _band_table(spark, tmp_path):
@@ -126,14 +137,15 @@ def _sha_table(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "tier", [_ann, _band_path, _band_table, _sha_table],
-    ids=["ann", "band_path", "band_table", "sha_table"],
+    "tier", [_ann, _band_path, _band_table, _sha_table, _band_path_v1],
+    ids=["ann", "band_path", "band_table", "sha_table", "band_path_v1"],
 )
 def test_unstamped_meta_is_refused_by_every_entry_point(spark, tmp_path, tier):
     ops, cleanup = tier(spark, tmp_path)
+    stamp = 1 if tier is _band_path_v1 else None
     try:
         for name, op in ops.items():
-            with pytest.raises(ValueError, match=REBUILD):
+            with pytest.raises(ValueError, match=REBUILD.format(stamp)):
                 op()
     finally:
         if cleanup:
@@ -144,17 +156,14 @@ def test_stamp_is_written_and_legacy_layout_options_are_rejected(
     spark, tmp_path
 ):
     path = str(tmp_path / "band")
-    with pytest.raises(ValueError, match="bgroups None"):
+    with pytest.raises(TypeError, match="bgroups"):
         di.minhash_index_append(_docs(spark), "doc_id", "text", path,
-                                batch_id="b0", bgroups=None)
+                                batch_id="b0", bgroups=4)
     with pytest.raises(ValueError, match="vec_buckets None"):
         ai.ann_index_build(_vecs(spark, range(8)), "vec_id", "embedding",
                            str(tmp_path / "ann"), dim=16, vec_buckets=None)
     di.minhash_index_append(_docs(spark), "doc_id", "text", path,
-                            batch_id="b0", bgroups=4)
-    with pytest.raises(ValueError, match="bgroups 0"):
-        di.minhash_index_relayout(spark, path, str(tmp_path / "b2"),
-                                  bgroups=0)
+                            batch_id="b0")
     (meta_file,) = glob.glob(os.path.join(path, "_graft_meta", "*.json"))
     with open(meta_file) as fh:
         assert json.loads(fh.readline())["layout_version"] == index_store.LAYOUT_VERSION

@@ -645,3 +645,43 @@ def test_tiny_rows_df_warns_once_without_arrow(spark, monkeypatch):
     assert [[tuple(r) for r in f.collect()] for f in frames] == [
         [(0, "x")], [(1, "x")]
     ]
+
+
+@pytest.mark.parametrize("env", [None, "3"], ids=["unset", "set"])
+def test_get_spark_defaults_to_usable_cpus(monkeypatch, env):
+    """``get_spark`` sizes ``local[N]`` and the shuffle partitions from
+    ``SPARK_GRAFT_CPUS``, or, when it is unset, from the CPUs this
+    process may run on. The builder is replaced by a recorder, so no
+    second JVM starts."""
+    from types import SimpleNamespace
+
+    from etl_apache_kafka_python_doker_aws_spark import session
+
+    seen = {}
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def config(self, k, v):
+            seen[k] = v
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(
+                sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(session, "SparkSession",
+                        SimpleNamespace(builder=Builder()))
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+    session.get_spark()
+    n = env or str(len(os.sched_getaffinity(0)))
+    assert seen["master"] == f"local[{n}]"
+    assert seen["spark.sql.shuffle.partitions"] == n
