@@ -54,17 +54,16 @@ protocol in ``index_store``:
     duplicate batch_id rejected. ``n_rows`` lets the auto-sized
     shortlist read the corpus size as metadata (sum of markers) instead
     of counting the codes tier.
-  * ``_graft_tombstones/`` + ``_graft_dead/`` — the retraction
-    sidecars: ``ann_index_delete`` APPENDS its request as (``_id``,
-    ``del_seq``) tombstones instead of rewriting ``cell=/_vbucket=``
-    directories (a dir-proportional rewrite would pay ~n/4096 vectors
-    per directory at 10⁹ scale for a 25-row GDPR request). Every read
-    path anti-joins the tombstones out, seq-scoped against the batch
-    markers (``index_store._tombstone_join``: a row is dead iff its
-    batch was marked BEFORE the delete ran — a re-appended id lives
-    while its retracted history stays dead). ``_graft_dead`` holds one
-    tiny JSON tally per delete so live-size accounting (auto
-    shortlist/prune) stays a metadata read; ``ann_index_compact`` folds
+  * ``_graft_tombstones/`` — the retraction sidecar, shared with the
+    other index forms (``index_store._tombstone_delete``):
+    ``ann_index_delete`` APPENDS its request as (``_id``, ``del_seq``)
+    tombstones instead of rewriting ``cell=/_vbucket=`` directories (a
+    dir-proportional rewrite would pay ~n/4096 vectors per directory at
+    10⁹ scale for a 25-row GDPR request). Every read path anti-joins
+    the tombstones out, seq-scoped against the batch markers
+    (``index_store._tombstone_join``: a row is dead iff its batch was
+    marked BEFORE the delete ran — a re-appended id lives while its
+    retracted history stays dead). ``ann_index_compact`` folds
     tombstones into the affected directories and recomputes marker
     ``n_rows``.
   * ``residual=True`` trains the PQ codebooks on per-cell residuals
@@ -101,7 +100,6 @@ from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
     _BATCH_DIR,
     _TOMB_DIR,
     _append_marker,
-    _append_tombstones,
     _fold_partition_dirs,
     _fs_nonempty,
     _live_rows,
@@ -113,7 +111,7 @@ from etl_apache_kafka_python_doker_aws_spark.functions.index_store import (
     _recover_partition_dirs,
     _require_local_path,
     _resume_skips_append,
-    _retraction_forms,
+    _tombstone_delete,
     _tombstones,
     _write_meta,
 )
@@ -126,13 +124,9 @@ from etl_apache_kafka_python_doker_aws_spark.functions.similarity import (
     _residual,
     _subspace_dists,
 )
-from etl_apache_kafka_python_doker_aws_spark.util import spark_hidden, tiny_rows_df
+from etl_apache_kafka_python_doker_aws_spark.util import tiny_rows_df
 
 _VEC_DIR = "_graft_vectors"
-_DEAD_DIR = "_graft_dead"
-# fold the per-delete tally files into one row once this many pile up
-# (VERDICT r12 #6: auto-shortlist searches list this dir per call)
-_DEAD_FOLD_FILES = 32
 
 # Corpus-scaled refine-tier bucketing (r12, VERDICT r11 #2): the r11
 # 10M-vector probe showed the fixed default of 64 `_vbucket`s loses its
@@ -238,197 +232,25 @@ def ann_index_batches(spark: SparkSession, path: str) -> list[str]:
 
 def _index_size_from_markers(markers: list) -> int:
     """PHYSICAL corpus size as a METADATA read: sum of the per-batch
-    ``n_rows`` marker field. Tombstoned-but-uncompacted rows are still
-    counted here — this is the SCAN-COST statistic (what a streaming
-    read pays); use ``_ann_live_size`` for the serving (recall-sizing)
-    size."""
+    ``n_rows`` marker field — the one size statistic the index keeps
+    (auto shortlist, auto prune, the auto-compaction share).
+    Tombstoned-but-uncompacted rows are still counted until
+    ``ann_index_compact`` recomputes the markers."""
     return sum(int(r.n_rows) for r in markers)
 
 
-def _tally_fs(spark: SparkSession, dead_dir: str):
-    """(Hadoop FileSystem, jvm Path ctor) for the dead-tally dir — the
-    fold runs through the Hadoop FS API so it works on ANY scheme
-    (VERDICT r13 #2: the r13 fold was gated to local paths, so an
-    object-store index re-accrued one tally file per delete on exactly
-    the FS where LIST costs most)."""
-    sc = spark.sparkContext
-    jpath_cls = sc._jvm.org.apache.hadoop.fs.Path
-    fs = jpath_cls(dead_dir).getFileSystem(sc._jsc.hadoopConfiguration())
-    return fs, jpath_cls
-
-
-def _dead_tally_files(spark: SparkSession, dead_dir: str) -> list[str]:
-    """Basenames of the committed tally data files (``_``/``.`` litter
-    excluded), [] when the dir is absent. Hadoop-FS listing — any
-    scheme."""
-    fs, jpath_cls = _tally_fs(spark, dead_dir)
-    jpath = jpath_cls(dead_dir)
-    if not fs.exists(jpath):
-        return []
-    return sorted(
-        n
-        for n in (st.getPath().getName() for st in fs.listStatus(jpath))
-        if not spark_hidden(n)
-    )
-
-
-def _resolve_tally_rows(rows) -> int:
-    """Resolve collected dead-tally rows (each with ``_f`` = source file
-    URI) to the dead total. Two row kinds share the dir: per-delete
-    INCREMENTS ({del_seq, n_dead}) and FOLD rows ({del_seq, n_dead,
-    covers}) whose ``covers`` lists the data files the fold's total
-    already accounts. A row whose file is named by ANY live fold row is
-    superseded — so the fold never renames the dir (the r13 swap design
-    forced a reader retry over the rename window and silently dropped a
-    concurrent writer's increment): folds APPEND one row, then delete
-    the covered files as pure cleanup that correctness never waits on.
-    Nested leftovers resolve too: a fold file covered by a later fold is
-    itself excluded, and any increments it covered appear in the later
-    fold's covers directly (the later fold covers every file it read).
-    A row with no readable ``n_dead`` raises — UNREADABLE propagates
-    (the r12 sidecar rule); a silently-skipped corrupt row would
-    understate dead and overstate live size forever-until-compact."""
-    covered: set[str] = set()
-    for r in rows:
-        c = r.covers if "covers" in r.__fields__ else None
-        if c:
-            covered.update(c)
-    total = 0
-    for r in rows:
-        name = r._f.rstrip("/").rsplit("/", 1)[-1]
-        if name in covered:
-            continue
-        n = r.n_dead if "n_dead" in r.__fields__ else None
-        if n is None:
-            raise ValueError(
-                f"unreadable dead-tally row in {name}: no n_dead — the "
-                "sidecar is corrupt; rebuild the index or restore the file"
-            )
-        total += int(n)
-    return total
-
-
-def _is_missing_file_error(e: Exception, under: str | None = None) -> bool:
-    """True iff the error is the listed-then-deleted race class (a fold's
-    cleanup removed a covered file between a reader's listing and its
-    scan) — the ONLY class the dead-tally reader retries (ADVICE r13:
-    the bare-Exception retry paid a 0.2 s sleep + a duplicate read on
-    deterministic failures like corruption, which must fail fast).
-
-    Substring provenance (VERDICT r14 #6 — pin it so a Spark upgrade
-    that rewords the message is a visible canary failure, not a
-    silently-widened retry): harvested from Spark 4.1.x / Hadoop 3.4 —
-    ``PATH_NOT_FOUND`` is the Spark SQL error class ("[PATH_NOT_FOUND]
-    Path does not exist: <path>", thrown by the DataSource resolver),
-    ``FileNotFoundException``/"File <p> does not exist" come from
-    RawLocalFileSystem/DistributedFileSystem open/getFileStatus, and
-    "No such file" from the OS errno surfaced through local reads.
-    ``tests/test_ann_tombstones.py::test_missing_file_error_canary``
-    fabricates the real exception against the CURRENT Spark and asserts
-    classification, so a reworded message fails the canary.
-
-    ``under`` (ADVICE r14 narrowing): when given, the message must also
-    NAME a path under that directory — a deterministic failure whose
-    message merely contains "does not exist" about some OTHER path
-    (e.g. a mis-typed table location inside a larger plan) is not
-    absorbed into the race retry."""
-    s = str(e)
-    if not any(
-        t in s
-        for t in (
-            "PATH_NOT_FOUND",
-            "FileNotFoundException",
-            "FILE_NOT_FOUND",
-            "does not exist",
-            "No such file",
-        )
-    ):
-        return False
-    if under is None:
-        return True
-    # accept both raw and URI-prefixed renderings of the dir (Spark
-    # reports "file:/x/y" for a local "/x/y")
-    probe = under.rstrip("/")
-    return probe in s or probe.lstrip("/") in s.replace("file:", "")
-
-
-def _ann_dead_total(spark: SparkSession, path: str) -> int:
-    """Tombstoned-row tally: resolved sum of the ``_graft_dead`` rows
-    (one tiny JSON increment per delete; folds supersede covered files —
-    ``_resolve_tally_rows``). 0 when no delete is pending — compaction
-    drops the tally with the tombstones.
-
-    Retried once on the listed-then-deleted race ONLY (ADVICE r13
-    narrowing): the fold appends its row before deleting the files it
-    covers, so a reader that listed a covered file just before the
-    cleanup unlinked it can die mid-scan with PATH_NOT_FOUND; one
-    re-read lands on the folded state. Corruption and permission errors
-    propagate immediately (ABSENT-vs-UNREADABLE, review r12).
-    Driver-side FS read (r15, ``util.sidecar_json_rows``) — the tally
-    is one tiny row per un-folded delete (≤ ``_DEAD_FOLD_FILES`` + a
-    fold row), so the read is py4j listing + opens, no Spark job."""
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_rows
-
-    dead_dir = f"{path}/{_DEAD_DIR}"
-
-    def _read() -> int:
-        import json as _json
-
-        try:
-            rows = sidecar_json_rows(spark, dead_dir, with_file=True)
-        except _json.JSONDecodeError as e:
-            # malformed line = deterministic corruption, same loud
-            # failure class as a row without n_dead (never retried)
-            raise ValueError(
-                f"unreadable dead-tally row in {dead_dir}: {e} — the "
-                "sidecar is corrupt; rebuild the index or restore the file"
-            ) from e
-        if rows is None:
-            return 0
-        return _resolve_tally_rows(rows)
-
-    try:
-        return _read()
-    except Exception as first:
-        if not _is_missing_file_error(first, under=dead_dir):
-            raise
-        import time
-
-        time.sleep(0.2)
-        try:
-            return _read()
-        except Exception:
-            raise first
-
-
-def _ann_live_size(
-    spark: SparkSession, path: str, markers: list | None = None
-) -> int:
-    """Serving-size statistic for the auto SHORTLIST sizing (VERDICT
-    r11 #3): physical marker sum minus the tombstoned-dead tally —
-    recall targets scale with the LIVE corpus. Not the prune statistic:
-    scan cost is physical (tombstones shrink no bytes until compaction),
-    so ``prune="auto"`` reads ``_index_size_from_markers`` instead
-    (review r12). Pass already-collected ``markers`` to skip a
-    duplicate driver-side read."""
-    n = _index_size_from_markers(
-        markers if markers is not None else _marker_rows(spark, path)
-    )
-    return max(n - _ann_dead_total(spark, path), 0)
-
-
 def _ann_recover(path: str) -> None:
-    """Heal every crash window the WRITE ops can leave, run by each
-    write entry point (append/delete/compact/rebuild): half-swapped
-    partition directories from a compact (``_recover_partition_dirs``)
-    and compact's marker-dir swap (``plans.merge._recover``). No-op on
-    a remote-scheme path (the swap machinery is local-FS; remote
-    indexes fold tombstones via ``ann_index_rebuild``). Reads stay
-    correct through every window without healing: tombstones pending
-    during a partially-folded compact anti-join rows that are already
-    physically gone (a no-op), and a missing marker dir only degrades
-    the auto size statistic (it reads as 0 rows, so the auto shortlist
-    falls to its floor) until the next write entry point heals it."""
+    """Heal every crash window a killed ``ann_index_compact`` can
+    leave, run by every entry point (search, append, delete, compact,
+    rebuild — the ``dedup_index._band_recover`` rule): half-swapped
+    partition directories (``_recover_partition_dirs``; left alone, a
+    ``cell=1.old`` name is discovered as a partition value and the
+    next scan fails to cast it) and the marker-dir swap
+    (``plans.merge._recover``). No-op on a remote-scheme path (the swap
+    machinery is local-FS; remote indexes fold tombstones via
+    ``ann_index_rebuild``). Single maintenance writer: a reader that
+    recovers while another session's compact is mid-swap races that
+    compact's own renames."""
     if not _local_path(path):
         return
     from etl_apache_kafka_python_doker_aws_spark.plans.merge import _recover
@@ -964,8 +786,9 @@ def ann_index_search(
     Defaults are corpus-scaled, not fixture-tuned (VERDICT r8 #2 — the
     sf1 sweep measured recall 0.22 with the old fixed n_probe=4 /
     shortlist=50 on a 20k corpus): ``shortlist="auto"`` derives
-    max(200, n/10) from the live index size (marker metadata minus the
-    dead tally — no counting job), ``n_probe=8``. ``shortlist=None``
+    max(200, n/10) from the marker sum (metadata, no counting job; rows
+    tombstoned but not yet compacted still count, which only errs
+    towards recall), ``n_probe=8``. ``shortlist=None``
     keeps the ADC-only form (no exact re-rank); an int pins it
     explicitly.
 
@@ -1085,6 +908,7 @@ def ann_index_search(
     from pyspark.sql.window import Window
 
     spark = queries.sparkSession
+    _ann_recover(path)
     meta = ann_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"ann_index_search: no index at {path}")
@@ -1095,8 +919,7 @@ def ann_index_search(
         prune == "auto" and shortlist is not None
     )
     # ONE driver-side marker read serves the tombstone seq scope and
-    # both auto statistics (review r12: the r12-draft form re-read the
-    # marker JSON per statistic — duplicate driver jobs per search)
+    # the size statistic both auto choices read
     markers = (
         _marker_rows(spark, path)
         if (tomb is not None or need_stats)
@@ -1108,20 +931,15 @@ def ann_index_search(
             ann_shortlist,
         )
 
-        # recall sizing scales with the LIVE corpus: physical minus the
-        # tombstoned-dead tally (VERDICT r11 #3)
-        shortlist = ann_shortlist(_ann_live_size(spark, path, markers))
+        # sized from the physical marker sum: pending tombstones only
+        # err towards recall until the next compaction
+        shortlist = ann_shortlist(n_phys)
     if prune == "auto":
         # cost-based, from marker metadata (the CBO-statistic move): the
         # pruned read pays ~2 fixed jobs, so only prune once the cold
-        # tier is big enough that streaming it costs more. The statistic
-        # is the PHYSICAL marker sum, not the live size (review r12):
-        # tombstones shrink no bytes until compaction, so a heavily
-        # retracted-but-uncompacted index still pays the full physical
-        # scan on the streaming path — gating on live size would
-        # downgrade exactly the index the measured 10M crossover says
-        # to prune. Post-compact the two statistics coincide (compact
-        # rewrites marker n_rows from physical survivors).
+        # tier is big enough that streaming it costs more. Tombstones
+        # shrink no bytes until compaction, so the PHYSICAL marker sum
+        # is the scan cost a retracted-but-uncompacted index still pays.
         prune = n_phys is not None and n_phys >= _PRUNE_MIN_ROWS
     sub = meta["dim"] // meta["n_subspaces"]
     centroids, codebooks = meta["centroids"], meta["codebooks"]
@@ -1445,173 +1263,43 @@ def ann_index_delete(
     list (the GDPR shape) or a DataFrame whose FIRST column holds the
     ids.
 
-    TOMBSTONE sidecar (r12, VERDICT r11 #1 — the r9-r11 form rewrote
-    every ``cell=/_vbucket=`` directory a deleted id hashed into:
-    localized, but DIR-proportional — ~n/4096 vectors rewritten per
-    directory at 10⁹ scale for a 25-row GDPR request): each delete
-    APPENDS its request to ``_graft_tombstones/`` (``_id`` + the marker
-    sequence at delete time) plus one tiny ``_graft_dead/`` accounting
-    row, and every read path anti-joins the tombstones out
+    The shared TOMBSTONE protocol (``index_store._tombstone_delete``,
+    the one every index form retracts through): the request is APPENDED
+    to ``_graft_tombstones/`` (``_id`` + the marker sequence at delete
+    time) and every read path anti-joins it out
     (``index_store._live_rows`` — request-sized build side, seq-scoped
     so a RE-APPENDED id lives while its retracted history stays dead).
     The WRITE side is request-proportional: both data tiers stay
-    byte-untouched (mtime-pinned in tests). The accounting is ONE scan
-    of the codes tier either way, but its cost depends on the request
-    form (VERDICT r12 #7 — say which side is bounded): a Python LIST of
-    ids plans an ``_id IN (…)`` predicate PUSHED to the parquet reader
-    (row-group stats skip most of the tier — plan-pinned in
-    tests/test_ann_tombstones.py); a DataFrame request plans a
-    LeftSemi join, i.e. one full columnar scan of the codes tier with a
-    request-sized build side. Prefer the list form for small GDPR
-    requests; the DataFrame form is for bulk retractions where the
-    request itself is distributed. The physical rewrite is demoted to ``ann_index_compact``, run
-    automatically once dead rows exceed ``compact_threshold`` of the
-    index (pass 0 to force, or a value > 1 to never auto-compact —
-    the explicit/async pattern for latency-sensitive delete
-    endpoints). Meta (pinned models — deletion never retrains) and
-    batch markers are untouched, so a fully-deleted batch still
-    rejects redelivery; the live-size statistic the auto shortlist /
-    prune decisions read subtracts the dead tally (VERDICT r11 #3).
+    byte-untouched (mtime-pinned in tests); the accounting is one
+    aggregate over the live codes tier (``_id`` and ``_batch`` only).
+    The physical rewrite is ``ann_index_compact``, run automatically
+    once dead rows exceed ``compact_threshold`` of the marker sum (pass
+    0 to force, or a value > 1 to never auto-compact — the
+    explicit/async pattern for latency-sensitive delete endpoints).
+    Meta (pinned models — deletion never retrains) and batch markers
+    are untouched, so a fully-deleted batch still rejects redelivery.
     Deleting every live vector is refused (remove the path instead).
 
-    Works on any Hadoop filesystem: the tombstone path and the
-    dead-tally fold are plain appends + file deletes (no renames —
-    ``_fold_dead_tally``, r14); only the auto-compaction (physical
-    dir-swap rewrite) is skipped on a remote-scheme index — run
-    ``ann_index_compact`` on a host with the index locally mounted, or
-    ``ann_index_rebuild``. SINGLE-WRITER per index (ADVICE r13,
-    documented not assumed): ``del_seq`` derives from shared marker
+    Works on any Hadoop filesystem: the tombstone append needs no
+    rename; only the auto-compaction (physical dir-swap rewrite) is
+    skipped on a remote-scheme index — run ``ann_index_compact`` on a
+    host with the index locally mounted, or ``ann_index_rebuild``.
+    SINGLE-WRITER per index: ``del_seq`` derives from shared marker
     state, so two concurrent deletes would stamp the same sequence —
-    serialize deletes with appends/compacts. Concurrent SEARCHES are
-    fine (the one race — a fold cleanup unlinking a tally file a reader
-    just listed — is absorbed by the reader's narrow retry), and a
-    delete racing a fold is carried forward, never dropped. Returns the
-    number of live vectors retracted."""
+    serialize deletes with appends/compacts. Returns the number of live
+    vectors retracted."""
     if ann_index_meta(spark, path) is None:
         raise ValueError(f"ann_index_delete: no index at {path}")
     _ann_recover(path)
-    # normalize ONCE (ADVICE r10): a one-shot iterable consumed twice
-    # would write an empty tombstone frame on the second pass
-    if not isinstance(ids, DataFrame):
-        ids = list(ids)
-    markers = _marker_rows(spark, path)
-    codes = spark.read.parquet(path)
-    tomb = _tombstones(spark, path)
-    hit, _, gone = _retraction_forms(codes, ids, "ann_index_delete")
-    # rows the new tombstone will kill: requested ids (pushed filter /
-    # semi join), marked batches only (unmarked crash rows have no seq
-    # — unreachable by tombstones, so they must not count as removed;
-    # compaction's rewrite is where they would be swept), minus rows
-    # already dead under existing tombstones. ONE request-filtered scan.
-    removed = _live_rows(hit, tomb, markers).count()
-    if removed == 0:
-        # ids unknown, already tombstoned, or stranded in unmarked
-        # crash-append rows (those are swept physically by compact)
-        return 0
-    n_total = _index_size_from_markers(markers)
-    dead_prev = _ann_dead_total(spark, path)
-    if n_total - dead_prev - removed <= 0:
-        raise ValueError(
-            f"ann_index_delete: deleting these ids would EMPTY the index "
-            f"at {path} — remove the path instead (live index untouched)"
-        )
-    # tombstones first, tally second: a kill between the two appends
-    # leaves the retraction APPLIED but the live-size statistic
-    # overstated until compact recomputes it (conservative: auto-prune
-    # flips early, never late; a re-run of the same delete returns 0)
-    del_seq = _append_tombstones(spark, ids, gone, codes, markers, path)
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_append
-
-    # driver-side one-row append (r15): the tally increment is ~60
-    # bytes — a Spark write job here was pure scheduling tax on the
-    # latency-sensitive delete endpoint
-    sidecar_json_append(
+    return _tombstone_delete(
         spark,
-        f"{path}/{_DEAD_DIR}",
-        {"del_seq": del_seq, "n_dead": removed},
-        name_hint="dead",
+        ids,
+        path,
+        who="ann_index_delete",
+        n_total_fn=_index_size_from_markers,
+        compact_fn=lambda: _local_path(path) and ann_index_compact(spark, path),
+        compact_threshold=compact_threshold,
     )
-    will_compact = bool(
-        n_total and (dead_prev + removed) / n_total > compact_threshold
-    ) and _local_path(path)
-    if not will_compact:
-        # fold the tally once the per-delete files pile up (VERDICT r12
-        # #6): every ``shortlist="auto"`` search lists + collects this
-        # dir, so thousands of small deletes between compactions would
-        # tax serving with a file-listing job. FS-agnostic since r14
-        # (VERDICT r13 #2): the fold APPENDS one superseding row instead
-        # of swapping the dir. Skipped when compaction is about to drop
-        # the whole tally anyway (review r14 — the fold's read job +
-        # writes would be paid and immediately discarded, on the
-        # documented latency-sensitive endpoint). A REMOTE index past
-        # the compact threshold also lands here (will_compact is
-        # local-gated): the tally still folds, but the physical fold-in
-        # needs a local mount (data-tier dir swaps) — run
-        # ann_index_compact there, or ann_index_rebuild.
-        dead_dir = f"{path}/{_DEAD_DIR}"
-        names = _dead_tally_files(spark, dead_dir)
-        if len(names) > _DEAD_FOLD_FILES:
-            _fold_dead_tally(spark, dead_dir, del_seq, names)
-    else:
-        ann_index_compact(spark, path)
-    return removed
-
-
-def _fold_dead_tally(
-    spark: SparkSession, dead_dir: str, del_seq: int, names: list[str]
-) -> None:
-    """Fold the per-delete tally files in ``names`` into ONE superseding
-    row — append-only, so it runs on ANY Hadoop filesystem (VERDICT r13
-    #2: the r13 dir-swap form was local-gated, and S3/HDFS indexes
-    re-accrued one file per delete on exactly the FS where LIST costs
-    most; renames are also non-atomic on object stores, which this
-    design never needs).
-
-    Protocol: read EXACTLY ``names`` (the caller's listing), resolve
-    their total under the same supersede rule the reader uses, append
-    one fold row ``{del_seq, n_dead: total, covers: names}``, then
-    delete the covered files as cleanup. Correctness never depends on
-    the cleanup: a reader that lists before the deletes resolves the
-    covered files away; a kill mid-cleanup leaves covered litter the
-    next fold re-covers. A CONCURRENT delete's increment appended after
-    the listing is not in ``covers`` and survives uncovered — carried
-    forward, not silently discarded (ADVICE r13; the r13 swap dropped
-    it). Concurrent FOLDS remain excluded: ``ann_index_delete`` is
-    single-writer per index (same contract as append/compact — del_seq
-    itself is derived from shared marker state)."""
-    # driver-side FS read/write (r15, util.sidecar_json_rows/_append):
-    # the fold touches ≤ _DEAD_FOLD_FILES tiny files — reading EXACTLY
-    # the caller's listing and appending one row needs no Spark jobs
-    import json as _json
-
-    from pyspark.sql import Row
-
-    from etl_apache_kafka_python_doker_aws_spark.util import sidecar_json_append
-
-    fs, jpath_cls = _tally_fs(spark, dead_dir)
-    ioutils = spark.sparkContext._jvm.org.apache.commons.io.IOUtils
-    rows = []
-    for n in names:
-        jp = jpath_cls(f"{dead_dir}/{n}")
-        stream = fs.open(jp)
-        try:
-            text = ioutils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        for line in text.splitlines():
-            if line.strip():
-                d = _json.loads(line)
-                d["_f"] = jp.toString()
-                rows.append(Row(**d))
-    total = _resolve_tally_rows(rows)
-    sidecar_json_append(
-        spark,
-        dead_dir,
-        {"del_seq": del_seq, "n_dead": total, "covers": names},
-        name_hint="fold",
-    )
-    for n in names:
-        fs.delete(jpath_cls(f"{dead_dir}/{n}"), False)
 
 
 def _rewrite_markers(spark: SparkSession, path: str, markers: list) -> bool:
@@ -1622,9 +1310,9 @@ def _rewrite_markers(spark: SparkSession, path: str, markers: list) -> bool:
     No-op — marker bytes untouched, the mtime-pinned crash test — when
     every marker already matches; that check is what lets compact's
     zero-dead early exit heal a compact killed between its dir swaps
-    and this rewrite (review r12 #1: dropping the sidecars there
+    and this rewrite (review r12 #1: dropping the tombstones there
     without re-verifying the markers stranded overstated ``n_rows``
-    forever, with no tally left to subtract)."""
+    forever)."""
     import os
     import shutil
 
@@ -1661,36 +1349,32 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
     rows (``index_store._fold_partition_dirs`` — every untouched
     directory keeps its files byte-identical), recompute the
     batch markers' ``n_rows`` from the physical survivors (atomic
-    staging swap on the marker dir), then drop the dead tally and the
-    tombstone sidecar LAST. Dead = seq-scoped tombstoned rows PLUS
-    unmarked crash-append orphans (review r12: an orphan has no marker
-    seq, so no tombstone can ever name it — compact is its only
-    removal path, same as ``minhash_table_compact``'s unmarked sweep).
+    staging swap on the marker dir), then drop the tombstone sidecar
+    LAST. Dead = seq-scoped tombstoned rows PLUS unmarked crash-append
+    orphans (review r12: an orphan has no marker seq, so no tombstone
+    can ever name it — compact is its only removal path, same as
+    ``minhash_table_compact``'s unmarked sweep).
 
     Crash-window table (every state a kill can leave, and its heal —
     the r11 review discipline):
 
-    * mid-dir-swap — healed by ``_ann_recover`` at every write entry
-      point; reads meanwhile stay correct (tombstones still pending
-      anti-join rows that are already physically gone: a no-op);
+    * mid-dir-swap — a ``<dir>.old`` twin; healed by ``_ann_recover``
+      at every entry point, search included;
     * after some dir swaps, before the marker rewrite — markers
-      overstate, tally still subtracts: live-size statistic stays
-      correct; re-run compact to finish. The re-run recomputes dead
-      rows from the CURRENT physical data, so already-swapped dirs are
-      not re-rewritten — and if EVERY dir was already swapped, the
+      overstate (the auto shortlist errs towards recall); re-run
+      compact to finish. The re-run recomputes dead rows from the
+      CURRENT physical data, so already-swapped dirs are not
+      re-rewritten — and if EVERY dir was already swapped, the
       zero-dead early exit still re-verifies the markers against the
       physical survivors and rewrites them when stale (review r12 #1)
-      before dropping the sidecars;
+      before dropping the tombstones;
     * mid-marker-swap — marker dir missing, complete copy in
       ``.staging``/``.old``: ``_ann_recover`` restores it (append heals
       before reading the batch list, so redelivery stays rejected);
-    * after markers, before the tally drop — live size UNDERstated
-      (auto keeps the streaming join past the crossover — a plan-choice
-      penalty only); the next compact finds zero dead rows, re-verifies
-      markers (already exact — bytes untouched) and drops both sidecars;
-    * after the tally drop, before the tombstone drop — accounting
-      exact (markers already post-compact), tombstones anti-join
-      nothing; the next compact drops them.
+    * after the marker rewrite, before the tombstone drop — accounting
+      exact, tombstones anti-join nothing; the next compact finds zero
+      dead rows, re-verifies markers (already exact — bytes untouched)
+      and drops them.
 
     Single-writer assumption (the table-tier rule): run one maintenance
     writer at a time — a concurrent compact/delete on the same index
@@ -1706,11 +1390,6 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
         raise ValueError(f"ann_index_compact: no index at {path}")
     _ann_recover(path)
 
-    def drop_sidecars() -> None:
-        # tally before tombstones (see the crash table)
-        for d in (_DEAD_DIR, _TOMB_DIR):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
     tomb = _tombstones(spark, path)
     markers = _marker_rows(spark, path)
     n_dead = _fold_partition_dirs(
@@ -1722,14 +1401,12 @@ def ann_index_compact(spark: SparkSession, path: str) -> int:
         spark.read.parquet(vec_dir), vec_dir, "_vbucket", tomb, markers,
         "ann_index_compact", sort_ids=True,
     )
-    if n_dead or n_dead_vecs or tomb is not None or os.path.isdir(
-        os.path.join(path, _DEAD_DIR)
-    ):
+    if n_dead or n_dead_vecs or tomb is not None:
         # also on a zero-dead re-run (a kill between the dir swaps and
-        # the sidecar drops): re-verify the markers against the physical
-        # survivors (review r12 #1: a kill BEFORE the marker rewrite
-        # lands here too, and dropping the tally without healing the
-        # markers would strand the overstatement forever)
+        # the tombstone drop): re-verify the markers against the
+        # physical survivors (review r12 #1: a kill BEFORE the marker
+        # rewrite lands here too, and dropping the tombstones without
+        # healing the markers would strand the overstatement forever)
         _rewrite_markers(spark, path, markers)
-    drop_sidecars()  # LAST (see the crash table)
+    shutil.rmtree(os.path.join(path, _TOMB_DIR), ignore_errors=True)  # LAST
     return n_dead

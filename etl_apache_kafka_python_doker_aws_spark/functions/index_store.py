@@ -6,8 +6,8 @@ reference's keyed, idempotent insert (see the ``plans/merge.py``
 docstring): each append writes its data, writes a commit marker last,
 and the next call heals a torn swap. Every tier retracts the same way:
 a delete appends tombstones, a compaction folds them in. The tiers keep
-only what is specific to them (encoding, signing, search and pairs; the
-ANN dead tally), so the rules below are proved once, here.
+only what is specific to them (encoding, signing, search and pairs),
+so the rules below are proved once, here.
 
 Locations. A path tier keeps its sidecars as ``_``-prefixed subdirs of
 the index root, which Spark's listing of the data ignores:
@@ -254,7 +254,7 @@ def _append_marker(
     """Commit a batch: append its marker row, LAST. A path tier appends
     driver-side (``util.sidecar_json_append``, no Spark job)."""
     if table is None:
-        sidecar_json_append(spark, f"{path}/{_BATCH_DIR}", row, name_hint="marker")
+        sidecar_json_append(spark, f"{path}/{_BATCH_DIR}", row)
     else:
         tiny_rows_df(spark, [row]).write.mode("append").saveAsTable(
             f"{table}_batches"
@@ -475,13 +475,13 @@ def _tombstone_delete(
     compact_fn,
     compact_threshold: float,
 ) -> int:
-    """Tombstone retraction for the band path, band table and exact
-    table (the ANN path keeps its own, for its dead tally). ONE index
-    scan computes both statistics (live rows + requested live rows,
-    marked batches only: unmarked orphans must neither count as removed
-    nor trip the EMPTY guard); then the EMPTY guard, the tombstone
-    append and the threshold'd auto-compaction. ``n_total_fn(markers)``
-    — the physical size of the marked batches — is only invoked when
+    """Tombstone retraction for all four forms: the band path, band
+    table, ANN path and exact table. ONE index scan computes both
+    statistics (live rows + requested live rows, marked batches only:
+    unmarked orphans must neither count as removed nor trip the EMPTY
+    guard); then the EMPTY guard, the tombstone append and the
+    threshold'd auto-compaction. ``n_total_fn(markers)`` — the
+    physical size of the marked batches — is only invoked when
     auto-compaction is possible (``compact_threshold`` ≤ 1).
     ``drop_hint`` names a table tier's drop function for the EMPTY
     refusal. Returns the number of live rows retracted."""

@@ -1187,7 +1187,6 @@ def ann_grouped_topk(
     prune: bool | str = "auto",
     retarget_probes: bool = True,
     doc_col: str = "doc_id",
-    n_queries: int | None = None,
 ) -> DataFrame:
     """Index-backed MULTI-VECTOR (grouped) retrieval — the serving form
     of the late-interaction-lite shape (VERDICT r13 #1): documents are
@@ -1221,9 +1220,8 @@ def ann_grouped_topk(
       ≤ |queries|·chunk_k chunk hits to documents via ``doc_map``
       (first two columns = (chunk_id, doc_id)) — the hits side rides a
       SIZE-GATED broadcast hint (the r11 rule; one cheap count of the
-      query batch sizes the gate, or pass ``n_queries`` to skip that
-      job — ADVICE r14), so the corpus-sized ``doc_map`` scan never
-      shuffles; relying on AQE's runtime SMJ→BHJ conversion instead
+      query batch sizes the gate), so the corpus-sized ``doc_map`` scan
+      never shuffles; relying on AQE's runtime SMJ→BHJ conversion instead
       would still SHUFFLE-WRITE the whole map first — AQE decides from
       materialized shuffle stats, so the corpus-sized pass to local
       disk has already happened by the time it converts (measured in
@@ -1321,11 +1319,10 @@ def ann_grouped_topk(
             where=where,
             retarget_probes=retarget_probes,
         )
-        # the gate needs the query-batch size: caller-supplied, or one
-        # cheap count (the _batch_stats pattern — under a
-        # nondeterministic queries lineage the count is gate-only,
-        # recall-safe; ADVICE r14 documents the extra job)
-        n_q = n_queries if n_queries is not None else queries.select(id_col).count()
+        # the gate needs the query-batch size: one cheap count (the
+        # _batch_stats pattern — under a nondeterministic queries
+        # lineage the count is gate-only, recall-safe)
+        n_q = queries.select(id_col).count()
         pooled = (
             doc_map.select(
                 F.col(chunk_col).alias("neighbor_id"),

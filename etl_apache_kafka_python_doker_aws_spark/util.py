@@ -75,9 +75,9 @@ def sidecar_read(spark, path: str, fmt: str) -> DataFrame | None:
     return spark.read.format(fmt).load(path)
 
 
-def sidecar_json_rows(spark, path: str, with_file: bool = False) -> list | None:
+def sidecar_json_rows(spark, path: str) -> list | None:
     """Driver-side read of a METADATA-SIZED JSON-lines sidecar dir
-    (batch markers, dead tallies, index meta) through the Hadoop FS API
+    (batch markers, index meta) through the Hadoop FS API
     — r15 optimization (guide §1/§5: these dirs hold one tiny row per
     batch/delete, but ``spark.read.json(...)+collect()`` pays TWO Spark
     jobs per read — schema inference + the collect — a fixed
@@ -95,12 +95,9 @@ def sidecar_json_rows(spark, path: str, with_file: bool = False) -> list | None:
     JSON line, carrying exactly the fields that line holds. Each index
     tier has one sidecar layout, stamped with ``layout_version`` in its
     meta row; the tier's meta reader checks the stamp
-    (``index_store._check_layout``), so marker and tally readers can
-    rely on the current fields being present.
-    ``with_file=True`` adds a ``_f`` field holding the source file URI
-    (the ``input_file_name()`` replacement the dead-tally resolver
-    keys on). Only for BOUNDED sidecars — data-sized frames keep the
-    distributed read."""
+    (``index_store._check_layout``), so marker readers can rely on the
+    current fields being present. Only for BOUNDED sidecars —
+    data-sized frames keep the distributed read."""
     import json as _json
 
     from pyspark.sql import Row
@@ -128,32 +125,28 @@ def sidecar_json_rows(spark, path: str, with_file: bool = False) -> list | None:
         for line in text.splitlines():
             if not line.strip():
                 continue
-            d = _json.loads(line)
-            if with_file:
-                d["_f"] = jp.toString()
-            rows.append(Row(**d))
+            rows.append(Row(**_json.loads(line)))
     return rows
 
 
-def sidecar_json_append(spark, path: str, row: dict, name_hint: str = "row") -> None:
+def sidecar_json_append(spark, path: str, row: dict) -> None:
     """Append ONE metadata row to a JSON-lines sidecar dir through the
     Hadoop FS API — the write-side twin of ``sidecar_json_rows`` (r15):
     ``tiny_rows_df(...).coalesce(1).write.mode("append").json(dir)``
     schedules a full Spark job (task launch, commit protocol, _SUCCESS
     marker) to emit one ~60-byte line; measured 0.15-0.3 s per call
-    locally, paid on EVERY index append (batch marker) and EVERY delete
-    (dead-tally increment). The driver write is two py4j calls.
+    locally, paid on EVERY index append (batch marker). The driver
+    write is two py4j calls.
 
     Commit discipline: the line is written to a DOT-prefixed temp file
     (invisible to every reader — Spark and ``sidecar_json_rows`` both
     skip ``.``/``_`` names) and renamed into place after close, so a
     kill mid-write leaves only dot-litter, never a torn visible row —
     the same visible-only-when-complete property the Spark committer
-    gave. The rename is a SINGLE-FILE rename (the object-store caveat
-    in the r14 fold design was about directory swaps; one tiny-file
-    rename is the standard Hadoop commit step and what the Spark
-    committer itself did here). File name carries ``name_hint`` + a
-    uuid so concurrent writers never collide.
+    gave. The rename is a SINGLE-FILE rename, not a directory swap: one
+    tiny-file rename is the standard Hadoop commit step and what the
+    Spark committer itself did here. File name carries a uuid so
+    concurrent writers never collide.
 
     A ``_SUCCESS`` marker is ensured BEFORE the row commits: the swap
     recovery machinery (``plans/merge._is_complete``) classifies a dir
@@ -169,7 +162,7 @@ def sidecar_json_append(spark, path: str, row: dict, name_hint: str = "row") -> 
     jpath_cls = sc._jvm.org.apache.hadoop.fs.Path
     dirp = jpath_cls(path)
     fs = dirp.getFileSystem(sc._jsc.hadoopConfiguration())
-    fname = f"{name_hint}-{_uuid.uuid4().hex}.json"
+    fname = f"marker-{_uuid.uuid4().hex}.json"
     tmp = jpath_cls(f"{path}/.{fname}.tmp")
     final = jpath_cls(f"{path}/{fname}")
     success = jpath_cls(f"{path}/_SUCCESS")

@@ -549,7 +549,6 @@ def test_ann_delete_is_request_proportional_compact_localized(spark, tmp_path):
     # request-proportional: the delete wrote ONLY the sidecars
     assert post == pre, "a tombstone delete rewrote data-tier files"
     assert os.path.isdir(os.path.join(path, "_graft_tombstones"))
-    assert os.path.isdir(os.path.join(path, "_graft_dead"))
     # but the victim is gone from search
     got = ann_index_search(corpus.filter("vec_id = 6"), path, k=10,
                            n_probe=4, shortlist=30).collect()
@@ -579,7 +578,6 @@ def test_ann_delete_is_request_proportional_compact_localized(spark, tmp_path):
         assert old_files and all(folded.get(r) != pre[r] for r in old_files), o
     # sidecars dropped, physical rows gone, markers post-delete accurate
     assert not os.path.exists(os.path.join(path, "_graft_tombstones"))
-    assert not os.path.exists(os.path.join(path, "_graft_dead"))
     assert spark.read.parquet(path).filter(F.col("_id") == victim).count() == 0
     marks = {r.batch_id: int(r.n_rows)
              for r in spark.read.json(f"{path}/_graft_batches").collect()}
